@@ -262,7 +262,8 @@ def decode_batch(t0: np.ndarray, v0: np.ndarray, n: np.ndarray,
     the cursor never moves past real bits."""
     rows = len(payloads)
     t = int(n[0])
-    assert (np.asarray(n) == t).all(), "decode_batch requires equal n"
+    if not (np.asarray(n) == t).all():
+        raise ValueError("decode_batch requires equal n")
     ts2d = np.empty((rows, t), dtype=np.int64)
     vals2d = np.empty((rows, t), dtype=np.int64)
     ts2d[:, 0] = t0

@@ -46,6 +46,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import scoped_conf
 from .lineage import LINEAGE_COLS, partition_metrics
 
 
@@ -161,20 +162,13 @@ def compact_partitions(spark: SparkSession, path: str,
            .withColumn("_f", F.pmod(F.xxhash64(*data_cols),
                                     F.col("_n_target"))))
     total = sum(d["n_target"] for d in plan)
-    # scope the dynamic overwrite to THIS write: restore the session's
-    # prior setting so later mode('overwrite') partitioned writes keep
-    # their semantics
-    prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    # scope the dynamic overwrite to THIS write: later mode('overwrite')
+    # partitioned writes keep the session's own semantics
+    with scoped_conf(spark, "spark.sql.sources.partitionOverwriteMode",
+                     "dynamic"):
         (fan.repartition(total, *partition_cols, F.col("_f"))
          .drop("partition_key", "_n_target", "_f")
          .write.mode("overwrite").partitionBy(*partition_cols).parquet(path))
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
 
     if lineage_path is not None and stage is not None:
         rows = [(run_id, f"compact:{stage}", d["partition_key"],

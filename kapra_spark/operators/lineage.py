@@ -5,10 +5,14 @@ The reference loses everything on a kill (single process, no
 persistence until the final CSV). The engine writes each stage
 partition-by-partition with dynamic partition overwrite and records
 (run scope, stage, partition_key, row_count, checksum) in a lineage
-table. Resume = left anti-join of the input's partition keys against
+table. Resume = filter the input's partition keys against the
 committed lineage: only missing partitions are recomputed, and
 re-writing a partition is idempotent (overwrite), so a kill between
 data write and lineage append cannot double-count.
+
+Several stages share one call of :func:`write_stages_with_lineage`, so
+a plan with N outputs pays one lineage read, one metrics job and one
+lineage append, not N of each.
 
 Checksum is an order-independent BIT_XOR of xxhash64 over every column,
 so it is partition-layout and task-retry independent.
@@ -16,13 +20,18 @@ so it is partition-layout and task-retry independent.
 
 from __future__ import annotations
 
-import time
+from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import cached, scoped_conf
+
 LINEAGE_COLS = ["run_id", "stage", "partition_key", "row_count",
                 "checksum", "committed_at"]
+LINEAGE_SCHEMA = ("run_id string, stage string, partition_key string, "
+                  "row_count bigint, checksum bigint, committed_at timestamp")
 
 
 def row_checksum(df: DataFrame) -> F.Column:
@@ -32,22 +41,136 @@ def row_checksum(df: DataFrame) -> F.Column:
     return F.xxhash64(*[F.col(c).cast("string") for c in sorted(df.columns)])
 
 
+def _partition_key(partition_cols: list[str]) -> F.Column:
+    return F.concat_ws("|", *[F.col(c).cast("string") for c in partition_cols])
+
+
+def _keyed_digests(df: DataFrame, partition_cols: list[str]) -> DataFrame:
+    """(partition_key, _digest) per row."""
+    return df.select(_partition_key(partition_cols).alias("partition_key"),
+                     row_checksum(df).alias("_digest"))
+
+
+def _aggregate_digests(digests: DataFrame, keys: list[str]) -> DataFrame:
+    return (digests.groupBy(*keys)
+            .agg(F.count("*").alias("row_count"),
+                 F.bit_xor("_digest").alias("checksum")))
+
+
 def partition_metrics(df: DataFrame, partition_cols: list[str]) -> DataFrame:
     """(partition_key, row_count, checksum) per partition."""
-    key = F.concat_ws("|", *[F.col(c).cast("string") for c in partition_cols])
-    return (df.groupBy(key.alias("partition_key"))
-            .agg(F.count("*").alias("row_count"),
-                 F.bit_xor(row_checksum(df)).alias("checksum")))
+    return _aggregate_digests(_keyed_digests(df, partition_cols),
+                              ["partition_key"])
 
 
 def committed_partitions(spark: SparkSession, lineage_path: str,
-                         stage: str) -> DataFrame | None:
-    try:
-        lin = spark.read.parquet(lineage_path)
-    except Exception:
-        return None
-    return (lin.filter(F.col("stage") == stage)
-            .select("partition_key").distinct())
+                         stages: list[str]) -> dict[str, set[str]]:
+    """Committed partition keys per stage, from ONE read of the lineage
+    table. Only a missing lineage path means a fresh run; any other read
+    error (a corrupt or foreign file) raises instead of silently turning
+    into a full recompute and a second lineage append. The schema is
+    given, so the read runs no footer-inference job."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(lineage_path)
+    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    done: dict[str, set[str]] = {s: set() for s in stages}
+    if not fs.exists(hpath):
+        return done
+    # metadata-sized (one row per committed partition per commit):
+    # collect the raw rows and de-duplicate here, no shuffle
+    for r in (spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
+              .filter(F.col("stage").isin(stages))
+              .select("stage", "partition_key").collect()):
+        done[r["stage"]].add(r["partition_key"])
+    return done
+
+
+@dataclass(frozen=True)
+class Stage:
+    """One output of a multi-stage write: ``df`` lands at ``path``
+    partitioned by ``partition_cols``; ``name`` is its lineage stage."""
+    name: str
+    df: DataFrame
+    path: str
+    partition_cols: list[str]
+    sort_within: list[str] | None = None
+
+
+def write_stages_with_lineage(
+    spark: SparkSession,
+    stages: list[Stage],
+    lineage_path: str,
+    run_id: str,
+    resume: bool = True,
+) -> dict[str, dict]:
+    """Write every stage with exactly-once semantics and a fixed job
+    count, whatever the number of stages: one lineage read, one metrics
+    job over a stage-tagged union, one data write per stage that has
+    rows, then one lineage append. Returns, per stage name,
+    {written_partitions, skipped_partitions}.
+
+    The stage frames are evaluated twice (metrics, then write): cache
+    whatever expensive plan they share before calling, and nothing on
+    top of it.
+
+    Exactly-once: a kill before the single lineage append leaves every
+    stage of the call uncommitted, so the resume recomputes all of
+    them; re-writing a partition is a dynamic overwrite, so that is
+    idempotent and cannot double-count."""
+    done = (committed_partitions(spark, lineage_path,
+                                 [s.name for s in stages])
+            if resume else {s.name: set() for s in stages})
+
+    works = []
+    for st in stages:
+        work = st.df
+        if done[st.name]:
+            # NOTE: `skipped` counts committed partitions SEEN for the
+            # stage, not the intersection with this input's keys — an
+            # incremental resume covering a subset of history reports
+            # the full committed count. Exact intersection would need a
+            # distinct over the input (the full-input scan this path
+            # exists to avoid). The key set is metadata-sized, so it
+            # filters as a literal set: no join, no shuffle.
+            work = work.filter(~_partition_key(st.partition_cols)
+                               .isin(sorted(done[st.name])))
+        works.append(work)
+
+    # metrics BEFORE the data writes: an all-committed (or all-expired)
+    # stage then ends here without creating an empty, schema-less data
+    # directory
+    tagged = [_keyed_digests(w, st.partition_cols)
+              .withColumn("stage", F.lit(st.name))
+              for st, w in zip(stages, works)]
+    rows = (_aggregate_digests(reduce(DataFrame.unionByName, tagged),
+                               ["stage", "partition_key"])
+            .withColumn("run_id", F.lit(run_id))
+            .withColumn("committed_at", F.current_timestamp())
+            .select(*LINEAGE_COLS)
+            .collect())
+
+    written = {st.name: 0 for st in stages}
+    for r in rows:
+        written[r["stage"]] += 1
+    with scoped_conf(spark, "spark.sql.sources.partitionOverwriteMode",
+                     "dynamic"):
+        for st, work in zip(stages, works):
+            if not written[st.name]:
+                continue
+            if st.sort_within:
+                # partition cols lead so the file writer's required
+                # clustering is already satisfied and it inserts no
+                # second (unstable) sort
+                work = work.sortWithinPartitions(*st.partition_cols,
+                                                 *st.sort_within)
+            (work.write.mode("overwrite")
+             .partitionBy(*st.partition_cols).parquet(st.path))
+    if rows:
+        (spark.createDataFrame(rows, LINEAGE_SCHEMA)
+         .write.mode("append").parquet(lineage_path))
+    return {st.name: {"written_partitions": written[st.name],
+                      "skipped_partitions": len(done[st.name])}
+            for st in stages}
 
 
 def write_with_lineage(
@@ -61,7 +184,8 @@ def write_with_lineage(
     sort_within: list[str] | None = None,
 ) -> dict:
     """Write ``df`` partitioned by ``partition_cols`` with exactly-once
-    semantics. Returns {written_partitions, skipped_partitions}.
+    semantics: a one-stage :func:`write_stages_with_lineage`. Returns
+    {written_partitions, skipped_partitions}.
 
     ``sort_within`` sorts rows WITHIN each task before writing (no
     shuffle — ``sortWithinPartitions``), which makes parquet row-group
@@ -69,61 +193,13 @@ def write_with_lineage(
     lookup (``doc_id = X``) then skips whole row groups at scan time
     instead of reading the partition. The scan-locality knob for the
     blocks store — the parquet equivalent of an Iceberg sort order."""
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    key = F.concat_ws("|", *[F.col(c).cast("string") for c in partition_cols])
-    df = df.withColumn("_pk", key)
-
-    skipped = 0
-    if resume:
-        done = committed_partitions(spark, lineage_path, stage)
-        if done is not None:
-            # the committed set is metadata-sized (one key per written
-            # partition), so collect it once and derive `skipped` from
-            # lineage alone: on a resume the committed keys are a
-            # subset of the input's keys by construction. This avoids
-            # the two full-input distinct-count shuffles the previous
-            # accounting cost (at 100 TB: two shuffles for a log line),
-            # and broadcasting the key set keeps the anti-join
-            # shuffle-free on the data side.
-            # NOTE: `skipped` counts committed partitions SEEN for the
-            # stage, not the intersection with this input's keys — an
-            # incremental resume covering a subset of history reports
-            # the full committed count. Exact intersection would need a
-            # distinct over the input (the full-input scan this path
-            # exists to avoid), so the metric is documented as
-            # "committed partitions seen" instead.
-            done_keys = done.collect()
-            skipped = len(done_keys)
-            if done_keys:
-                done_df = F.broadcast(
-                    spark.createDataFrame(done_keys)
-                    .withColumnRenamed("partition_key", "_pk"))
-                df = df.join(done_df, "_pk", "left_anti")
-
-    work = df.drop("_pk")
-    if sort_within:
-        # partition cols lead so the file writer's required clustering
-        # is already satisfied and it inserts no second (unstable) sort
-        work = work.sortWithinPartitions(*partition_cols, *sort_within)
-    work = work.cache()
-    # materialize metrics BEFORE the lineage append (the plan reads the
-    # lineage table through the resume anti-join, so a lazy
-    # re-evaluation after the append would see its own commit) and
-    # BEFORE the data write: an all-committed resume then ends here
-    # without creating an empty (schema-less) data directory
-    rows = (partition_metrics(work, partition_cols)
-            .withColumn("run_id", F.lit(run_id))
-            .withColumn("stage", F.lit(stage))
-            .withColumn("committed_at", F.current_timestamp())
-            .select(*LINEAGE_COLS)
-            .collect())
-    if rows:
-        work.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-        spark.createDataFrame(rows).write.mode("append").parquet(lineage_path)
-    work.unpersist()
-    return {"written_partitions": len(rows), "skipped_partitions": skipped}
+    # the metrics job and the data write both evaluate ``df``: caching
+    # it keeps its producer (typically a Python kernel) to one pass
+    with cached(df) as df:
+        return write_stages_with_lineage(
+            df.sparkSession,
+            [Stage(stage, df, path, partition_cols, sort_within)],
+            lineage_path, run_id, resume)[stage]
 
 
 def verify_against_lineage(spark: SparkSession, path: str,

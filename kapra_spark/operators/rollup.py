@@ -305,7 +305,7 @@ def cascade(tokens_df: DataFrame, tiers: tuple[str, ...] = ("1m", "1h", "1d"),
 # tokens fast path: zero-shuffle mapInPandas cascade
 # ---------------------------------------------------------------------------
 
-_FAST_SCHEMA = T.StructType([
+CASCADE_SCHEMA = T.StructType([
     T.StructField("tier", T.StringType(), False),
     T.StructField("source", T.StringType(), False),
     T.StructField("doc_id", T.StringType(), False),
@@ -478,7 +478,7 @@ def cascade_fast(tokens_df: DataFrame,
                         pa.array(nfil),
                     ], schema=arrow_schema)
 
-    return tokens_df.mapInArrow(run, _FAST_SCHEMA)
+    return tokens_df.mapInArrow(run, CASCADE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

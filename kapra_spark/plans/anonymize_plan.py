@@ -17,6 +17,12 @@ from pyspark.sql import functions as F
 
 from ..operators.grouping import kp_anonymize
 from ..operators.metrics_ops import global_pattern_loss, global_value_loss
+from ..session import cached
+
+
+def _losses(tokens_df: DataFrame, anon: DataFrame) -> tuple:
+    return (global_value_loss(anon).collect()[0],
+            global_pattern_loss(tokens_df, anon).collect()[0])
 
 
 def run_kp_anonymity(
@@ -35,13 +41,13 @@ def run_kp_anonymity(
     anon = kp_anonymize(tokens_df, k=k, p=p, paa=paa, l=l, algorithm=algorithm)
     if output_path:
         anon.write.mode("overwrite").parquet(output_path)
-        anon = spark.read.parquet(output_path)
+        vl, pl = _losses(tokens_df, spark.read.parquet(output_path))
     else:
-        anon = anon.cache()
-        anon.count()
-
-    vl = global_value_loss(anon).collect()[0]
-    pl = global_pattern_loss(tokens_df, anon).collect()[0]
+        # cached for the two loss jobs only: a cache left behind would
+        # let a later call on the same input skip the anonymization
+        with cached(anon) as anon:
+            anon.count()
+            vl, pl = _losses(tokens_df, anon)
     eta = time.time() - t_start
 
     row = {

@@ -3,24 +3,26 @@ lineage-tracked writes — the engine's flagship plan (BASELINE.json
 north_rule).
 
     tokens (doc_id, tokens, n_tok, source)
-      ├─ 1m tier  -> Gorilla blocks  (compress.py, zero shuffle)
-      ├─ 1h tier  -> rows            (cascade_fast, zero shuffle)
-      └─ 1d tier  -> rows
-    each written partitioned by (source, day) through
-    lineage.write_with_lineage: a killed run resumes from committed
-    partitions, re-writes are idempotent, checksums certify equality.
+      └─ compress_and_cascade: ONE scan + ONE Python pass, cached
+           ├─ 1m tier  -> Gorilla blocks  (compress_tokens' columns)
+           ├─ 1h tier  -> rows            (cascade_fast's columns)
+           └─ 1d tier  -> rows
+    each written partitioned by (source, day) through ONE
+    lineage.write_stages_with_lineage call: a killed run resumes from
+    committed partitions, re-writes are idempotent, checksums certify
+    equality.
 
-Two execution modes:
+Two execution modes, both zero-shuffle and one kernel pass:
 
-- default: three independent linear scans of the columnar input (no
-  cache — at 100 TB you never want a 100 TB cache), one per output.
-- ``fused=True``: ONE scan + ONE Python pass via
-  ``compress_and_cascade`` writes everything as a single table
-  partitioned by (kind, source, day), where kind in
-  {blocks, 1h, 1d} — the partition dirs ARE the three tables
-  (read ``.../kind=1h/``). At 100 TB this trades two extra source
-  scans (~2x input bytes) for one staging write of ~15% of input
-  bytes — the cheaper side of that trade on any real storage.
+- default: the cached kernel output is projected into the three
+  tables ``blocks_1m``, ``tier_1h`` and ``tier_1d``. The call pays one
+  lineage read, one metrics job over all stages, one write per table
+  and one lineage append; the kernel runs once, not once per table.
+  The cache holds the kernel output (~15% of the input bytes for the
+  blocks plus the tier rows), never a per-table copy on top of it.
+- ``fused=True``: the same pass written as a single table partitioned
+  by (kind, source, day), where kind in {blocks, 1h, 1d} — the
+  partition dirs ARE the three tables (read ``.../kind=1h/``).
 """
 
 from __future__ import annotations
@@ -28,9 +30,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.compress import compress_and_cascade, compress_tokens
-from ..operators.lineage import write_with_lineage
-from ..operators.rollup import DEFAULT_RETENTION, apply_retention, cascade_fast
+from ..operators.compress import compress_and_cascade
+from ..operators.lineage import (Stage, write_stages_with_lineage,
+                                 write_with_lineage)
+from ..operators.rollup import CASCADE_SCHEMA, DEFAULT_RETENTION, apply_retention
+from ..session import cached
 
 
 def run_rollup_pipeline(
@@ -45,7 +49,6 @@ def run_rollup_pipeline(
 ) -> dict:
     """Returns per-stage write stats. ``now_bucket_seconds`` pins the
     retention horizon (explicit for determinism/resume)."""
-    stats = {}
     lineage_path = f"{base_path}/_lineage"
 
     if fused:
@@ -73,25 +76,30 @@ def run_rollup_pipeline(
                     keep_pred = keep_pred | (
                         is_tier & (F.col("bucket") >= F.lit(horizon)))
             union = union.filter(keep_pred)
-        stats["fused"] = write_with_lineage(
+        return {"fused": write_with_lineage(
             union, f"{base_path}/fused", ["kind", "source", "day"],
-            lineage_path, run_id, "fused", resume=resume)
-        return stats
+            lineage_path, run_id, "fused", resume=resume)}
 
-    blocks = (compress_tokens(tokens)
-              .withColumnRenamed("bucket_day", "day"))
-    stats["blocks_1m"] = write_with_lineage(
-        blocks, f"{base_path}/blocks_1m", ["source", "day"],
-        lineage_path, run_id, "blocks_1m", resume=resume)
-
-    tiers = cascade_fast(tokens, tiers=("1h", "1d"))
-    for tier in ("1h", "1d"):
-        t = (tiers.filter(F.col("tier") == tier).drop("tier")
-             .withColumn("day", F.to_date(F.timestamp_seconds(F.col("bucket")))))
-        if now_bucket_seconds is not None:
-            t = apply_retention(t, tier, now_bucket_seconds,
-                                retention or DEFAULT_RETENTION)
-        stats[f"tier_{tier}"] = write_with_lineage(
-            t, f"{base_path}/tier_{tier}", ["source", "day"],
-            lineage_path, run_id, f"tier_{tier}", resume=resume)
-    return stats
+    # the kernel output is the only cache: every stage frame below is a
+    # projection of it, evaluated by the writer's metrics job and again
+    # by its data write
+    with cached(compress_and_cascade(tokens, tiers=("1h", "1d"))) as kernel:
+        # exactly compress_tokens' columns, bucket_day renamed to day
+        blocks = (kernel.filter(F.col("kind") == "block")
+                  .select("doc_id", "source", F.lit("1m").alias("tier"),
+                          F.col("bucket_day").alias("day"),
+                          "t0", "v0", "n", "payload"))
+        stages = [Stage("blocks_1m", blocks, f"{base_path}/blocks_1m",
+                        ["source", "day"])]
+        for tier in ("1h", "1d"):
+            # exactly cascade_fast's columns minus tier, plus day
+            t = (kernel.filter(F.col("tier") == tier)
+                 .select(*[c for c in CASCADE_SCHEMA.names if c != "tier"])
+                 .withColumn("day", F.to_date(F.timestamp_seconds("bucket"))))
+            if now_bucket_seconds is not None:
+                t = apply_retention(t, tier, now_bucket_seconds,
+                                    retention or DEFAULT_RETENTION)
+            stages.append(Stage(f"tier_{tier}", t, f"{base_path}/tier_{tier}",
+                                ["source", "day"]))
+        return write_stages_with_lineage(spark, stages, lineage_path, run_id,
+                                         resume=resume)

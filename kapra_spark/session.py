@@ -12,8 +12,11 @@ total cores, and rely on AQE coalescing to shrink small stages).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from typing import Iterator
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -56,3 +59,34 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set a session conf for the ``with`` block only, then restore the
+    prior value (or unset it), so later statements keep the session's
+    own semantics."""
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
+
+
+@contextmanager
+def cached(df: DataFrame) -> Iterator[DataFrame]:
+    """Cache ``df`` for the ``with`` block and release it on exit. A
+    plan the caller already cached is used as is and left cached, so
+    the cache manager ends as it started."""
+    if df.storageLevel != StorageLevel.NONE:
+        yield df
+        return
+    df = df.cache()
+    try:
+        yield df
+    finally:
+        df.unpersist()

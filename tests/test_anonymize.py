@@ -220,3 +220,22 @@ def test_experiment_grid(spark, tokens, tmp_path):
     assert stored.count() == 2
     assert {"algorithm", "k", "p", "avg_pattern_loss",
             "avg_value_loss"} <= set(stored.columns)
+
+
+def test_run_kp_anonymity_releases_its_cache(spark, tokens):
+    """The plan caches the anonymized table for its two loss jobs and
+    releases it: Spark's cache manager ends as it started, so a second
+    call on the same input anonymizes again instead of reading a stale
+    cache, and reports the same losses."""
+    from kapra_spark.plans.anonymize_plan import run_kp_anonymity
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    a = run_kp_anonymity(spark, "kapra", K, P, PAA, L, tokens)
+    assert persisted() == before
+    b = run_kp_anonymity(spark, "kapra", K, P, PAA, L, tokens)
+    assert persisted() == before
+    assert {k: v for k, v in a.items() if k != "eta"} == \
+        {k: v for k, v in b.items() if k != "eta"}

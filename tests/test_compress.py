@@ -47,6 +47,14 @@ def test_single_and_batch_decoders_agree():
         sts, svals = G.decode_block(int(t0[i]), int(v0[i]), int(n[i]), p[i])
         assert np.array_equal(sts, bts[i]) and np.array_equal(svals, bvals[i])
 
+def test_decode_batch_rejects_ragged_n():
+    """Unequal point counts raise ValueError, a check that still runs
+    under ``python -O`` (an assert would be stripped)."""
+    ts = np.arange(10)[None, :].repeat(2, axis=0) * 60
+    t0, v0, n, p = G.encode_batch(ts, np.ones((2, 10), dtype=np.int64))
+    with pytest.raises(ValueError, match="equal n"):
+        G.decode_batch(t0, v0, np.array([10, 9]), p)
+
 
 @pytest.mark.parametrize("n_tok", [144, 1500])  # single-day and multi-day
 def test_spark_roundtrip_token_array_equality(spark, n_tok):

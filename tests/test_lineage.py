@@ -118,3 +118,45 @@ def test_sort_within_orders_files_for_rowgroup_pruning(spark, tier1h,
     # lineage still verifies (checksum is order-free)
     v = verify_against_lineage(spark, path, ["source", "day"], lin, "s")
     assert v.filter(~F.col("ok")).count() == 0
+
+
+def test_write_restores_partition_overwrite_mode(spark, tier1h, tmp_path):
+    """The writer's dynamic partition overwrite is scoped to its own
+    writes: the session's prior setting (set or unset) is restored."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(key, None)
+    try:
+        spark.conf.set(key, "static")
+        write_with_lineage(tier1h, str(tmp_path / "a"), ["source", "day"],
+                           str(tmp_path / "lin"), run_id="r", stage="s")
+        assert spark.conf.get(key) == "static"
+        spark.conf.unset(key)
+        write_with_lineage(tier1h, str(tmp_path / "b"), ["source", "day"],
+                           str(tmp_path / "lin"), run_id="r", stage="t")
+        assert spark.conf.get(key, None) is None
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
+
+
+def test_corrupt_lineage_fails_loudly(spark, tier1h, tmp_path):
+    """Only a missing lineage path means a fresh run. A lineage table
+    that exists but cannot be read raises, instead of silently
+    recomputing every partition and appending lineage again."""
+    import glob
+
+    path, lin = str(tmp_path / "data"), str(tmp_path / "lin")
+    write_with_lineage(tier1h, path, ["source", "day"], lin,
+                       run_id="r1", stage="tier1h")
+    files = glob.glob(f"{lin}/*.parquet")
+    assert files
+    for f in files:
+        with open(f, "wb") as fh:
+            fh.write(b"not a parquet file")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        write_with_lineage(tier1h, path, ["source", "day"], lin,
+                           run_id="r2", stage="tier1h")
+    # nothing was re-appended next to the corrupt files
+    assert sorted(glob.glob(f"{lin}/*.parquet")) == sorted(files)

@@ -1,16 +1,20 @@
 """Mini-driver: run each __spark_entry__ query AND its DuckDB oracle at
 a given sf, compare row count / sorted-column schema / order-insensitive
 values. Usage: python tools/check_oracle.py [sf_dir] [query ...]
+
+Unknown query names exit non-zero before any Spark work. The master is
+``get_spark``'s default, ``local[$SPARK_GRAFT_CPUS]``.
 """
 
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -32,13 +36,17 @@ def main():
     import __spark_entry__ as E
     from kapra_spark.session import get_spark
 
-    spark = get_spark("oracle_check", master="local[8]", shuffle_partitions=8)
+    qs = E.queries()
+    unknown = sorted(only - qs.keys())
+    if unknown:
+        sys.exit(f"unknown query name(s): {', '.join(unknown)}")
+
+    spark = get_spark("oracle_check", shuffle_partitions=8)
 
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 
-    qs = E.queries()
     oracles = E.oracle_sql()
     failures = []
     for name, fn in qs.items():
