@@ -18,7 +18,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..functions import gorilla
-from .rollup import EPOCH_SECONDS, rows_matrix
+from .rollup import (EPOCH_SECONDS, arrow_schema, const_str, series_batches,
+                     tier_columns)
 
 BLOCKS_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
@@ -31,17 +32,6 @@ BLOCKS_SCHEMA = T.StructType([
     T.StructField("payload", T.BinaryType(), True),
 ])
 
-_ARROW_BLOCKS = pa.schema([
-    ("doc_id", pa.string()),
-    ("source", pa.string()),
-    ("tier", pa.string()),
-    ("bucket_day", pa.date32()),
-    ("t0", pa.int64()),
-    ("v0", pa.int64()),
-    ("n", pa.int32()),
-    ("payload", pa.binary()),
-])
-
 TOKENS_ARROW = pa.schema([
     ("doc_id", pa.string()),
     ("tokens", pa.list_(pa.int32())),
@@ -49,73 +39,44 @@ TOKENS_ARROW = pa.schema([
     ("source", pa.string()),
 ])
 
-
-def _const_str(value: str, n: int) -> pa.Array:
-    """Constant string column of length n without building n Python
-    objects (dictionary-encode then cast)."""
-    return pa.DictionaryArray.from_arrays(
-        pa.array(np.zeros(n, dtype=np.int32)),
-        pa.array([value])).cast(pa.string())
+#: points per UTC-day block at 1-minute grain
+DAY_POINTS = 1440
 
 
-def _list_to_matrix(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """ListArray -> (flat values, offsets); caller reshapes when the
-    batch is rectangular."""
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
-    offsets = col.offsets.to_numpy()
-    flat = col.values.to_numpy(zero_copy_only=False)
-    return flat, offsets
+def block_columns(idx: np.ndarray, vals: np.ndarray):
+    """The Gorilla block encoder for one run of equal-length series:
+    widen to int64 (sign-extended XOR), then per UTC day yield
+    ``(take, columns)`` — the Arrow row indices into the input batch
+    and the ``bucket_day, t0, v0, n, payload`` columns of
+    :data:`BLOCKS_SCHEMA`."""
+    vals = vals.astype(np.int64, copy=False)
+    take = pa.array(idx, type=pa.int64())
+    nt = vals.shape[1]
+    for s in range(0, nt, DAY_POINTS):
+        e = min(s + DAY_POINTS, nt)
+        ts = EPOCH_SECONDS + np.arange(s, e, dtype=np.int64) * 60
+        t0, v0, n, payloads = gorilla.encode_batch_arrow(
+            np.broadcast_to(ts, (len(idx), e - s)), vals[:, s:e])
+        day = np.full(len(idx), (EPOCH_SECONDS + s * 60) // 86400, dtype=np.int32)
+        yield take, [pa.array(day, type=pa.date32()),
+                     pa.array(t0, type=pa.int64()),
+                     pa.array(v0, type=pa.int64()),
+                     pa.array(n.astype(np.int32), type=pa.int32()),
+                     payloads]
 
 
-def compress_tokens(tokens_df: DataFrame, tier: str = "1m") -> DataFrame:
+def compress_tokens(tokens_df: DataFrame) -> DataFrame:
     """tokens table -> Gorilla blocks, one per (doc_id, day). For the
     canonical 144-token (one day at 1-minute grain) series this is one
     block per series; longer series split on UTC-day boundaries."""
+    schema = arrow_schema(BLOCKS_SCHEMA)
 
     def fn(batches):
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            # by-name resolution, same discipline as decompress_tokens:
-            # partitioned read-back reorders columns
-            names = rb.schema.names
-            c_doc = rb.column(names.index("doc_id"))
-            c_src = rb.column(names.index("source"))
-            n_tok = rb.column(names.index("n_tok")).to_numpy()
-            flat, offsets = _list_to_matrix(rb.column(names.index("tokens")))
-            out_cols: dict[str, list] = {k: [] for k in
-                                         ("take", "bucket_day", "t0", "v0", "n", "payload")}
-            for nt in np.unique(n_tok):
-                idx = np.nonzero(n_tok == nt)[0]
-                vals = rows_matrix(flat, offsets, idx, int(nt))
-                day_pts = 1440
-                for s in range(0, int(nt), day_pts):
-                    e = min(s + day_pts, int(nt))
-                    ts = (EPOCH_SECONDS + (np.arange(s, e, dtype=np.int64) * 60))
-                    ts2d = np.broadcast_to(ts, (len(idx), e - s))
-                    t0a, v0a, na, payloads = gorilla.encode_batch_arrow(
-                        ts2d, vals[:, s:e])
-                    out_cols["take"].append(idx)
-                    out_cols["bucket_day"].append(
-                        np.full(len(idx), (EPOCH_SECONDS + s * 60) // 86400, dtype=np.int32))
-                    out_cols["t0"].append(t0a)
-                    out_cols["v0"].append(v0a)
-                    out_cols["n"].append(na.astype(np.int32))
-                    out_cols["payload"].append(payloads)
-            take = pa.array(np.concatenate(out_cols["take"]), type=pa.int64())
-            pay = (out_cols["payload"][0] if len(out_cols["payload"]) == 1
-                   else pa.concat_arrays(out_cols["payload"]))
-            yield pa.RecordBatch.from_arrays([
-                c_doc.take(take),
-                c_src.take(take),
-                _const_str("1m", len(take)),
-                pa.array(np.concatenate(out_cols["bucket_day"]), type=pa.date32()),
-                pa.array(np.concatenate(out_cols["t0"]), type=pa.int64()),
-                pa.array(np.concatenate(out_cols["v0"]), type=pa.int64()),
-                pa.array(np.concatenate(out_cols["n"]), type=pa.int32()),
-                pay,
-            ], schema=_ARROW_BLOCKS)
+        for c_doc, c_src, idx, vals in series_batches(batches):
+            for take, cols in block_columns(idx, vals):
+                yield pa.RecordBatch.from_arrays(
+                    [c_doc.take(take), c_src.take(take),
+                     const_str("1m", len(take)), *cols], schema=schema)
 
     return tokens_df.mapInArrow(fn, BLOCKS_SCHEMA)
 
@@ -155,82 +116,23 @@ def compress_and_cascade(tokens_df: DataFrame,
     (``kind`` = 'block' | 'tier'); split it with two filters — at
     100 TB that halves the dominant cost (scan + JVM->Python transfer)
     of the production pipeline. Zero shuffles, like both parents."""
-    import pyarrow as pa
-
-    from .rollup import TIERS, _locf_2d, _tier_reduce
-
-    fused_arrow = pa.schema([
-        ("kind", pa.string()), ("doc_id", pa.string()),
-        ("source", pa.string()),
-        ("bucket_day", pa.date32()), ("t0", pa.int64()), ("v0", pa.int64()),
-        ("n", pa.int32()), ("payload", pa.binary()),
-        ("tier", pa.string()), ("bucket", pa.int64()), ("cnt", pa.int64()),
-        ("sum", pa.int64()), ("min", pa.int64()), ("max", pa.int64()),
-        ("first", pa.int64()), ("last", pa.int64()),
-        ("n_filled", pa.int64()),
-    ])
-
-    def _nulls(pa_type, n):
-        return pa.nulls(n, type=pa_type)
+    schema = arrow_schema(FUSED_SCHEMA)
+    block_nulls, tier_nulls = schema.types[3:8], schema.types[8:]
 
     def fn(batches):
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            names = rb.schema.names
-            c_doc = rb.column(names.index("doc_id"))
-            c_src = rb.column(names.index("source"))
-            n_tok = rb.column(names.index("n_tok")).to_numpy()
-            flat, offsets = _list_to_matrix(rb.column(names.index("tokens")))
-            for nt in np.unique(n_tok):
-                idx = np.nonzero(n_tok == nt)[0]
-                vals = rows_matrix(flat, offsets, idx, int(nt))
-                # --- blocks (same layout as compress_tokens) ---
-                day_pts = 1440
-                for s in range(0, int(nt), day_pts):
-                    e = min(s + day_pts, int(nt))
-                    ts = EPOCH_SECONDS + np.arange(s, e, dtype=np.int64) * 60
-                    ts2d = np.broadcast_to(ts, (len(idx), e - s))
-                    t0a, v0a, na, payloads = gorilla.encode_batch_arrow(
-                        ts2d, vals[:, s:e])
-                    take = pa.array(idx, type=pa.int64())
-                    m = len(idx)
-                    yield pa.RecordBatch.from_arrays([
-                        _const_str("block", m), c_doc.take(take),
-                        c_src.take(take),
-                        pa.array(np.full(
-                            m, (EPOCH_SECONDS + s * 60) // 86400,
-                            dtype=np.int32), type=pa.date32()),
-                        pa.array(t0a, type=pa.int64()),
-                        pa.array(v0a, type=pa.int64()),
-                        pa.array(na.astype(np.int32), type=pa.int32()),
-                        payloads,
-                        _nulls(pa.string(), m), _nulls(pa.int64(), m),
-                        _nulls(pa.int64(), m), _nulls(pa.int64(), m),
-                        _nulls(pa.int64(), m), _nulls(pa.int64(), m),
-                        _nulls(pa.int64(), m), _nulls(pa.int64(), m),
-                        _nulls(pa.int64(), m),
-                    ], schema=fused_arrow)
-                # --- tiers (same kernels as cascade_fast) ---
-                filled, fmask = _locf_2d(vals)
-                for tier in tiers:
-                    mins = TIERS[tier]
-                    rr, bb, cnt, sm, mn, mx, first, last, nfil = _tier_reduce(
-                        filled, fmask, mins)
-                    take = pa.array(idx[rr], type=pa.int64())
-                    m = len(rr)
-                    yield pa.RecordBatch.from_arrays([
-                        _const_str("tier", m), c_doc.take(take),
-                        c_src.take(take),
-                        _nulls(pa.date32(), m), _nulls(pa.int64(), m),
-                        _nulls(pa.int64(), m), _nulls(pa.int32(), m),
-                        _nulls(pa.binary(), m),
-                        _const_str(tier, m),
-                        pa.array(EPOCH_SECONDS + bb.astype(np.int64, copy=False) * mins * 60),
-                        pa.array(cnt), pa.array(sm), pa.array(mn),
-                        pa.array(mx), pa.array(first), pa.array(last),
-                        pa.array(nfil),
-                    ], schema=fused_arrow)
+        for c_doc, c_src, idx, vals in series_batches(batches):
+            for take, cols in block_columns(idx, vals):
+                m = len(take)
+                yield pa.RecordBatch.from_arrays(
+                    [const_str("block", m), c_doc.take(take), c_src.take(take),
+                     *cols, *(pa.nulls(m, t) for t in tier_nulls)],
+                    schema=schema)
+            for tier, take, cols in tier_columns(idx, vals, tiers):
+                m = len(take)
+                yield pa.RecordBatch.from_arrays(
+                    [const_str("tier", m), c_doc.take(take), c_src.take(take),
+                     *(pa.nulls(m, t) for t in block_nulls),
+                     const_str(tier, m), *cols], schema=schema)
 
     return tokens_df.mapInArrow(fn, FUSED_SCHEMA)
 

@@ -19,10 +19,14 @@ Scale design (the part that matters at 10^12 sequences):
   ``repartition(source, doc_id)`` that the LOCF window and every tier
   groupBy reuse — ::test_single_shuffle_plan); it is the independent
   implementation backing the parity certificates.
-- The tokens fast path never explodes to long form at all: one
-  ``mapInArrow`` pass reshapes each Arrow batch in NumPy and emits
-  per-tier buckets directly — zero shuffles, linear scan, exact
-  integer arithmetic (token-array equality is preserved end-to-end).
+- One kernel layer serves every tokens operator: :func:`series_batches`
+  is the only Arrow-batch adapter (NumPy matrices per run of equal
+  ``n_tok``), :func:`tier_columns` the only cascade kernel, and
+  ``compress.block_columns`` the only Gorilla block encoder.
+  :func:`cascade_fast`, :func:`cascade`, ``compress_tokens`` and
+  ``compress_and_cascade`` are compositions of them — zero shuffles,
+  linear scan, exact integer arithmetic (token-array equality is
+  preserved end-to-end).
 - first/last use min_by/max_by on the bucket/position, not
   order-dependent ``first()``, so results are partition-layout
   independent.
@@ -31,10 +35,11 @@ Scale design (the part that matters at 10^12 sequences):
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 EPOCH = "2024-01-01 00:00:00"
 EPOCH_SECONDS = 1704067200  # 2024-01-01T00:00:00Z
@@ -213,96 +218,8 @@ def cascade_declarative(tokens_df: DataFrame,
     return out
 
 
-_TIER_RAW_SCHEMA = T.StructType([
-    T.StructField("source", T.StringType(), False),
-    T.StructField("doc_id", T.StringType(), False),
-    T.StructField("bucket_s", T.LongType(), False),  # epoch seconds
-    T.StructField("cnt", T.LongType(), True),
-    T.StructField("sum", T.LongType(), True),
-    T.StructField("min", T.LongType(), True),
-    T.StructField("max", T.LongType(), True),
-    T.StructField("first", T.LongType(), True),
-    T.StructField("last", T.LongType(), True),
-    T.StructField("n_filled", T.LongType(), True),
-])
-
-
-def _tier_from_tokens(tokens_df: DataFrame, tier: str) -> DataFrame:
-    """ONE tier of the cascade straight from the token arrays: a
-    zero-shuffle mapInArrow pass running the same LOCF + bucket-reduce
-    kernels as :func:`cascade_fast` (whose equality to the declarative
-    plan and to the DuckDB oracle is pytest-pinned), emitting the
-    long-form tier schema with ``bucket_s`` as epoch seconds."""
-    import pyarrow as pa
-
-    mins = TIERS[tier]
-    arrow_schema = pa.schema([
-        ("source", pa.string()), ("doc_id", pa.string()),
-        ("bucket_s", pa.int64()), ("cnt", pa.int64()), ("sum", pa.int64()),
-        ("min", pa.int64()), ("max", pa.int64()), ("first", pa.int64()),
-        ("last", pa.int64()), ("n_filled", pa.int64()),
-    ])
-
-    def run(batches):
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            names = rb.schema.names
-            c_doc = rb.column(names.index("doc_id"))
-            c_src = rb.column(names.index("source"))
-            n_tok = rb.column(names.index("n_tok")).to_numpy()
-            col = rb.column(names.index("tokens"))
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            offsets = col.offsets.to_numpy()
-            flat = col.values.to_numpy(zero_copy_only=False)
-            for nt in np.unique(n_tok):
-                idx = np.nonzero(n_tok == nt)[0]
-                vals = rows_matrix(flat, offsets, idx, int(nt), dtype=None)
-                filled, fmask = _locf_2d(vals)
-                rr, bb, cnt, s, mn, mx, first, last, nfil = _tier_reduce(
-                    filled, fmask, mins)
-                take = pa.array(idx[rr], type=pa.int64())
-                yield pa.RecordBatch.from_arrays([
-                    c_src.take(take),
-                    c_doc.take(take),
-                    pa.array(EPOCH_SECONDS + bb.astype(np.int64, copy=False) * mins * 60),
-                    pa.array(cnt), pa.array(s), pa.array(mn),
-                    pa.array(mx), pa.array(first), pa.array(last),
-                    pa.array(nfil),
-                ], schema=arrow_schema)
-
-    return tokens_df.mapInArrow(run, _TIER_RAW_SCHEMA)
-
-
-def cascade(tokens_df: DataFrame, tiers: tuple[str, ...] = ("1m", "1h", "1d"),
-            partitions: int | None = None) -> dict[str, DataFrame]:
-    """tokens table -> {tier: rollup DataFrame}, ZERO shuffles.
-
-    Each input row carries its whole series, so every tier is computed
-    array-locally in one narrow mapInArrow pass per tier — no explode,
-    no window sort, no per-point hash aggregate, no Exchange (guide
-    §2.4/§4.2). Results are identical to :func:`cascade_declarative`
-    (pytest-pinned, and each tier equals the DuckDB long-form oracle);
-    materializing only the 1d tier no longer pays for the 1m tier.
-
-    ``partitions`` is honoured for layout compatibility (callers that
-    want a specific output partitioning) but is no longer needed for
-    correctness or plan shape.
-    """
-    if partitions is not None:
-        tokens_df = tokens_df.repartition(partitions, "source", "doc_id")
-    out: dict[str, DataFrame] = {}
-    for tier in tiers:
-        out[tier] = _tier_from_tokens(tokens_df, tier).select(
-            "source", "doc_id",
-            F.timestamp_seconds("bucket_s").alias("bucket"),
-            "cnt", "sum", "min", "max", "first", "last", "n_filled")
-    return out
-
-
 # ---------------------------------------------------------------------------
-# tokens fast path: zero-shuffle mapInPandas cascade
+# tokens kernel layer: zero-shuffle mapInArrow cascade
 # ---------------------------------------------------------------------------
 
 CASCADE_SCHEMA = T.StructType([
@@ -341,6 +258,46 @@ def rows_matrix(flat: np.ndarray, offsets: np.ndarray, idx: np.ndarray,
     else:
         m = flat[starts[:, None] + np.arange(nt)[None, :]]
     return m if dtype is None else m.astype(dtype, copy=False)
+
+
+def arrow_schema(schema: T.StructType) -> pa.Schema:
+    """The Arrow schema of the batches a mapInArrow runner yields for
+    the Spark ``schema`` it declares."""
+    return pa.schema([(f.name, to_arrow_type(f.dataType)) for f in schema])
+
+
+def const_str(value: str, n: int) -> pa.Array:
+    """Constant string column of length n without building n Python
+    objects (dictionary-encode then cast)."""
+    return pa.DictionaryArray.from_arrays(
+        pa.array(np.zeros(n, dtype=np.int32)),
+        pa.array([value])).cast(pa.string())
+
+
+def series_batches(batches):
+    """The Arrow boundary of every tokens operator: for each run of
+    rows with equal ``n_tok`` in each non-empty input batch, yield
+    ``(doc_id, source, idx, vals)`` — the batch's string columns, the
+    run's row indices and its (len(idx), n_tok) token matrix in the
+    native element type (:func:`rows_matrix`). Columns are resolved by
+    NAME: a partitioned read-back or a caller's select can reorder the
+    schema."""
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        names = rb.schema.names
+        c_doc = rb.column(names.index("doc_id"))
+        c_src = rb.column(names.index("source"))
+        n_tok = rb.column(names.index("n_tok")).to_numpy()
+        col = rb.column(names.index("tokens"))
+        if isinstance(col, pa.ChunkedArray):
+            col = col.combine_chunks()
+        offsets = col.offsets.to_numpy()
+        flat = col.values.to_numpy(zero_copy_only=False)
+        for nt in np.unique(n_tok):
+            idx = np.nonzero(n_tok == nt)[0]
+            yield c_doc, c_src, idx, rows_matrix(flat, offsets, idx, int(nt),
+                                                 dtype=None)
 
 
 def _locf_2d(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -425,6 +382,20 @@ def _tier_reduce(filled: np.ndarray, fmask: np.ndarray, mins: int):
             nfil[rr, bb])
 
 
+def tier_columns(idx: np.ndarray, vals: np.ndarray, tiers: tuple[str, ...]):
+    """The cascade kernel for one run of equal-length series: LOCF once,
+    then per tier yield ``(tier, take, columns)``: the Arrow row
+    indices into the input batch, and the ``bucket`` (epoch seconds)
+    through ``n_filled`` columns of :data:`CASCADE_SCHEMA`."""
+    filled, fmask = _locf_2d(vals)
+    for tier in tiers:
+        mins = TIERS[tier]
+        rr, bb, *aggs = _tier_reduce(filled, fmask, mins)
+        bucket = EPOCH_SECONDS + bb.astype(np.int64, copy=False) * mins * 60
+        yield (tier, pa.array(idx[rr], type=pa.int64()),
+               [pa.array(a) for a in (bucket, *aggs)])
+
+
 def cascade_fast(tokens_df: DataFrame,
                  tiers: tuple[str, ...] = ("1m", "1h", "1d")) -> DataFrame:
     """All tiers in ONE narrow mapInArrow pass (no shuffle at all):
@@ -432,53 +403,31 @@ def cascade_fast(tokens_df: DataFrame,
     tier is computable locally. Output: union of tiers, tagged by
     ``tier``; bucket as epoch seconds. Integer-exact. String columns
     are gathered with Arrow ``take`` — no Python objects anywhere."""
-    import pyarrow as pa
-
-    arrow_schema = pa.schema([
-        ("tier", pa.string()), ("source", pa.string()), ("doc_id", pa.string()),
-        ("bucket", pa.int64()), ("cnt", pa.int64()), ("sum", pa.int64()),
-        ("min", pa.int64()), ("max", pa.int64()), ("first", pa.int64()),
-        ("last", pa.int64()), ("n_filled", pa.int64()),
-    ])
+    schema = arrow_schema(CASCADE_SCHEMA)
 
     def run(batches):
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            # resolve columns by NAME (partitioned read-back or a
-            # caller's select can reorder the schema)
-            names = rb.schema.names
-            c_doc = rb.column(names.index("doc_id"))
-            c_src = rb.column(names.index("source"))
-            n_tok = rb.column(names.index("n_tok")).to_numpy()
-            col = rb.column(names.index("tokens"))
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            offsets = col.offsets.to_numpy()
-            flat = col.values.to_numpy(zero_copy_only=False)
-            for nt in np.unique(n_tok):
-                idx = np.nonzero(n_tok == nt)[0]
-                vals = rows_matrix(flat, offsets, idx, int(nt), dtype=None)
-                filled, fmask = _locf_2d(vals)
-                for tier in tiers:
-                    mins = TIERS[tier]
-                    rr, bb, cnt, s, mn, mx, first, last, nfil = _tier_reduce(
-                        filled, fmask, mins)
-                    take = pa.array(idx[rr], type=pa.int64())
-                    tier_col = pa.DictionaryArray.from_arrays(
-                        pa.array(np.zeros(len(rr), dtype=np.int32)),
-                        pa.array([tier])).cast(pa.string())
-                    yield pa.RecordBatch.from_arrays([
-                        tier_col,
-                        c_src.take(take),
-                        c_doc.take(take),
-                        pa.array(EPOCH_SECONDS + bb.astype(np.int64, copy=False) * mins * 60),
-                        pa.array(cnt), pa.array(s), pa.array(mn),
-                        pa.array(mx), pa.array(first), pa.array(last),
-                        pa.array(nfil),
-                    ], schema=arrow_schema)
+        for c_doc, c_src, idx, vals in series_batches(batches):
+            for tier, take, cols in tier_columns(idx, vals, tiers):
+                yield pa.RecordBatch.from_arrays(
+                    [const_str(tier, len(take)), c_src.take(take),
+                     c_doc.take(take), *cols], schema=schema)
 
     return tokens_df.mapInArrow(run, CASCADE_SCHEMA)
+
+
+def cascade(tokens_df: DataFrame,
+            tiers: tuple[str, ...] = ("1m", "1h", "1d")) -> dict[str, DataFrame]:
+    """tokens table -> {tier: rollup DataFrame}, ZERO shuffles: each
+    tier is :func:`cascade_fast` over that tier alone, with ``bucket``
+    as a timestamp — no explode, no window sort, no per-point hash
+    aggregate, no Exchange (guide §2.4/§4.2). Results are identical to
+    :func:`cascade_declarative` (pytest-pinned, and each tier equals
+    the DuckDB long-form oracle); materializing only the 1d tier does
+    not pay for the 1m tier."""
+    return {tier: cascade_fast(tokens_df, tiers=(tier,)).select(
+                "source", "doc_id",
+                F.timestamp_seconds("bucket").alias("bucket"), *_AGGS)
+            for tier in tiers}
 
 
 # ---------------------------------------------------------------------------
@@ -525,26 +474,25 @@ def events_rollup(events_df: DataFrame, tier_seconds: int,
     )
 
 
-def events_gapfill(events_df: DataFrame, tier_seconds: int,
-                   series_col: str = "event_type",
-                   ts_col: str = "ts", value_col: str = "value") -> DataFrame:
-    """Dense per-series bucket spine via sequence+explode (J4), left
-    join of actual buckets, then LOCF (W1). ``filled`` marks carried
-    buckets. One value per (series, bucket): the bucket sum (a sum of
-    2-decimal inputs stays decimal-exact after round(4), unlike an avg
-    whose quotient can straddle a rounding boundary between engines)."""
+def _events_spine(events_df: DataFrame, tier_seconds: int, series_col: str,
+                  ts_col: str, value_col: str) -> DataFrame:
+    """(series, bucket, value) on a dense per-series bucket spine
+    (sequence+explode, J4) from the first to the last bucket of the
+    whole stream, left-joined to the bucket sums: ``value`` is NULL on
+    buckets without events."""
     bucket = (F.unix_timestamp(ts_col) / tier_seconds).cast("long") * tier_seconds
     actual = (
         events_df
         .groupBy(F.col(series_col).alias("series"), bucket.alias("bucket"))
         .agg(F.sum(value_col).alias("value"))
     )
-    # bounds and the series set derive from `actual`, not from a
-    # re-scan of the raw events: floor is monotone so min/max of the
-    # bucketized values equal the bucketized min/max, and every series
-    # has >= 1 event hence >= 1 bucket. Catalyst then REUSES the one
-    # aggregation exchange for all three subtrees (guide §2.4) — one
-    # scan of the events table instead of three.
+    # bounds and the series set derive from `actual`, not from the raw
+    # timestamps: floor is monotone so min/max of the bucketized values
+    # equal the bucketized min/max, and every series has >= 1 event
+    # hence >= 1 bucket. Catalyst does NOT reuse the aggregation
+    # exchange across the three subtrees: it prunes each one's columns
+    # separately, so the events table is still scanned three times
+    # (OPTIMIZATION_r06.md, Change 7).
     bounds = actual.agg(F.min("bucket").alias("lo"),
                         F.max("bucket").alias("hi"))
     spine = (
@@ -553,10 +501,21 @@ def events_gapfill(events_df: DataFrame, tier_seconds: int,
         .select("series", F.explode(
             F.sequence(F.col("lo"), F.col("hi"), F.lit(tier_seconds))).alias("bucket"))
     )
+    return spine.join(actual, ["series", "bucket"], "left")
+
+
+def events_gapfill(events_df: DataFrame, tier_seconds: int,
+                   series_col: str = "event_type",
+                   ts_col: str = "ts", value_col: str = "value") -> DataFrame:
+    """Dense per-series bucket spine (:func:`_events_spine`), then LOCF
+    (W1). ``filled`` marks carried buckets. One value per (series,
+    bucket): the bucket sum (a sum of 2-decimal inputs stays
+    decimal-exact after round(4), unlike an avg whose quotient can
+    straddle a rounding boundary between engines)."""
     w = (Window.partitionBy("series").orderBy("bucket")
          .rowsBetween(Window.unboundedPreceding, 0))
     return (
-        spine.join(actual, ["series", "bucket"], "left")
+        _events_spine(events_df, tier_seconds, series_col, ts_col, value_col)
         .withColumn("filled", F.col("value").isNull())
         .withColumn("value", F.last("value", ignorenulls=True).over(w))
     )
@@ -569,22 +528,6 @@ def events_gapfill_interp(events_df: DataFrame, tier_seconds: int,
     """Like :func:`events_gapfill` but gaps are LINEARLY INTERPOLATED
     between the surrounding observed buckets
     (:func:`gapfill_interpolate`); leading/trailing gaps stay NULL."""
-    bucket = (F.unix_timestamp(ts_col) / tier_seconds).cast("long") * tier_seconds
-    actual = (
-        events_df
-        .groupBy(F.col(series_col).alias("series"), bucket.alias("bucket"))
-        .agg(F.sum(value_col).alias("value"))
-    )
-    # one scan of events: bounds/series derive from `actual` (see
-    # events_gapfill) and share its aggregation exchange
-    bounds = actual.agg(F.min("bucket").alias("lo"),
-                        F.max("bucket").alias("hi"))
-    spine = (
-        actual.select("series").distinct()
-        .crossJoin(F.broadcast(bounds))
-        .select("series", F.explode(
-            F.sequence(F.col("lo"), F.col("hi"), F.lit(tier_seconds))).alias("bucket"))
-    )
-    joined = spine.join(actual, ["series", "bucket"], "left")
-    return gapfill_interpolate(joined, series_cols=("series",),
-                               order_col="bucket", value_col="value")
+    return gapfill_interpolate(
+        _events_spine(events_df, tier_seconds, series_col, ts_col, value_col),
+        series_cols=("series",), order_col="bucket", value_col="value")

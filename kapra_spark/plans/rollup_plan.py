@@ -12,17 +12,13 @@ north_rule).
     committed partitions, re-writes are idempotent, checksums certify
     equality.
 
-Two execution modes, both zero-shuffle and one kernel pass:
-
-- default: the cached kernel output is projected into the three
-  tables ``blocks_1m``, ``tier_1h`` and ``tier_1d``. The call pays one
-  lineage read, one metrics job over all stages, one write per table
-  and one lineage append; the kernel runs once, not once per table.
-  The cache holds the kernel output (~15% of the input bytes for the
-  blocks plus the tier rows), never a per-table copy on top of it.
-- ``fused=True``: the same pass written as a single table partitioned
-  by (kind, source, day), where kind in {blocks, 1h, 1d} — the
-  partition dirs ARE the three tables (read ``.../kind=1h/``).
+Zero shuffles and one kernel pass: the cached kernel output is
+projected into the three tables ``blocks_1m``, ``tier_1h`` and
+``tier_1d``. The call pays one lineage read, one metrics job over all
+stages, one write per table and one lineage append; the kernel runs
+once, not once per table. The cache holds the kernel output (~15% of
+the input bytes for the blocks plus the tier rows), never a per-table
+copy on top of it.
 """
 
 from __future__ import annotations
@@ -31,8 +27,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.compress import compress_and_cascade
-from ..operators.lineage import (Stage, write_stages_with_lineage,
-                                 write_with_lineage)
+from ..operators.lineage import Stage, write_stages_with_lineage
 from ..operators.rollup import CASCADE_SCHEMA, DEFAULT_RETENTION, apply_retention
 from ..session import cached
 
@@ -45,40 +40,10 @@ def run_rollup_pipeline(
     now_bucket_seconds: int | None = None,
     retention: dict | None = None,
     resume: bool = True,
-    fused: bool = False,
 ) -> dict:
     """Returns per-stage write stats. ``now_bucket_seconds`` pins the
     retention horizon (explicit for determinism/resume)."""
     lineage_path = f"{base_path}/_lineage"
-
-    if fused:
-        union = compress_and_cascade(tokens, tiers=("1h", "1d"))
-        union = (union
-                 .withColumn("kind", F.coalesce("tier", F.lit("blocks")))
-                 .withColumn("day", F.when(
-                     F.col("kind") == "blocks", F.col("bucket_day"))
-                     .otherwise(F.to_date(F.timestamp_seconds("bucket"))))
-                 .drop("tier", "bucket_day"))
-        if now_bucket_seconds is not None:
-            # same horizon filter apply_retention applies per tier in
-            # the unfused path, expressed as one predicate over the
-            # tagged union (blocks pass through, like the unfused path)
-            from ..operators.rollup import TIERS
-            policy = retention or DEFAULT_RETENTION
-            keep_pred = F.col("kind") == "blocks"
-            for tier in ("1h", "1d"):
-                is_tier = F.col("kind") == tier
-                keep = policy.get(tier)
-                if keep is None:
-                    keep_pred = keep_pred | is_tier
-                else:
-                    horizon = now_bucket_seconds - keep * TIERS[tier] * 60
-                    keep_pred = keep_pred | (
-                        is_tier & (F.col("bucket") >= F.lit(horizon)))
-            union = union.filter(keep_pred)
-        return {"fused": write_with_lineage(
-            union, f"{base_path}/fused", ["kind", "source", "day"],
-            lineage_path, run_id, "fused", resume=resume)}
 
     # the kernel output is the only cache: every stage frame below is a
     # projection of it, evaluated by the writer's metrics job and again

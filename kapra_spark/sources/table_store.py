@@ -28,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import scoped_conf
+
 
 def detect_iceberg_catalog(spark: SparkSession) -> str | None:
     """Name of the first configured Iceberg catalog, or None."""
@@ -101,13 +103,12 @@ class TableStore:
         if mode == "append":
             df.write.mode("append").parquet(path)
             return
-        self.spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode",
-            "dynamic" if mode == "overwrite_partitions" else "static")
         w = df.write.mode("overwrite")
         if partition_cols:
             w = w.partitionBy(*partition_cols)
-        w.parquet(path)
+        with scoped_conf(self.spark, "spark.sql.sources.partitionOverwriteMode",
+                         "dynamic" if mode == "overwrite_partitions" else "static"):
+            w.parquet(path)
 
     def read(self, table: str) -> DataFrame:
         if self.catalog:

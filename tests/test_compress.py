@@ -88,19 +88,40 @@ def test_compression_ratio_reported(spark):
     assert bits_pp < 20
 
 
-def test_fused_compress_and_cascade(spark):
-    """The fused single-pass operator must equal compress_tokens +
-    cascade_fast exactly (same kernels, one scan)."""
+def _mixed_tokens_pdf():
+    """Shuffled 144-, 1500- and 50-token gapped series (unique ids)."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
-    from kapra_spark import datagen
+    parts = []
+    for tag, n_tok, n, seed in (("a", 144, 30, 3), ("b", 1500, 12, 4),
+                                ("c", 50, 20, 5)):
+        p = datagen.tokens_pdf(n, n_tok=n_tok, seed=seed, gap_fraction=0.2)
+        p["doc_id"] = tag + p["doc_id"]
+        parts.append(p)
+    return pd.concat(parts).sample(frac=1.0, random_state=7)
+
+
+@pytest.mark.parametrize("shape", ["144", "1500", "mixed"])
+def test_fused_compress_and_cascade(spark, shape):
+    """The fused single-pass operator must equal compress_tokens +
+    cascade_fast exactly (same kernels, one scan) on every batch shape:
+    one-day series, multi-day blocks, and Arrow batches holding several
+    ``n_tok`` runs in shuffled order (the non-contiguous row gather)."""
+    import pandas as pd
+
     from kapra_spark.operators.compress import (compress_and_cascade,
                                                 compress_tokens)
     from kapra_spark.operators.rollup import cascade_fast
 
-    pdf = datagen.tokens_pdf(80, n_tok=144, seed=3, gap_fraction=0.2)
+    if shape == "mixed":
+        pdf = _mixed_tokens_pdf()
+    else:
+        pdf = datagen.tokens_pdf(80, n_tok=int(shape), seed=3, gap_fraction=0.2)
     tokens = spark.createDataFrame(pdf, schema=datagen.TOKENS_SCHEMA)
+    if shape == "mixed":
+        tokens = tokens.repartition(3)
+        assert tokens.rdd.glom().map(
+            lambda rows: len({r.n_tok for r in rows})).max() > 1
 
     fused = compress_and_cascade(tokens, tiers=("1h", "1d")).cache()
     blocks_f = (fused.filter("kind = 'block'")

@@ -75,92 +75,6 @@ def test_pipeline_retention(spark, tokens, tmp_path):
     assert stats["tier_1d"]["written_partitions"] > 0
 
 
-def test_fused_pipeline_matches_unfused(spark, tmp_path):
-    """fused=True writes one (kind, source, day)-partitioned table
-    whose kind partitions equal the three unfused outputs; resume
-    skips everything on re-run."""
-    from pyspark.sql import functions as F
-
-    from kapra_spark import datagen
-    from kapra_spark.operators.compress import decompress_tokens
-    from kapra_spark.plans.rollup_plan import run_rollup_pipeline
-
-    pdf = datagen.tokens_pdf(60, n_tok=144, seed=21, gap_fraction=0.1)
-    tokens = spark.createDataFrame(pdf, schema=datagen.TOKENS_SCHEMA)
-
-    b1 = str(tmp_path / "unfused")
-    b2 = str(tmp_path / "fused")
-    run_rollup_pipeline(spark, tokens, b1, run_id="a")
-    s = run_rollup_pipeline(spark, tokens, b2, run_id="a", fused=True)
-    assert s["fused"]["written_partitions"] > 0
-
-    # tier partitions equal the unfused tier tables
-    for tier in ("1h", "1d"):
-        got = (spark.read.parquet(f"{b2}/fused/kind={tier}")
-               .select("doc_id", "bucket", "cnt", "sum", "min", "max")
-               .toPandas().sort_values(["doc_id", "bucket"]).reset_index(drop=True))
-        exp = (spark.read.parquet(f"{b1}/tier_{tier}")
-               .select("doc_id", "bucket", "cnt", "sum", "min", "max")
-               .toPandas().sort_values(["doc_id", "bucket"]).reset_index(drop=True))
-        import pandas as pd
-        pd.testing.assert_frame_equal(got, exp)
-
-    # blocks partition round-trips to the original tokens
-    blocks = (spark.read.parquet(f"{b2}/fused/kind=blocks")
-              .withColumnRenamed("day", "bucket_day")
-              .select("doc_id", "source", "bucket_day", "t0", "v0", "n", "payload"))
-    back = decompress_tokens(blocks).orderBy("doc_id").toPandas()
-    orig = pdf.sort_values("doc_id").reset_index(drop=True)
-    assert len(back) == len(orig)
-    for i in range(len(orig)):
-        assert list(back["tokens"][i]) == list(orig["tokens"][i])
-
-    # resume: second run writes nothing
-    s2 = run_rollup_pipeline(spark, tokens, b2, run_id="b", fused=True)
-    assert s2["fused"]["written_partitions"] == 0
-    assert s2["fused"]["skipped_partitions"] > 0
-
-
-def test_fused_retention_matches_unfused(spark, tmp_path):
-    """fused=True applies the SAME per-tier retention horizon as the
-    unfused path (ADVICE r2 #1): with a horizon that expires part of
-    the 1h tier, the fused kind partitions equal the unfused tier
-    tables row-for-row, and resume stays idempotent."""
-    from pyspark.sql import functions as F
-
-    from kapra_spark import datagen
-    from kapra_spark.operators.rollup import EPOCH_SECONDS
-    from kapra_spark.plans.rollup_plan import run_rollup_pipeline
-
-    pdf = datagen.tokens_pdf(50, n_tok=144, seed=9, gap_fraction=0.05)
-    tokens = spark.createDataFrame(pdf, schema=datagen.TOKENS_SCHEMA)
-    # tokens span 3 one-hour buckets; put the 1h horizon between
-    # bucket 0 and bucket 1 => partial expiry
-    now = EPOCH_SECONDS + 90 * 24 * 3600 + 5400
-
-    b1, b2 = str(tmp_path / "unfused"), str(tmp_path / "fused")
-    run_rollup_pipeline(spark, tokens, b1, run_id="r",
-                        now_bucket_seconds=now)
-    s = run_rollup_pipeline(spark, tokens, b2, run_id="r",
-                            now_bucket_seconds=now, fused=True)
-    assert s["fused"]["written_partitions"] > 0
-
-    fused = spark.read.parquet(f"{b2}/fused")
-    for tier in ("1h", "1d"):
-        a = spark.read.parquet(f"{b1}/tier_{tier}")
-        b = fused.filter(F.col("kind") == tier).select(*a.columns)
-        assert a.count() == b.count()
-        assert a.exceptAll(b).count() == 0
-        assert b.exceptAll(a).count() == 0
-    # retention actually pruned the 1h tier (1 of 3 buckets kept)
-    n_1h = fused.filter(F.col("kind") == "1h").count()
-    assert n_1h == 50
-
-    s2 = run_rollup_pipeline(spark, tokens, b2, run_id="r2",
-                             now_bucket_seconds=now, fused=True)
-    assert s2["fused"]["written_partitions"] == 0
-
-
 # ---------------------------------------------------------------------------
 # one kernel pass, one lineage round-trip per call
 # ---------------------------------------------------------------------------
@@ -271,3 +185,32 @@ def test_kill_before_lineage_append_reruns_idempotently(spark, tokens,
         v = verify_against_lineage(spark, f"{base}/{stage}", ["source", "day"],
                                    f"{base}/_lineage", stage)
         assert v.filter(~F.col("ok") | F.col("ok").isNull()).count() == 0
+
+
+def _jobs_of(spark, call):
+    """Spark jobs that ``call`` runs: job ids started between two 1-task
+    marker jobs of one job group (AQE map-stage jobs count too)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("job_count", "job_count")
+    try:
+        sc.parallelize([0], 1).count()
+        before = set(sc.statusTracker().getJobIdsForGroup("job_count"))
+        call()
+        sc.parallelize([0], 1).count()
+        after = set(sc.statusTracker().getJobIdsForGroup("job_count"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(after - before) - 1  # minus the closing marker
+
+
+def test_pipeline_job_count(spark, tokens, tmp_path):
+    """A fresh default call runs 9 Spark jobs and a full resume 5: the
+    kernel runs once into the one cache and the lineage is read once
+    per call. Dropping the kernel cache (resume: 2 jobs) or a lineage
+    round-trip per stage (fresh: 15 jobs) changes these counts."""
+    base = str(tmp_path / "pipe")
+    assert _jobs_of(spark, lambda: run_rollup_pipeline(
+        spark, tokens, base, run_id="r1")) == 9
+    assert _jobs_of(spark, lambda: run_rollup_pipeline(
+        spark, tokens, base, run_id="r2")) == 5

@@ -33,6 +33,32 @@ def test_table_store_parquet_backend(spark, tmp_path):
     assert not store.exists("missing")
 
 
+def test_table_store_write_restores_partition_overwrite_mode(spark, tmp_path):
+    """Both parquet overwrite modes scope partitionOverwriteMode to the
+    write: the session's prior setting (set or unset) reads the same
+    afterwards."""
+    from kapra_spark.sources.table_store import TableStore
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    store = TableStore(spark, str(tmp_path / "warehouse"))
+    df = spark.createDataFrame([(1, "a")], "id int, part string")
+    prior = spark.conf.get(key, None)
+    try:
+        spark.conf.unset(key)
+        store.write(df, "t", ["part"])
+        assert spark.conf.get(key, None) is None
+        spark.conf.set(key, "static")
+        store.write(df, "t", ["part"])
+        assert spark.conf.get(key) == "static"
+        store.write(df, "t", ["part"], mode="replace")
+        assert spark.conf.get(key) == "static"
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
+
+
 def test_downsample_wide_csv(spark, tmp_path):
     """Reference utils/downsample_dataset.py semantics: head-N file
     rows, skip-with-warning for oversized counts."""

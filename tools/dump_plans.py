@@ -1,15 +1,18 @@
 """Generate PLANS.md: physical-plan evidence for the engine's headline
 claims (zero-shuffle fast cascade, single-exchange longform, no
 nested-loop as-of join, broadcast dim joins, parquet filter pushdown).
-Run from the repo root: python tools/dump_plans.py
+Usage: python tools/dump_plans.py — tests the checkout the script sits
+in and writes that checkout's PLANS.md.
 """
 
 from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 
 def plan_of(df) -> str:
@@ -197,7 +200,7 @@ claims are enforced as assertions in
 `tests/test_rollup.py::test_single_shuffle_plan` and
 `tests/test_joins.py::test_asof_plan_has_no_nested_loop`.
 """
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(REPO / "PLANS.md", "w") as f:
         f.write(header + "\n" + "\n".join(sections))
     print("WROTE PLANS.md — all claims:", "PASS" if ok else "FAIL")
     spark.stop()
