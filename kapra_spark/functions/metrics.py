@@ -101,16 +101,6 @@ def envelope(values: np.ndarray) -> tuple[np.ndarray, np.ndarray, int]:
     return np.maximum(values.max(axis=0), 0.0), values.min(axis=0), len(values)
 
 
-def union_vl(hi_a, lo_a, n_a, hi_b, lo_b, n_b) -> float:
-    """VL of the union of two groups from their envelopes. ``hi_b`` /
-    ``lo_b`` may be (m, T) matrices -> vectorized over m candidates."""
-    hi = np.maximum(hi_a, hi_b)
-    lo = np.minimum(lo_a, lo_b)
-    t = hi.shape[-1]
-    s = np.sqrt(seqsum(np.square(hi - lo) / t, axis=-1))
-    return (n_a + n_b) * s
-
-
 def cosine_distance(u: np.ndarray, v: np.ndarray) -> float:
     """Reference cosine-distance conventions
     (includes/pattern_loss.py:132-166)."""
@@ -130,7 +120,10 @@ def pattern_loss(series: np.ndarray, pr: str, paa_size: int,
                  znorm_threshold: float = 0.01) -> float:
     """PL = cosine_distance(PAA(znorm(series)), reconstruct(pr)).
 
-    Reference: includes/pattern_loss.py:167-197.
+    Reference: includes/pattern_loss.py:167-197. The scalar test
+    reference for the batched
+    ``operators.metrics_ops.pattern_loss_per_record``
+    (tests/test_anonymize.py).
     """
     p = paa(znorm(np.asarray(series, dtype=np.float64), znorm_threshold), paa_size)
     p_star = reconstruct_paa(pr)

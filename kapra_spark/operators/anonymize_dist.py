@@ -92,7 +92,7 @@ from pyspark.sql import functions as F
 from ..functions import clustering as C
 from ..functions import sax as S
 from ..functions.metrics import envelope
-from .grouping import ANON_SCHEMA
+from .grouping import ANON_SCHEMA, per_source, render, source_arrays
 from .tree_dist import create_tree_distributed, pattern_arrays
 
 _SPLIT_SCHEMA = "doc_id string, pg int, sub int, pos int"
@@ -148,24 +148,40 @@ def _ldiv_one_psr(ordered_sens: list[int], pattern: str, l_value: int,
     return [sens[i] for i in keys]
 
 
+def _submap_rows(env: pd.DataFrame, k: int, kg_base: int) -> list[tuple]:
+    """C5 merge over subgroup envelopes (one row per subgroup): order
+    them by ``idx`` (the pgl order), run ``kgroups_from_subgroups`` and
+    return ``(pg, sub, kg, rank, glo, ghi)`` rows, k-groups numbered
+    from ``kg_base``; an unplaced subgroup gets ``kg = -1``."""
+    pgl = [C.SubgroupMeta(handle=(int(r.pg), int(r.sub)),
+                          hi=np.asarray(r.hi, np.float64),
+                          lo=np.asarray(r.lo, np.float64), n=int(r.n),
+                          phi=np.asarray(r.phi, np.int64),
+                          plo=np.asarray(r.plo, np.int64))
+           for r in env.sort_values("idx").itertuples()]
+    t = len(pgl[0].hi) if pgl else 1
+    gl, unplaced = C.kgroups_from_subgroups(pgl, k, t)
+    rows = []
+    for i, members in enumerate(gl):
+        glo = np.minimum.reduce([m.plo for m in members]).tolist()
+        ghi = np.maximum.reduce([m.phi for m in members]).tolist()
+        rows += [(*m.handle, kg_base + i, rank, glo, ghi)
+                 for rank, m in enumerate(members)]
+    return rows + [(*m.handle, -1, 0, None, None) for m in unplaced]
+
+
 # ---------------------------------------------------------------------------
 # in-memory canonical twin
 # ---------------------------------------------------------------------------
 
 def _anonymize_source_canonical(pdf: pd.DataFrame, k: int, p: int, paa: int,
-                                l: int, seed: int,
-                                max_level: int = S.MAX_LEVEL) -> pd.DataFrame:
-    source = pdf["source"].iloc[0]
-    pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-    ids = pdf["doc_id"].tolist()
-    mat = np.stack(pdf["tokens"].to_numpy()).astype(np.float64)
-    values = mat[:, :-1]
-    sensitive = {i: int(mat[i, -1]) for i in range(len(mat))}
+                                l: int, seed: int) -> pd.DataFrame:
+    source, ids, values, sensitive = source_arrays(pdf)
 
     good: list[C.Leaf] = []
     bad: list[C.Leaf] = []
     C.split_node(values, list(range(len(values))), 1, "a" * paa, p, paa,
-                 max_level, good, bad, canonical=True)
+                 S.MAX_LEVEL, good, bad, canonical=True)
 
     bad_metas = [C.MetaLeaf(lf.level, lf.pattern, len(lf.rows),
                             min(lf.rows), sorted(lf.rows)) for lf in bad]
@@ -179,26 +195,20 @@ def _anonymize_source_canonical(pdf: pd.DataFrame, k: int, p: int, paa: int,
         [(lf.pattern, sorted(lf.rows), len(lf.rows), min(lf.rows))
          for lf in good],
         bad_metas, pat_first)
-    suppressed_rows = [list(h) for h in supp_handles]
 
-    # C5 preprocessing (per-group seeded, like the distributed kernel)
-    non_split: list[int] = []
-    split_parts: list[tuple[int, list[list[int]]]] = []
+    # C5 preprocessing (per-group seeded, like the distributed kernel);
+    # pgl order: unsplit groups, then split products in group order
+    ordered = [(gi, 0, sorted(rows_g))
+               for gi, (_, rows_g, count, _) in enumerate(pgroups)
+               if count < 2 * p]
     for gi, (_, rows_g, count, first) in enumerate(pgroups):
         if count >= 2 * p:
             rows_sorted = sorted(rows_g)
-            sub = values[rows_sorted]
-            post_local = _split_one_group(
-                sub, p, C.stable_seed(seed, source, "c5split", ids[first]))
-            split_parts.append(
-                (gi, [[rows_sorted[i] for i in grp] for grp in post_local]))
-        else:
-            non_split.append(gi)
-
-    ordered: list[tuple[int, int, list[int]]] = [
-        (gi, 0, sorted(pgroups[gi][1])) for gi in non_split]
-    for gi, post in split_parts:
-        ordered.extend((gi, si, rows_s) for si, rows_s in enumerate(post))
+            post = _split_one_group(
+                values[rows_sorted], p,
+                C.stable_seed(seed, source, "c5split", ids[first]))
+            ordered += [(gi, si, [rows_sorted[i] for i in grp])
+                        for si, grp in enumerate(post)]
 
     sub_rows: dict[tuple[int, int], list[int]] = {}
     pgl: list[C.SubgroupMeta] = []
@@ -210,8 +220,7 @@ def _anonymize_source_canonical(pdf: pd.DataFrame, k: int, p: int, paa: int,
             plo=values[rows_s].min(axis=0).astype(np.int64)))
         sub_rows[(gi, si)] = rows_s
 
-    t = values.shape[1]
-    gl, unplaced = C.kgroups_from_subgroups(pgl, k, t)
+    gl, unplaced = C.kgroups_from_subgroups(pgl, k, values.shape[1])
 
     # F9 per PS_R (first k-group wins for processing)
     pattern_of_group = {gi: pat for gi, (pat, _, _, _) in enumerate(pgroups)}
@@ -232,44 +241,26 @@ def _anonymize_source_canonical(pdf: pd.DataFrame, k: int, p: int, paa: int,
         for r, v in zip(rows_p, out_vals):
             sensitive[r] = v
 
-    # render: last k-group wins, suppressed overwrite last
-    rowmap: dict[int, tuple] = {}
+    placed = []
     for kg_idx, members in enumerate(gl):
         glo = np.minimum.reduce([m.plo for m in members])
         ghi = np.maximum.reduce([m.phi for m in members])
-        for m in members:
-            gi, _ = m.handle
-            for r in sub_rows[m.handle]:
-                rowmap[r] = (ids[r], source, f"{source}#{kg_idx}",
-                             pattern_of_group[gi], sensitive[r],
-                             glo, ghi, False)
-    for handle in suppressed_rows + [sub_rows[m.handle] for m in unplaced]:
-        for r in handle:
-            rowmap[r] = (ids[r], source, None, None, None, None, None, True)
-
-    cols = ["doc_id", "source", "group_id", "sax", "as_perturbed",
-            "lo", "hi", "suppressed"]
-    out: dict[str, list] = {c: [] for c in cols}
-    for r in rowmap.values():
-        for c, v in zip(cols, r):
-            out[c].append(v)
-    return pd.DataFrame(out)
+        placed += [(r, f"{source}#{kg_idx}", pattern_of_group[m.handle[0]],
+                    glo, ghi)
+                   for m in members for r in sub_rows[m.handle]]
+    suppressed = [r for h in supp_handles for r in h]
+    suppressed += [r for m in unplaced for r in sub_rows[m.handle]]
+    return render(ids, source, sensitive, placed, suppressed)
 
 
 def kp_anonymize_canonical(tokens_df: DataFrame, k: int, p: int, paa: int,
-                           l: int = 1, seed: int = 42,
-                           group_col: str = "source") -> DataFrame:
+                           l: int = 1, seed: int = 42) -> DataFrame:
     """In-memory execution of the canonical order contract — the parity
     twin for :func:`kp_anonymize_distributed` (one Arrow batch per
     source, like ``kp_anonymize``, but with the distributed path's
     deterministic ordering and RNG scoping)."""
-    if k < p:
-        raise ValueError("k must be >= P (reference k_P_anonymity.py:40-44)")
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _anonymize_source_canonical(pdf, k, p, paa, l, seed)
-
-    return tokens_df.groupBy(group_col).applyInPandas(fn, ANON_SCHEMA)
+    return per_source(tokens_df, _anonymize_source_canonical, k, p, paa, l,
+                      seed)
 
 
 # ---------------------------------------------------------------------------
@@ -278,15 +269,14 @@ def kp_anonymize_canonical(tokens_df: DataFrame, k: int, p: int, paa: int,
 
 def _one_source(tokens_src: DataFrame, source: str, k: int, p: int,
                 paa: int, l: int, seed: int,
-                max_level: int = S.MAX_LEVEL,
                 c5_shard_size: int | None = None,
                 c5_exact_max: int = 100_000) -> DataFrame:
     spark = tokens_src.sparkSession
     toks = tokens_src.select("doc_id", "tokens").cache()
-    pats = pattern_arrays(toks, paa, max_level).cache()
+    pats = pattern_arrays(toks, paa).cache()
 
     # ---- C3: global tree (records stay distributed) -------------------
-    leaves = (create_tree_distributed(toks, p, paa, max_level, pats_df=pats)
+    leaves = (create_tree_distributed(toks, p, paa, pats_df=pats)
               .localCheckpoint())
 
     # ---- leaf summaries (ONE leaf-metadata-sized collect) -------------
@@ -419,50 +409,26 @@ def _one_source(tokens_src: DataFrame, source: str, k: int, p: int,
                 .groupBy("pg").agg((F.max("sub") + 1).alias("ns"))
                 .collect()):
             ns_by_pg[r["pg"]] = int(r["ns"])
-    n_subgroups = sum(ns_by_pg.values())
     pattern_of_group = {gi: pat for gi, (pat, _, _, _) in enumerate(pgroups)}
+
+    # pgl order contract: unsplit groups by index, then split products
+    # by (group index, sub index) — the reference's list construction;
+    # idx = off + sub is each subgroup's position in it
+    off_rows, n_subgroups = [], 0
+    for gi in unsplit_gis + oversized:
+        off_rows.append((gi, n_subgroups))
+        n_subgroups += ns_by_pg[gi]
+    env_idx = (env_df.join(F.broadcast(spark.createDataFrame(
+        off_rows, "pg int, off long")), "pg")
+        .withColumn("idx", F.col("off") + F.col("sub")))
 
     # ---- C5 merge: exact (driver greedy over ALL subgroup summaries,
     # O(n_subgroups^2) time — fine to ~1e5) or sharded (the SAME greedy
     # per bounded shard of DFS-adjacent subgroups, inside applyInPandas
     # — driver state stays P-group-metadata-sized) ----------------------
-    use_sharded = n_subgroups > max(c5_exact_max, 0)
-    if not use_sharded:
-        env_rows = env_df.collect()
-        env_map = {(r["pg"], r["sub"]): r for r in env_rows}
-
-        # pgl order contract: unsplit groups by index, then split
-        # products by (group index, sub index) — the reference's list
-        # construction
-        ordered_keys = [(gi, 0) for gi in unsplit_gis]
-        for gi in oversized:
-            subs = sorted(s for (g, s) in env_map if g == gi)
-            ordered_keys.extend((gi, s) for s in subs)
-        ordered_keys = [key for key in ordered_keys if key in env_map]
-
-        t = len(env_map[ordered_keys[0]]["hi"]) if ordered_keys else 1
-        pgl = [C.SubgroupMeta(
-            handle=key,
-            hi=np.asarray(env_map[key]["hi"], np.float64),
-            lo=np.asarray(env_map[key]["lo"], np.float64),
-            n=int(env_map[key]["n"]),
-            phi=np.asarray(env_map[key]["phi"], np.int64),
-            plo=np.asarray(env_map[key]["plo"], np.int64))
-            for key in ordered_keys]
-        gl, unplaced = C.kgroups_from_subgroups(pgl, k, t)
-
-        sub_map_rows = []
-        for kg_idx, members in enumerate(gl):
-            glo = np.minimum.reduce([m.plo for m in members]).tolist()
-            ghi = np.maximum.reduce([m.phi for m in members]).tolist()
-            for rank, m in enumerate(members):
-                gi, si = m.handle
-                sub_map_rows.append((gi, si, kg_idx, rank, glo, ghi))
-        for m in unplaced:
-            gi, si = m.handle
-            sub_map_rows.append((gi, si, -1, 0, None, None))
+    if n_subgroups <= max(c5_exact_max, 0):
         sub_map_df = F.broadcast(spark.createDataFrame(
-            sub_map_rows, _SUBMAP_SCHEMA))
+            _submap_rows(env_idx.toPandas(), k, 0), _SUBMAP_SCHEMA))
     else:
         # shard = a contiguous range of the SAME pgl order (DFS-adjacent
         # subgroups share tree locality, the cheap envelope-locality
@@ -474,51 +440,18 @@ def _one_source(tokens_src: DataFrame, source: str, k: int, p: int,
         # always forms k-groups and attaches leftovers in-shard).
         shard_size = int(c5_shard_size or max(4096, 4 * k))
         shard_size = max(shard_size, k, 2)
-        off_rows, acc = [], 0
-        for gi in unsplit_gis:
-            off_rows.append((gi, acc))
-            acc += 1
-        for gi in oversized:
-            off_rows.append((gi, acc))
-            acc += ns_by_pg[gi]
-        off_df = F.broadcast(spark.createDataFrame(
-            off_rows, "pg int, off long"))
         n_shards = max(1, n_subgroups // shard_size)
         kg_stride = 2 * shard_size   # last shard <= 2*shard_size - 1 subgroups
-        env_idx = (env_df.join(off_df, "pg")
-                   .withColumn("idx", F.col("off") + F.col("sub"))
-                   .withColumn("shard", F.least(
-                       F.floor(F.col("idx") / shard_size),
-                       F.lit(n_shards - 1)).cast("int")))
 
         def shard_kernel(key, pdf):
-            shard = int(key[0])
-            pdf = pdf.sort_values("idx").reset_index(drop=True)
-            t_loc = len(pdf["hi"].iloc[0])
-            pgl_loc = [C.SubgroupMeta(
-                handle=(int(pdf["pg"].iloc[i]), int(pdf["sub"].iloc[i])),
-                hi=np.asarray(pdf["hi"].iloc[i], np.float64),
-                lo=np.asarray(pdf["lo"].iloc[i], np.float64),
-                n=int(pdf["n"].iloc[i]),
-                phi=np.asarray(pdf["phi"].iloc[i], np.int64),
-                plo=np.asarray(pdf["plo"].iloc[i], np.int64))
-                for i in range(len(pdf))]
-            gl_loc, unplaced_loc = C.kgroups_from_subgroups(pgl_loc, k, t_loc)
-            rows = []
-            for local, members in enumerate(gl_loc):
-                glo = np.minimum.reduce([m.plo for m in members]).tolist()
-                ghi = np.maximum.reduce([m.phi for m in members]).tolist()
-                kg = shard * kg_stride + local
-                for rank, m in enumerate(members):
-                    gi, si = m.handle
-                    rows.append((gi, si, kg, rank, glo, ghi))
-            for m in unplaced_loc:   # only when a shard's card < k
-                gi, si = m.handle
-                rows.append((gi, si, -1, 0, None, None))
             return pd.DataFrame(
-                rows, columns=["pg", "sub", "kg", "rank", "glo", "ghi"])
+                _submap_rows(pdf, k, int(key[0]) * kg_stride),
+                columns=["pg", "sub", "kg", "rank", "glo", "ghi"])
 
-        sub_map_df = (env_idx.groupBy("shard")
+        sub_map_df = (env_idx.withColumn("shard", F.least(
+                          F.floor(F.col("idx") / shard_size),
+                          F.lit(n_shards - 1)).cast("int"))
+                      .groupBy("shard")
                       .applyInPandas(shard_kernel, _SUBMAP_SCHEMA))
 
     # ---- common downstream: F9 + render off the subgroup map ----------
@@ -575,15 +508,12 @@ def _one_source(tokens_src: DataFrame, source: str, k: int, p: int,
 
 def kp_anonymize_distributed(tokens_df: DataFrame, k: int, p: int, paa: int,
                              l: int = 1, seed: int = 42,
-                             group_col: str = "source",
-                             max_level: int = S.MAX_LEVEL,
                              max_sources: int = 100,
                              c5_shard_size: int | None = None,
                              c5_exact_max: int = 100_000) -> DataFrame:
     """(k,P)-anonymity with l-diversity, records distributed through
     EVERY phase — the scale path for sources too large for one Arrow
-    batch (``kp_anonymize``'s bound), replacing the semantics-changing
-    ``max_rows_per_split`` pre-split: groups here may span any subset
+    batch (``kp_anonymize``'s bound): groups here may span any subset
     of a source, exactly like the reference's in-memory run.
 
     Output schema and semantics match ``kp_anonymize`` under the
@@ -611,19 +541,19 @@ def kp_anonymize_distributed(tokens_df: DataFrame, k: int, p: int, paa: int,
     if k < p:
         raise ValueError("k must be >= P (reference k_P_anonymity.py:40-44)")
     sources = sorted(r[0] for r in
-                     tokens_df.select(group_col).distinct().collect())
+                     tokens_df.select("source").distinct().collect())
     if len(sources) > max_sources:
         raise ValueError(
             f"kp_anonymize_distributed saw {len(sources)} distinct "
-            f"{group_col!r} values (max_sources={max_sources}). This "
+            f"'source' values (max_sources={max_sources}). This "
             f"operator builds one distributed tree per source and is "
             f"meant for FEW GIANT sources; for many smaller sources "
             f"use kp_anonymize (one applyInPandas task per source), "
             f"or raise max_sources explicitly if you really want a "
             f"{len(sources)}-branch union plan.")
     outs = [_one_source(
-        tokens_df.filter(F.col(group_col) == s).select("doc_id", "tokens"),
-        s, k, p, paa, l, seed, max_level,
+        tokens_df.filter(F.col("source") == s).select("doc_id", "tokens"),
+        s, k, p, paa, l, seed,
         c5_shard_size=c5_shard_size, c5_exact_max=c5_exact_max)
         for s in sources]
     if not outs:

@@ -18,13 +18,10 @@ group/sax/envelope (the " - " rows).
 
 Scale note: one source's records must fit one executor's Arrow batch
 (the same bound the single-node reference has for its whole table).
-For larger sources, pass ``max_rows_per_split``: sources larger than
-that are pre-split by a salted sub-source key (pmod(xxhash64(doc_id),
-ceil(count / max_rows))) and each split is anonymized independently.
-(k,P) guarantees hold because groups never span splits; the cost is
-locally-optimal (slightly coarser) groupings, the standard
-partition-then-anonymize trade. Split counts derive from a broadcast
-per-source count, so the only extra cost is one small aggregate.
+A source too big for one task goes to
+``operators.anonymize_dist.kp_anonymize_distributed``, which keeps
+reference semantics (groups may span the whole source) with records
+distributed through every phase.
 """
 
 from __future__ import annotations
@@ -32,7 +29,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import clustering as C
@@ -49,24 +45,56 @@ ANON_SCHEMA = T.StructType([
 ])
 
 
+def source_arrays(pdf: pd.DataFrame):
+    """``(source, ids, values, sensitive)`` of one source, rows sorted by
+    ``doc_id`` so results do not depend on partition layout (SURVEY.md
+    §4.3). ``values`` is the series; ``sensitive`` maps row -> last token.
+    """
+    source = pdf["source"].iloc[0]
+    pdf = pdf.sort_values("doc_id").reset_index(drop=True)
+    mat = np.stack(pdf["tokens"].to_numpy()).astype(np.float64)
+    sensitive = {i: int(mat[i, -1]) for i in range(len(mat))}
+    return source, pdf["doc_id"].tolist(), mat[:, :-1], sensitive
+
+
+def render(ids: list, source: str, sensitive: dict, placed,
+           suppressed) -> pd.DataFrame:
+    """ANON_SCHEMA rows from ``placed`` ``(row, group_id, sax, lo, hi)``
+    in k-group order, then ``suppressed`` rows. The LAST placement of a
+    row wins and suppression overwrites it: the reference's bottom-up
+    can duplicate an id across k-groups, and its renderer dedupes
+    exactly this way (anonymized_dataset.py:22-50).
+    """
+    rowmap: dict[int, tuple] = {}
+    for r, gid, sax, lo, hi in placed:
+        rowmap[r] = (ids[r], source, gid, sax, sensitive[r], lo, hi, False)
+    for r in suppressed:
+        rowmap[r] = (ids[r], source, None, None, None, None, None, True)
+    cols = ANON_SCHEMA.fieldNames()
+    out: dict[str, list] = {c: [] for c in cols}
+    for row in rowmap.values():
+        for c, v in zip(cols, row):
+            out[c].append(v)
+    return pd.DataFrame(out)
+
+
+def per_source(tokens_df: DataFrame, kernel, k: int, p: int,
+               *args) -> DataFrame:
+    """``kernel(pdf, k, p, *args)`` once per ``source`` (one Arrow batch
+    each), emitting ANON_SCHEMA."""
+    if k < p:
+        raise ValueError("k must be >= P (reference k_P_anonymity.py:40-44)")
+
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        return kernel(pdf, k, p, *args)
+
+    return tokens_df.groupBy("source").applyInPandas(fn, ANON_SCHEMA)
+
+
 def _anonymize_source(pdf: pd.DataFrame, k: int, p: int, paa: int, l: int,
                       algorithm: str, seed: int) -> pd.DataFrame:
-    source = pdf["source"].iloc[0]
-    # pre-split path: scope the RNG seed and group ids to the split so
-    # sub-sources are independent, reproducible units
-    scope = source
-    if "_split" in pdf.columns:
-        scope = f"{source}~{int(pdf['_split'].iloc[0])}"
-        pdf = pdf.drop(columns=["_split"])
-    # canonical row order: results must not depend on partition layout
-    # (SURVEY.md §4.3 — sort within group before any greedy scan)
-    pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-    ids = pdf["doc_id"].tolist()
-    mat = np.stack(pdf["tokens"].to_numpy()).astype(np.float64)
-    values = mat[:, :-1]          # series (QI attributes)
-    sensitive = {i: int(mat[i, -1]) for i in range(len(mat))}
-
-    rnd = C.NumpyRandomSource(C.stable_seed(seed, scope))
+    source, ids, values, sensitive = source_arrays(pdf)
+    rnd = C.NumpyRandomSource(C.stable_seed(seed, source))
     rows = list(range(len(values)))
 
     suppressed_rows: list[list[int]] = []
@@ -98,77 +126,31 @@ def _anonymize_source(pdf: pd.DataFrame, k: int, p: int, paa: int, l: int,
 
     C.enforce_l_diversity(patterns, sensitive, k_groups, l, rnd)
 
-    # one output row per record, LAST group wins for records the greedy
-    # merge placed in more than one k-group — the reference's bottom-up
-    # can duplicate an id across GL groups (a quirk our kernel
-    # replicates for parity) and its renderer dedupes exactly this way:
-    # final_data_anonymized[key] is overwritten per group in GL order,
-    # suppressed groups overwrite last (anonymized_dataset.py:22-50).
-    # Group envelopes are computed from the FULL member list (including
-    # duplicated members), before the dedup — also reference-exact.
-    rowmap: dict[int, tuple] = {}
+    # group envelopes come from the FULL member list (including
+    # duplicated members), before the renderer's dedup — reference-exact
+    placed = []
     for gi, grp in enumerate(k_groups):
         glo = values[grp].min(axis=0).astype(np.int64)
         ghi = values[grp].max(axis=0).astype(np.int64)
-        for r in grp:
-            rowmap[r] = (ids[r], source, f"{scope}#{gi}", patterns.get(r),
-                         sensitive[r], glo, ghi, False)
-    for grp in suppressed_rows:
-        for r in grp:
-            rowmap[r] = (ids[r], source, None, None, None, None, None, True)
-    cols = ["doc_id", "source", "group_id", "sax", "as_perturbed",
-            "lo", "hi", "suppressed"]
-    out: dict[str, list] = {c: [] for c in cols}
-    for r in rowmap.values():
-        for c, v in zip(cols, r):
-            out[c].append(v)
-    return pd.DataFrame(out)
+        placed += [(r, f"{source}#{gi}", patterns.get(r), glo, ghi)
+                   for r in grp]
+    return render(ids, source, sensitive, placed,
+                  [r for grp in suppressed_rows for r in grp])
 
 
 def kp_anonymize(tokens_df: DataFrame, k: int, p: int, paa: int, l: int = 1,
-                 algorithm: str = "kapra", seed: int = 42,
-                 group_col: str = "source",
-                 max_rows_per_split: int | None = None) -> DataFrame:
+                 algorithm: str = "kapra", seed: int = 42) -> DataFrame:
     """(k,P)-anonymity with l-diversity per ``source``.
 
     Equivalent CLI in the reference:
     ``python k_P_anonymity.py <algorithm> <k> <P> <paa> <l> <csv>``
     (k_P_anonymity.py:28-56), one run per source table.
 
-    ``max_rows_per_split`` bounds the rows any single applyInPandas
-    task sees: sources above the bound are salted into
-    ceil(count / max_rows_per_split) deterministic sub-sources (split
-    assignment = pmod(xxhash64(doc_id), n_splits), independent of
-    partition layout) and anonymized independently. This removes the
-    one-hot-source = one-Arrow-batch scale bound; (k,P)/l guarantees
-    hold per split because groups never span splits — groupings are
-    locally rather than globally optimal. For giant sources where that
-    semantic trade is unacceptable, use
+    Each source is one applyInPandas task, so one source's records must
+    fit one Arrow batch. A source too big for one task goes to
     ``operators.anonymize_dist.kp_anonymize_distributed``, which keeps
     reference semantics (groups span the source) with records
     distributed through every phase.
     """
-    if k < p:
-        raise ValueError("k must be >= P (reference k_P_anonymity.py:40-44)")
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _anonymize_source(pdf, k, p, paa, l, algorithm, seed)
-
-    if max_rows_per_split is None:
-        return tokens_df.groupBy(group_col).applyInPandas(fn, ANON_SCHEMA)
-
-    if max_rows_per_split < 4 * k:
-        raise ValueError(
-            "max_rows_per_split should be >= 4*k so every split can "
-            "form multiple k-groups")
-    counts = tokens_df.groupBy(group_col).agg(F.count("*").alias("_cnt"))
-    n_splits = F.greatest(
-        F.lit(1),
-        F.ceil(F.col("_cnt") / F.lit(max_rows_per_split))).cast("int")
-    salted = (tokens_df
-              .join(F.broadcast(counts), group_col)
-              .withColumn("_split",
-                          F.pmod(F.xxhash64("doc_id"), n_splits).cast("int"))
-              .drop("_cnt"))
-    return (salted.groupBy(group_col, "_split")
-            .applyInPandas(fn, ANON_SCHEMA))
+    return per_source(tokens_df, _anonymize_source, k, p, paa, l,
+                      algorithm, seed)

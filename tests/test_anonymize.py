@@ -104,6 +104,48 @@ def test_pattern_loss_runs(spark, tokens):
     assert 0.0 <= row["avg_pattern_loss"] <= 1.0
 
 
+def test_pattern_loss_per_record_matches_scalar(spark):
+    """Every record of the batched PL (grouped by series length and SAX
+    width) equals the scalar reference ``metrics.pattern_loss``: two
+    series lengths, SAX widths 3/4/6, alphabet sizes 1-6, and constant
+    series for the z-normalization threshold."""
+    from kapra_spark.operators.metrics_ops import pattern_loss_per_record
+
+    rng = np.random.default_rng(5)
+    toks, saxes = [], []
+    for i in range(144):
+        n, width, asize = (12, 20)[i % 2], (3, 4, 6)[i % 3], 1 + i // 24
+        series = (np.full(n, 7) if i % 11 == 0
+                  else rng.integers(-40, 100, n))
+        toks.append((f"d{i:03d}", series.tolist() + [int(i)]))
+        saxes.append((f"d{i:03d}",
+                      "".join(chr(97 + c)
+                              for c in rng.integers(0, asize, width))))
+    tokens = spark.createDataFrame(toks, "doc_id string, tokens array<int>")
+    anon = spark.createDataFrame(saxes, "doc_id string, sax string")
+    got = {r["doc_id"]: r["pl"]
+           for r in pattern_loss_per_record(tokens, anon).collect()}
+    assert len(got) == len(toks)
+    for (doc, t), (_, sax) in zip(toks, saxes):
+        expect = M.pattern_loss(np.asarray(t[:-1]), sax, len(sax))
+        assert abs(got[doc] - expect) <= 1e-12, (doc, sax)
+
+
+def test_envelope_metrics_equal_row_level():
+    """VL and NCP from ``envelope`` summaries (what C5 merges on) equal
+    the row-level metrics bit for bit, negative values included."""
+    rng = np.random.default_rng(9)
+    for _ in range(50):
+        m = rng.integers(-30, 60, (rng.integers(1, 9), rng.integers(2, 17)))
+        g = np.vstack([m, rng.integers(-30, 60, (3, m.shape[1]))])
+        g[:, 0] = 5                       # one zero-width global column
+        m[:, 0] = 5
+        hi, lo, n = M.envelope(m)
+        assert M.value_loss_env(hi, lo, n) == M.value_loss(m)
+        assert (M.ncp_env(hi, lo, n, g.max(axis=0), g.min(axis=0))
+                == M.ncp(m, g.max(axis=0), g.min(axis=0)))
+
+
 def test_l_diversity_guarantee(anon_kapra):
     """after perturbation every P-subgroup's dominant sensitive value
     has frequency <= 1/L (the reference enforces <= |PS_R|/l via
@@ -149,51 +191,6 @@ def test_csv_compat_roundtrip(spark, tmp_path, tokens):
         spark, "/root/reference/data/sales_transactions_dataset_weekly.csv")
     r = wide.limit(1).collect()[0]
     assert len(r.tokens) == 52 and r.n_tok == 52
-
-
-# ---------------------------------------------------------------------------
-# salted sub-source pre-split (hot-source scale bound)
-# ---------------------------------------------------------------------------
-
-def test_presplit_hot_source(spark):
-    """A source bigger than max_rows_per_split is salted into
-    independent sub-sources; (k,P) invariants hold per split and the
-    result is partition-layout independent."""
-    pdf = datagen.tokens_pdf(600, n_tok=13, seed=17, gap_fraction=0.0)
-    pdf["source"] = "hot"  # one giant source
-    tokens = spark.createDataFrame(pdf, schema=datagen.TOKENS_SCHEMA)
-
-    anon = kp_anonymize(tokens, k=K, p=P, paa=PAA, l=L, algorithm="kapra",
-                        max_rows_per_split=150).toPandas()
-
-    # partition property: every input row exactly once
-    assert sorted(anon["doc_id"]) == sorted(pdf["doc_id"])
-
-    grouped = anon[~anon["suppressed"]]
-    # multiple splits actually created (600 rows / 150 -> 4 salted splits)
-    splits = grouped["group_id"].str.extract(r"^(hot~\d+)#")[0]
-    assert splits.nunique() >= 2
-    # k-guarantee per group, P-guarantee per (group, sax)
-    sizes = grouped.groupby("group_id").size()
-    assert (sizes >= K).all(), sizes[sizes < K]
-    psub = grouped.groupby(["group_id", "sax"]).size()
-    assert (psub >= P).all(), psub[psub < P]
-
-    # deterministic under a different physical layout
-    anon2 = kp_anonymize(tokens.repartition(13), k=K, p=P, paa=PAA, l=L,
-                         algorithm="kapra", max_rows_per_split=150).toPandas()
-    a = anon.sort_values("doc_id").reset_index(drop=True)
-    b = anon2.sort_values("doc_id").reset_index(drop=True)
-    assert (a["group_id"].fillna("") == b["group_id"].fillna("")).all()
-    assert (a["sax"].fillna("") == b["sax"].fillna("")).all()
-
-
-def test_presplit_guard(spark):
-    pdf = datagen.tokens_pdf(50, n_tok=13, seed=17, gap_fraction=0.0)
-    tokens = spark.createDataFrame(pdf, schema=datagen.TOKENS_SCHEMA)
-    with pytest.raises(ValueError):
-        kp_anonymize(tokens, k=K, p=P, paa=PAA, l=L,
-                     max_rows_per_split=K)  # < 4*k
 
 
 def test_experiment_grid(spark, tokens, tmp_path):
