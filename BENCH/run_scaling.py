@@ -134,13 +134,11 @@ def trial(cpus: int, tokens_path: str, reps: int = REPS
     tokens = spark.read.parquet(tokens_path)
     tokens.count()
 
-    from kapra_spark.operators.compress import compress_and_cascade
-
     warm = tokens.limit(50_000).cache()
     warm.count()
     compress_tokens(warm).agg(F.sum(F.length("payload"))).collect()
     R.cascade_fast(warm, tiers=("1h", "1d")).groupBy("tier").count().collect()
-    compress_and_cascade(warm).groupBy("kind").count().collect()
+    R.series_kernel(warm, ("blocks", "1h", "1d")).agg(F.sum(F.size("blocks"))).collect()
     R.cascade(warm)["1d"].count()
     warm.unpersist()
 
@@ -169,8 +167,8 @@ def trial(cpus: int, tokens_path: str, reps: int = REPS
 
         if "fused" in PATHS:
             t0 = time.time()
-            compress_and_cascade(tokens).agg(
-                F.count("*"), F.sum(F.length("payload"))).collect()
+            R.series_kernel(tokens, ("blocks", "1h", "1d")).agg(
+                F.count("*"), F.sum(F.size("blocks"))).collect()
             fuseds.append(round(time.time() - t0, 2))
 
         if "long" in PATHS:

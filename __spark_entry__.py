@@ -493,18 +493,23 @@ def q_sax_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_fused_production(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fused single-pass production operator (blocks + 1h/1d tiers from
-    one scan): per-kind row counts over the deterministic tokens table.
-    Exact equality with the two-pass composition is pinned in
+    """Production kernel pass (Gorilla blocks + 1h/1d tiers from one
+    scan, one nested row per series): per-kind row counts, i.e. the
+    summed list lengths of the ``blocks``, ``t_1h`` and ``t_1d``
+    columns, over the deterministic tokens table. The kernel's
+    compress_tokens and cascade_fast projections are digest-pinned in
     tests/test_compress.py; the counts pin it to the driver."""
     from kapra_spark import datagen
-    from kapra_spark.operators.compress import compress_and_cascade
+    from kapra_spark.operators.rollup import series_kernel
 
     tokens = datagen.tokens_df(spark, 300, n_tok=144, seed=42)
-    fused = compress_and_cascade(tokens, tiers=("1h", "1d"))
-    return (fused
-            .groupBy(F.coalesce("tier", F.lit("blocks")).alias("kind"))
-            .agg(F.count("*").alias("cnt"))
+    kernel = series_kernel(tokens, ("blocks", "1h", "1d"))
+    kinds = F.explode(F.array(*(
+        F.struct(F.lit(kind).alias("kind"), F.size(col).alias("rows"))
+        for kind, col in (("blocks", "blocks"), ("1h", "t_1h"), ("1d", "t_1d")))))
+    return (kernel.select(kinds.alias("e"))
+            .groupBy("e.kind")
+            .agg(F.sum("e.rows").alias("cnt"))
             .orderBy("kind"))
 
 

@@ -172,14 +172,11 @@ def main() -> None:
 
     timed("tokens_compress_plus_rollup", q_prod)
 
-    # q2c: FUSED production path — blocks + tiers in ONE scan/Arrow pass
-    from kapra_spark.operators.compress import compress_and_cascade
-
+    # q2c: FUSED production path — blocks + tiers in ONE scan/Arrow
+    # pass, one nested row per series
     def q_fused():
-        fused = compress_and_cascade(tokens, tiers=("1h", "1d"))
-        fused.groupBy("kind").agg(
-            F.count("*").alias("rows"),
-            F.sum(F.length("payload")).alias("bytes")).collect()
+        R.series_kernel(tokens, ("blocks", "1h", "1d")).agg(
+            *(F.sum(F.size(c)) for c in ("blocks", "t_1h", "t_1d"))).collect()
 
     timed("tokens_production_fused", q_fused)
 

@@ -50,8 +50,7 @@ def main() -> None:
 
     import __spark_entry__ as E
     from kapra_spark.operators import rollup as R
-    from kapra_spark.operators.compress import (compress_and_cascade,
-                                                compress_tokens)
+    from kapra_spark.operators.compress import compress_tokens
 
     tokens = spark.read.parquet(tokens_path)
     tokens.limit(1000).mapInPandas(lambda it: it, tokens.schema).count()
@@ -68,8 +67,8 @@ def main() -> None:
             .groupBy("tier").count().collect(),
         "cascade_longform_1d_count": lambda: R.cascade(tokens)["1d"].count(),
         "compress_noop": lambda: noop(compress_tokens(tokens)),
-        "fused_noop": lambda: noop(compress_and_cascade(tokens,
-                                                        tiers=("1h", "1d"))),
+        "fused_noop": lambda: noop(R.series_kernel(tokens,
+                                                   ("blocks", "1h", "1d"))),
         # identity pass: bounds the JVM->Python->JVM transfer cost of
         # the tokens table itself (no kernel work at all)
         "tokens_identity_arrow": lambda: noop(

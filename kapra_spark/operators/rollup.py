@@ -19,14 +19,17 @@ Scale design (the part that matters at 10^12 sequences):
   ``repartition(source, doc_id)`` that the LOCF window and every tier
   groupBy reuse — ::test_single_shuffle_plan); it is the independent
   implementation backing the parity certificates.
-- One kernel layer serves every tokens operator: :func:`series_batches`
-  is the only Arrow-batch adapter (NumPy matrices per run of equal
-  ``n_tok``), :func:`tier_columns` the only cascade kernel, and
-  ``compress.block_columns`` the only Gorilla block encoder.
-  :func:`cascade_fast`, :func:`cascade`, ``compress_tokens`` and
-  ``compress_and_cascade`` are compositions of them — zero shuffles,
-  linear scan, exact integer arithmetic (token-array equality is
-  preserved end-to-end).
+- ONE kernel serves every tokens write operator: :func:`series_kernel`
+  is a single ``mapInArrow`` runner that emits one nested row per
+  series — ``(doc_id, source, blocks, t_1m, t_1h, t_1d)``, any subset
+  of the list columns — built on :func:`series_batches` (the only
+  Arrow-batch adapter: NumPy matrices per run of equal ``n_tok``),
+  :func:`_tier_reduce` and ``gorilla.encode_batch_arrow``.
+  :func:`cascade_fast`, :func:`cascade`, ``compress.compress_tokens``
+  and the pipeline's three tables are JVM-side ``inline`` projections
+  of it — zero shuffles, linear scan, exact integer arithmetic
+  (token-array equality is preserved end-to-end), each string shipped
+  across the Arrow boundary once per series.
 - first/last use min_by/max_by on the bucket/position, not
   order-dependent ``first()``, so results are partition-layout
   independent.
@@ -40,6 +43,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
+
+from ..functions import gorilla
 
 EPOCH = "2024-01-01 00:00:00"
 EPOCH_SECONDS = 1704067200  # 2024-01-01T00:00:00Z
@@ -219,13 +224,11 @@ def cascade_declarative(tokens_df: DataFrame,
 
 
 # ---------------------------------------------------------------------------
-# tokens kernel layer: zero-shuffle mapInArrow cascade
+# tokens kernel: one zero-shuffle mapInArrow runner, one row per series
 # ---------------------------------------------------------------------------
 
-CASCADE_SCHEMA = T.StructType([
-    T.StructField("tier", T.StringType(), False),
-    T.StructField("source", T.StringType(), False),
-    T.StructField("doc_id", T.StringType(), False),
+#: one bucket of one tier: re-aggregable count/sum/min/max/first/last
+TIER_ROW = T.StructType([
     T.StructField("bucket", T.LongType(), False),  # epoch seconds
     T.StructField("cnt", T.LongType(), False),
     T.StructField("sum", T.LongType(), True),
@@ -236,42 +239,33 @@ CASCADE_SCHEMA = T.StructType([
     T.StructField("n_filled", T.LongType(), False),
 ])
 
+#: one Gorilla-compressed block: a series' points in one UTC day
+BLOCK_ROW = T.StructType([
+    T.StructField("bucket_day", T.DateType(), False),
+    T.StructField("t0", T.LongType(), False),
+    T.StructField("v0", T.LongType(), False),
+    T.StructField("n", T.IntegerType(), False),
+    T.StructField("payload", T.BinaryType(), True),
+])
+
+#: points per UTC-day block at 1-minute grain
+DAY_POINTS = 1440
+
 
 def rows_matrix(flat: np.ndarray, offsets: np.ndarray, idx: np.ndarray,
-                nt: int, dtype=np.int64) -> np.ndarray:
+                nt: int) -> np.ndarray:
     """Gather rows ``idx`` (each ``nt`` long) from a ListArray's flat
-    values into a (len(idx), nt) matrix of ``dtype`` (``None`` keeps
-    the native element type — the LOCF/tier kernels consume int32
-    directly, skipping a full-matrix widening copy; Gorilla needs
-    int64 for sign-extended XOR). When the selected rows are contiguous
-    and uniformly strided (the common one-n_tok-per-batch case) this is
-    a zero-copy reshape — a VIEW of the Arrow buffer when no widening
-    is needed — instead of a fancy-index gather (~7x less memory
-    traffic, now zero)."""
+    values into a (len(idx), nt) matrix of their native element type
+    (the LOCF/tier kernels consume int32 directly; the Gorilla encoder
+    widens its own copy). When the selected rows are contiguous and
+    uniformly strided (the common one-n_tok-per-batch case) this is a
+    zero-copy VIEW of the Arrow buffer instead of a fancy-index gather.
+    Consumers only read it, never mutate."""
     starts = offsets[idx]
     if len(starts) > 0 and np.all(np.diff(starts) == nt):
         base = int(starts[0])
-        # copy=False: a true zero-copy VIEW of the Arrow buffer when
-        # the dtype already matches — downstream consumers (_locf_2d,
-        # encode_batch) only read, never mutate
-        m = flat[base:base + len(starts) * nt].reshape(len(starts), nt)
-    else:
-        m = flat[starts[:, None] + np.arange(nt)[None, :]]
-    return m if dtype is None else m.astype(dtype, copy=False)
-
-
-def arrow_schema(schema: T.StructType) -> pa.Schema:
-    """The Arrow schema of the batches a mapInArrow runner yields for
-    the Spark ``schema`` it declares."""
-    return pa.schema([(f.name, to_arrow_type(f.dataType)) for f in schema])
-
-
-def const_str(value: str, n: int) -> pa.Array:
-    """Constant string column of length n without building n Python
-    objects (dictionary-encode then cast)."""
-    return pa.DictionaryArray.from_arrays(
-        pa.array(np.zeros(n, dtype=np.int32)),
-        pa.array([value])).cast(pa.string())
+        return flat[base:base + len(starts) * nt].reshape(len(starts), nt)
+    return flat[starts[:, None] + np.arange(nt)[None, :]]
 
 
 def series_batches(batches):
@@ -296,8 +290,7 @@ def series_batches(batches):
         flat = col.values.to_numpy(zero_copy_only=False)
         for nt in np.unique(n_tok):
             idx = np.nonzero(n_tok == nt)[0]
-            yield c_doc, c_src, idx, rows_matrix(flat, offsets, idx, int(nt),
-                                                 dtype=None)
+            yield c_doc, c_src, idx, rows_matrix(flat, offsets, idx, int(nt))
 
 
 def _locf_2d(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -382,49 +375,120 @@ def _tier_reduce(filled: np.ndarray, fmask: np.ndarray, mins: int):
             nfil[rr, bb])
 
 
-def tier_columns(idx: np.ndarray, vals: np.ndarray, tiers: tuple[str, ...]):
-    """The cascade kernel for one run of equal-length series: LOCF once,
-    then per tier yield ``(tier, take, columns)``: the Arrow row
-    indices into the input batch, and the ``bucket`` (epoch seconds)
-    through ``n_filled`` columns of :data:`CASCADE_SCHEMA`."""
-    filled, fmask = _locf_2d(vals)
-    for tier in tiers:
-        mins = TIERS[tier]
-        rr, bb, *aggs = _tier_reduce(filled, fmask, mins)
-        bucket = EPOCH_SECONDS + bb.astype(np.int64, copy=False) * mins * 60
-        yield (tier, pa.array(idx[rr], type=pa.int64()),
-               [pa.array(a) for a in (bucket, *aggs)])
+def _list_column(offsets: np.ndarray, fields: list, list_type: pa.DataType):
+    """One list-of-struct column: row i holds the structs
+    ``offsets[i]:offsets[i + 1]`` of the flat ``fields`` arrays."""
+    values = pa.StructArray.from_arrays(fields, fields=list(list_type.value_type))
+    return pa.ListArray.from_arrays(pa.array(offsets, type=pa.int32()), values,
+                                    type=list_type)
+
+
+def _tier_list(filled: np.ndarray, fmask: np.ndarray, tier: str,
+               list_type: pa.DataType):
+    """Each row's buckets of ``tier`` in order (:data:`TIER_ROW`)."""
+    mins = TIERS[tier]
+    rr, bb, *aggs = _tier_reduce(filled, fmask, mins)
+    bucket = EPOCH_SECONDS + bb.astype(np.int64, copy=False) * mins * 60
+    # rr is row-major sorted: row i owns the flat run searchsorted(rr, i)
+    return _list_column(np.searchsorted(rr, np.arange(len(filled) + 1)),
+                        [pa.array(a) for a in (bucket, *aggs)], list_type)
+
+
+def _block_list(vals: np.ndarray, list_type: pa.DataType):
+    """Each row's Gorilla blocks, one per UTC day in order
+    (:data:`BLOCK_ROW`): widen to int64 (sign-extended XOR), then
+    encode day d of every row in one batch."""
+    vals = vals.astype(np.int64, copy=False)
+    rows, nt = vals.shape
+    enc, days = [], []
+    for s in range(0, nt, DAY_POINTS):
+        ts = EPOCH_SECONDS + np.arange(s, min(s + DAY_POINTS, nt), dtype=np.int64) * 60
+        enc.append(gorilla.encode_batch_arrow(
+            np.broadcast_to(ts, (rows, len(ts))), vals[:, s:s + DAY_POINTS]))
+        days.append(ts[0] // 86400)
+    if not enc:  # an empty series has no blocks
+        return pa.array([[]] * rows, type=list_type)
+    # encoded day-major; each row lists its own days in order
+    t0, v0, n = (np.column_stack([x[i] for x in enc]).ravel() for i in range(3))
+    payload = enc[0][3] if len(enc) == 1 else pa.concat_arrays(
+        [x[3] for x in enc]).take(np.arange(len(t0)).reshape(-1, rows).T.ravel())
+    return _list_column(np.arange(rows + 1) * len(enc),
+                        [pa.array(np.tile(np.int32(days), rows), type=pa.date32()),
+                         pa.array(t0), pa.array(v0),
+                         pa.array(n.astype(np.int32)), payload],
+                        list_type)
+
+
+def series_kernel(tokens_df: DataFrame, outputs: tuple[str, ...]) -> DataFrame:
+    """THE tokens kernel: one narrow mapInArrow pass (no shuffle: each
+    input row carries its whole series) emitting ONE row per series,
+    ``(doc_id, source, <one list column per output>)``. ``outputs`` is
+    drawn from ``"blocks"`` (column ``blocks``, the Gorilla day-blocks
+    as :data:`BLOCK_ROW` structs) and the :data:`TIERS` (column
+    ``t_<tier>``, the tier's buckets as :data:`TIER_ROW` structs). Each
+    string crosses the Arrow boundary once per series, and no column is
+    null-padded. Every tokens write operator is a JVM-side ``inline``
+    projection of this frame."""
+    schema = T.StructType(
+        [T.StructField("doc_id", T.StringType(), False),
+         T.StructField("source", T.StringType(), False)]
+        + [T.StructField("blocks", T.ArrayType(BLOCK_ROW, False), False)
+           if o == "blocks" else
+           T.StructField(f"t_{o}", T.ArrayType(TIER_ROW, False), False)
+           for o in outputs])
+    arrow = pa.schema([(f.name, to_arrow_type(f.dataType)) for f in schema])
+    has_tiers = any(o != "blocks" for o in outputs)
+
+    def run(batches):
+        for c_doc, c_src, idx, vals in series_batches(batches):
+            take = pa.array(idx, type=pa.int64())
+            locf = _locf_2d(vals) if has_tiers else None
+            yield pa.RecordBatch.from_arrays(
+                [c_doc.take(take), c_src.take(take)]
+                + [_block_list(vals, t) if o == "blocks" else
+                   _tier_list(*locf, o, t)
+                   for o, t in zip(outputs, arrow.types[2:])],
+                schema=arrow)
+
+    return tokens_df.mapInArrow(run, schema)
+
+
+def blocks_rows(kernel: DataFrame) -> DataFrame:
+    """``compress_tokens``' rows from a :func:`series_kernel` frame."""
+    return kernel.select("doc_id", "source", F.lit("1m").alias("tier"),
+                         F.inline("blocks"))
+
+
+def tier_rows(kernel: DataFrame, tier: str) -> DataFrame:
+    """One tier's ``(source, doc_id, bucket, cnt, ..., n_filled)`` rows
+    from a :func:`series_kernel` frame (bucket as epoch seconds)."""
+    return kernel.select("source", "doc_id", F.inline(f"t_{tier}"))
 
 
 def cascade_fast(tokens_df: DataFrame,
                  tiers: tuple[str, ...] = ("1m", "1h", "1d")) -> DataFrame:
-    """All tiers in ONE narrow mapInArrow pass (no shuffle at all):
-    each input row carries its whole series, so every bucket of every
-    tier is computable locally. Output: union of tiers, tagged by
-    ``tier``; bucket as epoch seconds. Integer-exact. String columns
-    are gathered with Arrow ``take`` — no Python objects anywhere."""
-    schema = arrow_schema(CASCADE_SCHEMA)
-
-    def run(batches):
-        for c_doc, c_src, idx, vals in series_batches(batches):
-            for tier, take, cols in tier_columns(idx, vals, tiers):
-                yield pa.RecordBatch.from_arrays(
-                    [const_str(tier, len(take)), c_src.take(take),
-                     c_doc.take(take), *cols], schema=schema)
-
-    return tokens_df.mapInArrow(run, CASCADE_SCHEMA)
+    """All tiers from ONE kernel pass (no shuffle at all), as the union
+    of tiers tagged by ``tier``; bucket as epoch seconds. Integer-exact.
+    One row per series crosses the boundary; the tiers are exploded and
+    inlined on the JVM side."""
+    per_tier = F.explode(F.array(*(
+        F.struct(F.lit(t).alias("tier"), F.col(f"t_{t}").alias("rows"))
+        for t in tiers)))
+    return (series_kernel(tokens_df, tiers)
+            .select("source", "doc_id", per_tier.alias("e"))
+            .select("e.tier", "source", "doc_id", F.inline("e.rows")))
 
 
 def cascade(tokens_df: DataFrame,
             tiers: tuple[str, ...] = ("1m", "1h", "1d")) -> dict[str, DataFrame]:
     """tokens table -> {tier: rollup DataFrame}, ZERO shuffles: each
-    tier is :func:`cascade_fast` over that tier alone, with ``bucket``
-    as a timestamp — no explode, no window sort, no per-point hash
-    aggregate, no Exchange (guide §2.4/§4.2). Results are identical to
-    :func:`cascade_declarative` (pytest-pinned, and each tier equals
-    the DuckDB long-form oracle); materializing only the 1d tier does
-    not pay for the 1m tier."""
-    return {tier: cascade_fast(tokens_df, tiers=(tier,)).select(
+    tier is its own :func:`series_kernel` pass over that tier alone,
+    with ``bucket`` as a timestamp — no per-point explode, no window
+    sort, no per-point hash aggregate, no Exchange (guide §2.4/§4.2).
+    Results are identical to :func:`cascade_declarative`
+    (pytest-pinned, and each tier equals the DuckDB long-form oracle);
+    materializing only the 1d tier does not pay for the 1m tier."""
+    return {tier: tier_rows(series_kernel(tokens_df, (tier,)), tier).select(
                 "source", "doc_id",
                 F.timestamp_seconds("bucket").alias("bucket"), *_AGGS)
             for tier in tiers}

@@ -25,8 +25,7 @@ def main() -> None:
 
     import __spark_entry__ as E
     from kapra_spark.operators import rollup as R
-    from kapra_spark.operators.compress import (compress_and_cascade,
-                                                compress_tokens)
+    from kapra_spark.operators.compress import compress_tokens
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     tokens_path = os.path.join(here, ".bench_data", "tokens_100000_144_f1")
@@ -36,8 +35,8 @@ def main() -> None:
         "tokens_cascade_fast": R.cascade_fast(tokens),
         "tokens_cascade_longform_1d": R.cascade(tokens)["1d"],
         "tokens_compress": compress_tokens(tokens),
-        "tokens_production_fused": compress_and_cascade(tokens,
-                                                        tiers=("1h", "1d")),
+        "tokens_production_fused": R.series_kernel(tokens,
+                                                   ("blocks", "1h", "1d")),
         "events_rollup_1h": E.q_rollup_1h_events(spark, sf_dir),
         "events_gapfill_locf": E.q_gapfill_locf_events(spark, sf_dir),
         "envelope_groups": E.q_envelope_groups(spark, sf_dir),

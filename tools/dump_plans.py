@@ -69,8 +69,10 @@ def main() -> None:
     ok &= add("cascade 1d (production, r6) — ZERO shuffle, kernel tier pass",
               d1,
               [("no Exchange in the plan", count(p, "Exchange") == 0),
-               ("no Sort / Window / Generate (no explode-and-window)",
-                count(p, "Sort|Window|Generate") == 0),
+               ("no Sort / Window (no explode-and-window)",
+                count(p, "Sort|Window") == 0),
+               ("one Generate: the inline of the kernel's per-series row",
+                count(p, "Generate") == 1 and "inline(" in p),
                ("one Arrow eval over the scan",
                 count(p, "MapInArrow|ArrowEval|PythonMapInArrow") >= 1)],
               lambda s: s[:1200])
