@@ -1057,12 +1057,47 @@ def q_media_features_mjpg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _digest(flat, ["media_id", "kind", "n_bytes", "feat_s"])
 
 
+def _tree_order_mismatch(res, pdf, p: int, paa: int) -> int:
+    """Leaves of ``res`` (``create_tree_distributed`` output) whose
+    label, level, pattern, members or ``order_key`` position differ
+    from the in-memory kernel ``clustering.split_node(canonical=True)``
+    run on the doc-sorted rows: the comparison
+    tests/test_tree_dist.py::test_tree_dist_order_contract makes,
+    counted per leaf position within each label class."""
+    import numpy as np
+
+    from kapra_spark.functions import clustering as C
+    from kapra_spark.functions import sax as S
+
+    pdf = pdf.sort_values("doc_id").reset_index(drop=True)
+    mat = np.stack(pdf["tokens"].to_numpy()).astype(np.float64)[:, :-1]
+    good, bad = [], []
+    C.split_node(mat, list(range(len(mat))), 1, "a" * paa, p, paa,
+                 S.MAX_LEVEL, good, bad, canonical=True)
+    ids = list(pdf["doc_id"])
+    n = 0
+    for label, leaves in (("good-leaf", good), ("bad-leaf", bad)):
+        exp = [(l.level, l.pattern, frozenset(ids[r] for r in l.rows))
+               for l in leaves]
+        got = [x[1:] for x in sorted(
+            (okey, int(level), pattern, frozenset(grp["doc_id"]))
+            for (_, level, pattern, okey), grp in res[res["label"] == label]
+            .groupby(["leaf_id", "level", "pattern", "order_key"]))]
+        n += (sum(a != b for a, b in zip(got, exp))
+              + abs(len(got) - len(exp)))
+    return n
+
+
 def q_tree_dist_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C3(ii) distributed create-tree as a driver-checkable constant:
-    build the pattern tree with the BFS driver-loop operator AND the
-    in-memory recursive kernel on the same deterministic table, and
-    count disagreements (computed in-query — the oracle pins them at
-    zero, plus the leaf/row totals)."""
+    build the pattern tree with the distributed breadth-first operator
+    AND the in-memory recursive kernel on the same deterministic table,
+    and count disagreements (computed in-query — the oracle pins them at
+    zero, plus the leaf/row totals). ``n_leaf_mismatch`` compares leaf
+    sets with ``split_node``; ``n_df_decisions_mismatch`` counts the
+    leaves whose label, level, pattern, members or ``order_key``
+    position differ from ``split_node(canonical=True)`` on doc-sorted
+    rows (:func:`_tree_order_mismatch`)."""
     import numpy as np
 
     from kapra_spark import datagen
@@ -1087,19 +1122,9 @@ def q_tree_dist_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["leaf_id", "level", "pattern", "label"]):
         got.add((int(level), pattern, label, frozenset(grp["doc_id"])))
     n_leaf_mismatch = len(got ^ expect)
-
-    # both decision paths: decisions="dataframe" (histogram never
-    # collected, case analysis as DataFrame expressions) must be
-    # byte-equal to the collecting path, order keys included
-    res_df = (create_tree_distributed(tokens, 4, 4, decisions="dataframe")
-              .toPandas())
-    key = ["doc_id", "leaf_id", "level", "pattern", "label", "order_key"]
-    a = res.sort_values(key).reset_index(drop=True)[key]
-    b = res_df.sort_values(key).reset_index(drop=True)[key]
-    n_df_mismatch = int((a != b).any(axis=1).sum()) if len(a) == len(b) \
-        else max(len(a), len(b))
     return spark.createDataFrame(
-        [(len(res), len(got), n_leaf_mismatch, n_df_mismatch)],
+        [(len(res), len(got), n_leaf_mismatch,
+          _tree_order_mismatch(res, pdf, 4, 4))],
         "n_rows long, n_leaves long, n_leaf_mismatch long, "
         "n_df_decisions_mismatch long")
 
@@ -1191,12 +1216,14 @@ def q_kp_dist_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_tree_dist_mid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed create-tree at MID size (10^4 series — real
-    multi-partition data for the dataframe-decisions window ranks,
-    round-4 directive #6): the decisions='dataframe' path (histogram
-    never collected) must stay byte-equal to the collecting path,
-    order keys included, and the leaf partition must cover every doc
-    exactly once."""
+    """Distributed create-tree at MID size (10^4 series in 32
+    partitions — real multi-partition data for the per-phase window
+    ranks, round-4 directive #6): ``n_df_decisions_mismatch`` counts
+    the leaves whose label, level, pattern, members or ``order_key``
+    position differ from the in-memory kernel
+    ``split_node(canonical=True)`` on doc-sorted rows
+    (:func:`_tree_order_mismatch`), and the leaf partition must cover
+    every doc exactly once."""
     from kapra_spark import datagen
     from kapra_spark.operators.tree_dist import create_tree_distributed
 
@@ -1204,16 +1231,11 @@ def q_tree_dist_mid(spark: SparkSession, sf_dir: str) -> DataFrame:
     pdf = datagen.tokens_pdf(n, n_tok=13, seed=29, gap_fraction=0.0)
     tokens = spark.createDataFrame(
         pdf, schema=datagen.TOKENS_SCHEMA).repartition(32, "doc_id")
-    key = ["doc_id", "leaf_id", "level", "pattern", "label", "order_key"]
-    a = (create_tree_distributed(tokens, 4, 4).toPandas()
-         .sort_values(key).reset_index(drop=True)[key])
-    b = (create_tree_distributed(tokens, 4, 4, decisions="dataframe")
-         .toPandas().sort_values(key).reset_index(drop=True)[key])
-    n_mismatch = int((a != b).any(axis=1).sum()) if len(a) == len(b) \
-        else max(len(a), len(b))
-    docs_once = bool(a["doc_id"].is_unique and len(a) == n)
+    res = create_tree_distributed(tokens, 4, 4).toPandas()
+    docs_once = bool(res["doc_id"].is_unique and len(res) == n)
     return spark.createDataFrame(
-        [(len(a), int(a["leaf_id"].nunique()), n_mismatch, docs_once)],
+        [(len(res), int(res["leaf_id"].nunique()),
+          _tree_order_mismatch(res, pdf, 4, 4), docs_once)],
         "n_rows long, n_leaves long, n_df_decisions_mismatch long, "
         "docs_covered_once boolean")
 

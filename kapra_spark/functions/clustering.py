@@ -181,11 +181,6 @@ def top_down_greedy(
     remaining = ids  # insertion order preserved, like the reference dict
     rounds = ROUNDS if len(remaining) >= ROUNDS else len(remaining)
 
-    if algorithm == "naive":
-        a = np.abs(np.asarray(gmax, float) - np.asarray(gmin, float))
-        a_mask = a != 0
-        a_safe = np.where(a_mask, a, 1.0)
-
     for rnd_i in range(rounds):
         target = group_v if rnd_i % 2 == 0 else group_u
         base = values[old]
@@ -193,10 +188,7 @@ def top_down_greedy(
         cv = values[cand]
         hi = np.maximum(np.maximum(base, cv), 0.0)  # z/r+ init-0 quirk
         lo = np.minimum(base, cv)
-        if algorithm == "naive":
-            m = 2.0 * seqsum(((hi - lo) / a_safe) * a_mask, axis=1)
-        else:
-            m = 2.0 * np.sqrt(seqsum(np.square(hi - lo) / values.shape[1], axis=1))
+        m = 2.0 * _metric_rows(algorithm, hi, lo, values.shape[1], gmax, gmin)
         # reference updates on >=, so the LAST maximum wins
         best_pos = len(m) - 1 - int(np.argmax(m[::-1]))
         r = remaining.pop(best_pos)
@@ -680,7 +672,7 @@ def create_tree(
 def _union_vl_vec(base_hi, base_lo, base_n, envs_hi, envs_lo, envs_n, t) -> np.ndarray:
     hi = np.maximum(base_hi, envs_hi)
     lo = np.minimum(base_lo, envs_lo)
-    return (base_n + envs_n) * np.sqrt(seqsum(np.square(hi - lo) / t, axis=1))
+    return (base_n + envs_n) * _metric_rows("kapra", hi, lo, t)
 
 
 def _find_min_vl(envs_hi, envs_lo, envs_n, ignored: set[int],
@@ -689,7 +681,7 @@ def _find_min_vl(envs_hi, envs_lo, envs_n, ignored: set[int],
     VL of the candidate alone. Strict < (first-min wins), like the
     reference's find_group_with_min_vl."""
     if base is None:
-        vl = envs_n * np.sqrt(seqsum(np.square(envs_hi - envs_lo) / t, axis=1))
+        vl = envs_n * _metric_rows("kapra", envs_hi, envs_lo, t)
     else:
         vl = _union_vl_vec(base.hi, base.lo, base.n, envs_hi, envs_lo, envs_n, t)
     best, best_vl = None, float("inf")

@@ -73,10 +73,11 @@ row-for-row equality; the quirk-exact ``kp_anonymize`` remains the
 reference-parity path (product golden) — canonical mode differs from
 it only in the order-contract points above.
 
-Driver-side state is node/leaf/P-group METADATA (one row per leaf /
-P-group) plus — on the exact C5 path only — one row per SUBGROUP
-(records-scaled for a giant source; the sharded path above
-``c5_exact_max`` removes it). Every per-record operation is a
+Driver-side state is leaf/P-group METADATA (one row per leaf /
+P-group; the tree build keeps its node metadata in DataFrames and
+holds none on the driver) plus — on the exact C5 path only — one row
+per SUBGROUP (records-scaled for a giant source; the sharded path
+above ``c5_exact_max`` removes it). Every per-record operation is a
 DataFrame op on both paths.
 """
 
@@ -352,6 +353,8 @@ def _one_source(tokens_src: DataFrame, source: str, k: int, p: int,
     base_assign = assigned.select(
         "doc_id", "pg", F.lit(0).alias("sub"), F.lit(0).alias("pos"))
     if oversized:
+        ov_df = F.broadcast(spark.createDataFrame(
+            [(gi,) for gi in oversized], "pg int"))
         seed_by_pg = {gi: C.stable_seed(seed, source, "c5split",
                                         first_by_pg[gi])
                       for gi in oversized}
@@ -372,8 +375,6 @@ def _one_source(tokens_src: DataFrame, source: str, k: int, p: int,
                                  "sub": np.array(subs, np.int32),
                                  "pos": np.array(poss, np.int32)})
 
-        ov_df = F.broadcast(spark.createDataFrame(
-            [(gi,) for gi in oversized], "pg int"))
         split_assign = (assigned.join(ov_df, "pg").join(toks, "doc_id")
                         .groupBy("pg")
                         .applyInPandas(split_kernel, _SPLIT_SCHEMA))
@@ -400,14 +401,14 @@ def _one_source(tokens_src: DataFrame, source: str, k: int, p: int,
 
     # subgroup counts per P-group (one row per P-GROUP — leaf-metadata-
     # sized) decide exact vs sharded BEFORE any per-subgroup collect
+    oversized_set = set(oversized)
     unsplit_gis = [gi for gi in range(len(pgroups))
-                   if gi not in set(oversized)]
+                   if gi not in oversized_set]
     ns_by_pg = {gi: 1 for gi in unsplit_gis}
     if oversized:
-        for r in (assignment.join(F.broadcast(spark.createDataFrame(
-                [(gi,) for gi in oversized], "pg int")), "pg")
-                .groupBy("pg").agg((F.max("sub") + 1).alias("ns"))
-                .collect()):
+        for r in (assignment.join(ov_df, "pg")
+                  .groupBy("pg").agg((F.max("sub") + 1).alias("ns"))
+                  .collect()):
             ns_by_pg[r["pg"]] = int(r["ns"])
     pattern_of_group = {gi: pat for gi, (pat, _, _, _) in enumerate(pgroups)}
 

@@ -333,8 +333,12 @@ def _tier_reduce(filled: np.ndarray, fmask: np.ndarray, mins: int):
     144-point series is ONE bucket of 144 points (bucket index =
     pos // mins = 0 for every point), so reducing over min(mins, t)
     columns is exact and avoids padding the matrix up to ``mins``
-    (10x inflation for the 1d tier on day-length series)."""
+    (10x inflation for the 1d tier on day-length series). An empty
+    series (t = 0) has no buckets in any tier."""
     rows, t = filled.shape
+    if t == 0:
+        empty = np.zeros(0, dtype=np.int64)
+        return (empty,) * 9
     if mins == 1:
         # 1m tier: every point is its own bucket — all aggregates are
         # the point itself; skip the (rows, t, 1) reshape reductions

@@ -4,30 +4,27 @@
 (reference includes/node.py:25-156) inside one ``applyInPandas`` task
 per source — the same whole-table-in-memory bound the single-node
 reference has. This module is the GLOBAL variant: the same tree, built
-breadth-first as a driver loop over levels where
+breadth-first over levels where
 
 - records stay distributed; the only per-record state is the id of the
   tree node currently holding the record, plus a precomputed array of
   the record's SAX patterns at every level (ONE vectorized Arrow pass,
-  levels 2..max_level+1 — levels are alphabet sizes, so the whole
-  array is ~paa * max_level chars per record);
-- each split decision needs only the (node, child-pattern) SIZE
-  HISTOGRAM — a ``groupBy(node_id, pattern_at_level).count()``
-  aggregate whose output is node-metadata-sized (one row per tentative
-  child), collected to the driver where the reference's exact decision
-  procedure (bad-leaf / good-leaf / maximize-level / TB-merge / split)
-  runs on counts alone;
-- decisions flow back as a broadcast join on (node_id[, child
-  pattern]); finalized leaves accumulate as a union of DataFrames.
+  levels 2..MAX_LEVEL+1 — levels are alphabet sizes, so the whole
+  array is ~paa * MAX_LEVEL chars per record);
+- node metadata (node_id, level, pattern, order key) is a DataFrame
+  too. Each round's split decisions come from the (node, child-pattern)
+  SIZE HISTOGRAM — a ``groupBy(node_id, pattern_at_level)`` count +
+  min-doc aggregate that is never collected — and the reference's
+  decision procedure (bad-leaf / good-leaf / maximize-level / TB-merge
+  / split) runs on it as column expressions, window ranks and
+  broadcast joins;
+- finalized leaves accumulate as a union of DataFrames.
 
-Cost shape at scale: ``max_level - 1`` rounds (MAX_LEVEL = 5), each
+Cost shape at scale: at most ``MAX_LEVEL`` rounds (MAX_LEVEL = 5), each
 one shuffle on (node_id, pattern) with map-side partial aggregation,
-plus a maximize-level aggregate over the (few) 1-2P-sized nodes. The
-driver holds per-NODE metadata only, never per-record data — and with
-``decisions="dataframe"`` not even that: the histogram stays a
-DataFrame and the case analysis runs as column expressions + joins
-(the 10^12-node variant), leaving the driver only per-round loop
-control.
+plus a maximize-level aggregate over the 1-2P-sized nodes. The driver
+holds no per-node or per-record state: per round it runs only an
+``isEmpty`` loop-control check.
 
 Leaf assignment is IDENTICAL to the in-memory ``split_node`` (parity-
 tested in tests/test_tree_dist.py): same leaves, same levels, same
@@ -46,24 +43,23 @@ from pyspark.sql import functions as F
 
 from ..functions import sax as S
 
+_LEAF_SCHEMA = ("doc_id string, leaf_id string, level int, "
+                "pattern string, label string, order_key string")
 
-def pattern_arrays(tokens_df: DataFrame, paa_value: int,
-                   max_level: int = S.MAX_LEVEL,
-                   drop_sensitive: bool = True) -> DataFrame:
+
+def pattern_arrays(tokens_df: DataFrame, paa_value: int) -> DataFrame:
     """(doc_id, pats): pats[l-2] = SAX pattern at level (alphabet) l,
-    for l in 2..max_level+1, computed in one vectorized pass. Level 1
+    for l in 2..MAX_LEVEL+1, computed in one vectorized pass. Level 1
     is always 'a'*paa (reference node.py:16) and never computed. The
-    last token is the sensitive attribute (dropped like kp_anonymize)
-    unless ``drop_sensitive=False``."""
-    levels = list(range(2, max_level + 2))
+    last token is the sensitive attribute and is dropped, like
+    kp_anonymize."""
+    levels = list(range(2, S.MAX_LEVEL + 2))
 
     def fn(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mat = np.stack(pdf["tokens"].to_numpy()).astype(np.float64)
-            if drop_sensitive:
-                mat = mat[:, :-1]
+            mat = np.stack(pdf["tokens"].to_numpy()).astype(np.float64)[:, :-1]
             cols = [S.sax2d(mat, paa_value, lvl) for lvl in levels]
             yield pd.DataFrame({
                 "doc_id": pdf["doc_id"],
@@ -76,9 +72,7 @@ def pattern_arrays(tokens_df: DataFrame, paa_value: int,
 
 def create_tree_distributed(tokens_df: DataFrame, p_value: int,
                             paa_value: int,
-                            max_level: int = S.MAX_LEVEL,
-                            pats_df: DataFrame | None = None,
-                            decisions: str = "collect") -> DataFrame:
+                            pats_df: DataFrame | None = None) -> DataFrame:
     """Build the reference pattern tree globally over a distributed
     table. Returns (doc_id, leaf_id, level, pattern, label, order_key)
     with label in {'good-leaf', 'bad-leaf'} — the exact split-phase
@@ -96,221 +90,29 @@ def create_tree_distributed(tokens_df: DataFrame, p_value: int,
     order when records are scanned in doc order, the contract's record
     order. Terminal leaves use the node's own path key. Distinct leaf
     keys never prefix one another (a terminal node has no descendants),
-    so plain lexicographic sort is the DFS order.
+    so plain lexicographic sort is the DFS order. A phase with more
+    than 10^6 siblings raises rather than emit a 7-digit rank.
 
     ``pats_df`` lets a caller that already materialized
     :func:`pattern_arrays` (e.g. the distributed anonymizer, which
     reuses it for recycle re-encoding) pass it in; otherwise it is
-    computed and cached here.
-
-    ``decisions``: ``"collect"`` (default) collects the per-round
-    (node, child) histogram — node-metadata-sized — and applies the
-    reference's decision procedure on the driver; ``"dataframe"`` keeps
-    even the histogram distributed and applies the same case analysis
-    as DataFrame expressions + joins (the 10^12-NODE variant: the
-    driver sees only per-round empty/non-empty loop control, never a
-    per-node row). Both paths are parity-tested to byte-equal output
-    including order keys (tests/test_tree_dist.py).
+    computed here, once.
     """
-    if decisions not in ("collect", "dataframe"):
-        raise ValueError(f"decisions must be collect|dataframe, got {decisions!r}")
     spark = tokens_df.sparkSession
-    own_pats = pats_df is None
-    pats = (pattern_arrays(tokens_df, paa_value, max_level).cache()
-            if own_pats else pats_df)
-    if decisions == "dataframe":
-        out = _tree_dataframe_decisions(spark, pats, p_value, paa_value,
-                                        max_level)
-        if own_pats:
-            pats.unpersist()
-        return out
-
-    root_pattern = "a" * paa_value
-    # driver-side node metadata: node_id -> (level, pattern)
-    nodes: dict[str, tuple[int, str]] = {"root": (1, root_pattern)}
-    keys: dict[str, str] = {"root": ""}   # node_id -> DFS path key
-    frontier = pats.withColumn("node_id", F.lit("root"))
-    finalized: list[DataFrame] = []
-    leaf_schema = ("doc_id string, leaf_id string, level int, "
-                   "pattern string, label string, order_key string")
-
-    def node_df(rows, schema):
-        return F.broadcast(spark.createDataFrame(rows, schema))
-
-    while nodes:
-        # pattern at level L+1 for a node at level L = pats[L-1]
-        # (0-indexed: pats[0] is level 2). element_at is 1-based.
-        lvl_df = node_df([(nid, lv) for nid, (lv, _) in nodes.items()],
-                         "node_id string, _lvl int")
-        hist = (frontier.join(lvl_df, "node_id")
-                .groupBy("node_id",
-                         F.element_at("pats", F.col("_lvl")).alias("cp"))
-                .agg(F.count("*").alias("count"),
-                     F.min("doc_id").alias("mdoc"))
-                .collect())  # node-metadata-sized: one row per
-        #                      tentative child (keep as a DataFrame and
-        #                      join decisions at 10^12-node scale)
-        children: dict[str, dict[str, tuple[int, str]]] = {}
-        for r in hist:
-            children.setdefault(r["node_id"], {})[r["cp"]] = (r["count"],
-                                                              r["mdoc"])
-
-        # reference decision procedure, on counts alone
-        terminal: list[tuple] = []   # (node_id, leaf_id, lvl, pat, label, okey)
-        tb_merge: list[tuple] = []   # (node_id, child_pat, leaf_id, lvl, pat, okey)
-        cont: list[tuple] = []       # (node_id, child_pat, new_node_id)
-        maximize: list[str] = []
-        next_nodes: dict[str, tuple[int, str]] = {}
-        next_keys: dict[str, str] = {}
-
-        def ranked(items: list[tuple[str, str]]) -> dict[str, int]:
-            """child_pat -> rank among these siblings by min doc_id.
-            The order_key contract encodes ranks as exactly 6 digits;
-            fail loudly rather than emit a 7-char token that would
-            silently break lexicographic DFS ordering."""
-            if len(items) > 1_000_000:
-                raise ValueError(
-                    "order_key overflow: a node has more than 10^6 "
-                    "children in one phase (rank token is 6 digits)")
-            return {cp: i for i, (cp, _) in
-                    enumerate(sorted(items, key=lambda x: x[1]))}
-
-        for nid, (lvl, pat) in nodes.items():
-            ch = children.get(nid, {})
-            size = sum(c for c, _ in ch.values())
-            if size == 0:
-                continue
-            if size < p_value:                       # case base 1
-                terminal.append((nid, nid, lvl, pat, "bad-leaf", keys[nid]))
-            elif lvl == max_level:                   # case base 2
-                terminal.append((nid, nid, lvl, pat, "good-leaf", keys[nid]))
-            elif p_value <= size < 2 * p_value:      # case base 3
-                maximize.append(nid)
-            else:
-                sizes = [c for c, _ in ch.values()]
-                if all(s < p_value for s in sizes):  # case base 4
-                    terminal.append((nid, nid, lvl, pat, "good-leaf",
-                                     keys[nid]))
-                    continue
-                tb = {cp: v for cp, v in ch.items() if v[0] < p_value}
-                tg = {cp: v for cp, v in ch.items() if v[0] >= p_value}
-                tg_rank = ranked([(cp, v[1]) for cp, v in tg.items()])
-                if sum(v[0] for v in tb.values()) >= p_value:
-                    # merged TB child: good leaf at the PARENT's
-                    # level/pattern (node.py:114-138), appended BEFORE
-                    # recursing the TG children -> phase 0
-                    leaf = f"{nid}|TBMERGE"
-                    okey = keys[nid] + "0" + "000000"
-                    for cp in tb:
-                        tb_merge.append((nid, cp, leaf, lvl, pat, okey))
-                    for cp in tg:
-                        new = f"{nid}|{cp}"
-                        cont.append((nid, cp, new))
-                        next_nodes[new] = (lvl + 1, cp)
-                        next_keys[new] = keys[nid] + f"2{tg_rank[cp]:06d}"
-                else:
-                    # nc >= 2: every child (TB included) becomes a
-                    # node, TB children recursed first (phase 1);
-                    # single-TG nc==1 continues alone
-                    tb_rank = ranked([(cp, v[1]) for cp, v in tb.items()])
-                    for cp in ch:
-                        new = f"{nid}|{cp}"
-                        cont.append((nid, cp, new))
-                        next_nodes[new] = (lvl + 1, cp)
-                        if cp in tb:
-                            next_keys[new] = keys[nid] + f"1{tb_rank[cp]:06d}"
-                        else:
-                            next_keys[new] = keys[nid] + f"2{tg_rank[cp]:06d}"
-
-        # maximize-level nodes: find the highest level every member
-        # still shares one pattern (node.py:197-222; can reach
-        # max_level + 1, preserved). One aggregate over those nodes.
-        if maximize:
-            m_df = node_df([(n,) for n in maximize], "node_id string")
-            aggs = []
-            for j in range(1, max_level + 1):  # pats[j-1] = level j+1
-                aggs.append(F.countDistinct(
-                    F.element_at("pats", j)).alias(f"d{j}"))
-                aggs.append(F.first(
-                    F.element_at("pats", j)).alias(f"p{j}"))
-            mrows = (frontier.join(m_df, "node_id")
-                     .groupBy("node_id").agg(*aggs).collect())
-            for r in mrows:
-                lvl, pat = nodes[r["node_id"]]
-                level, pattern = lvl, pat
-                while level <= max_level and r[f"d{level}"] == 1:
-                    pattern = r[f"p{level}"]
-                    level += 1
-                terminal.append((r["node_id"], r["node_id"],
-                                 level, pattern, "good-leaf",
-                                 keys[r["node_id"]]))
-
-        if terminal:
-            t_df = node_df(terminal,
-                           "node_id string, leaf_id string, level int, "
-                           "pattern string, label string, order_key string")
-            finalized.append(frontier.join(t_df, "node_id")
-                             .select("doc_id", "leaf_id", "level",
-                                     "pattern", "label", "order_key"))
-        if tb_merge:
-            lvl_df2 = node_df([(nid, nodes[nid][0]) for nid in
-                               {t[0] for t in tb_merge}],
-                              "node_id string, _lvl int")
-            tb_df = node_df(tb_merge,
-                            "node_id string, cp string, leaf_id string, "
-                            "level int, pattern string, order_key string")
-            finalized.append(
-                frontier.join(lvl_df2, "node_id")
-                .withColumn("cp", F.element_at("pats", F.col("_lvl")))
-                .join(tb_df, ["node_id", "cp"])
-                .select("doc_id", "leaf_id", "level", "pattern",
-                        F.lit("good-leaf").alias("label"), "order_key"))
-
-        if not cont:
-            break
-        lvl_df3 = node_df([(nid, nodes[nid][0]) for nid in
-                           {c[0] for c in cont}],
-                          "node_id string, _lvl int")
-        c_df = node_df(cont, "node_id string, cp string, new_node_id string")
-        frontier = (frontier.join(lvl_df3, "node_id")
-                    .withColumn("cp", F.element_at("pats", F.col("_lvl")))
-                    .join(c_df, ["node_id", "cp"])
-                    .select("doc_id", "pats",
-                            F.col("new_node_id").alias("node_id"))
-                    .localCheckpoint())  # constant plan depth per round
-        nodes = next_nodes
-        keys = next_keys
-
-    if own_pats:
-        pats.unpersist()
-    if not finalized:   # empty input: no leaves were ever finalized
-        return spark.createDataFrame([], leaf_schema)
-    out = finalized[0]
-    for df in finalized[1:]:
-        out = out.unionByName(df)
-    return out
-
-
-def _tree_dataframe_decisions(spark, pats: DataFrame, p_value: int,
-                              paa_value: int, max_level: int) -> DataFrame:
-    """The ``decisions="dataframe"`` body: node metadata lives in a
-    DataFrame (node_id, lvl, pattern, okey), the per-round histogram is
-    never collected, and the reference's case analysis becomes column
-    expressions + broadcast joins. Per round the driver runs only an
-    ``isEmpty`` loop-control check over the (already materialized)
-    node-metadata frame. Decision semantics and order keys are
-    identical to the collecting path (parity-tested)."""
+    max_level = S.MAX_LEVEL
+    pats = pattern_arrays(tokens_df, paa_value) if pats_df is None else pats_df
     nodes = spark.createDataFrame(
         [("root", 1, "a" * paa_value, "")],
         "node_id string, lvl int, pattern string, okey string")
-    frontier = pats.withColumn("node_id", F.lit("root"))
+    # checkpointed like every later frontier: the returned leaves then
+    # never re-run the pattern pass
+    frontier = pats.withColumn("node_id", F.lit("root")).localCheckpoint()
     finalized: list[DataFrame] = []
-    leaf_schema = ("doc_id string, leaf_id string, level int, "
-                   "pattern string, label string, order_key string")
 
     for _round in range(max_level + 2):
-        nb = F.broadcast(nodes)
-        hist = (frontier.join(nb, "node_id")
+        # a node at level L splits on the level-(L+1) pattern, pats[L-1]
+        # 0-indexed (pats[0] is level 2); element_at is 1-based
+        hist = (frontier.join(F.broadcast(nodes), "node_id")
                 .groupBy("node_id",
                          F.element_at("pats", F.col("lvl")).alias("cp"))
                 .agg(F.count("*").alias("cnt"), F.min("doc_id").alias("mdoc"))
@@ -334,14 +136,16 @@ def _tree_dataframe_decisions(spark, pats: DataFrame, p_value: int,
         if nstate.isEmpty():
             break
 
-        # terminal leaves (bad / good at the node itself)
+        # terminal leaves (bad / good at the node itself); no otherwise:
+        # label stays nullable, as in the empty-input _LEAF_SCHEMA
         term = nstate.filter(F.col("case").isin("bad", "good"))
         finalized.append(
             frontier.join(F.broadcast(term), "node_id")
             .select("doc_id", F.col("node_id").alias("leaf_id"),
                     F.col("lvl").alias("level"), "pattern",
                     F.when(F.col("case") == "bad", "bad-leaf")
-                    .otherwise("good-leaf").alias("label"),
+                    .when(F.col("case") == "good", "good-leaf")
+                    .alias("label"),
                     F.col("okey").alias("order_key")))
 
         # maximize-level: per-node countDistinct/first per level, then
@@ -409,8 +213,7 @@ def _tree_dataframe_decisions(spark, pats: DataFrame, p_value: int,
         phase = (F.when(F.col("case") == "tbmerge", F.lit("2"))
                  .when(F.col("is_tb"), F.lit("1")).otherwise(F.lit("2")))
         # rank token is exactly 6 digits; lpad would TRUNCATE >= 10^6
-        # and silently break DFS ordering — fail loudly instead (same
-        # guard as the collecting path's ranked())
+        # and silently break DFS ordering — fail loudly instead
         rank_tok = F.when(
             F.col("rank") <= 999_999,
             F.lpad(F.col("rank").cast("string"), 6, "0")
@@ -438,8 +241,8 @@ def _tree_dataframe_decisions(spark, pats: DataFrame, p_value: int,
         if nodes.isEmpty():
             break
 
-    if not finalized:
-        return spark.createDataFrame([], leaf_schema)
+    if not finalized:   # empty input: no leaves were ever finalized
+        return spark.createDataFrame([], _LEAF_SCHEMA)
     out = finalized[0]
     for df in finalized[1:]:
         out = out.unionByName(df)

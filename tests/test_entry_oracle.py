@@ -1,8 +1,11 @@
 """The anonymize-family driver queries against their pinned oracle rows
 (``__spark_entry__.oracle_sql()``), compared the way
 ``tools/check_oracle.py`` compares them: the exact ``kp_anonymize``
-output digest (kapra and naive) and the global pattern loss. These
-queries build their own synthetic input, so no sf data is needed."""
+output digest (kapra and naive), the global pattern loss, and the
+distributed create-tree's leaf and order-contract mismatch counts
+against the in-memory kernel (300 rows, and 10^4 rows in 32
+partitions). These queries build their own synthetic input, so no sf
+data is needed."""
 
 import importlib.util
 import os
@@ -23,7 +26,8 @@ def _load(name: str, rel: str):
 
 
 @pytest.mark.parametrize("name", ["kp_anonymize_kapra", "kp_anonymize_naive",
-                                  "pattern_loss_global"])
+                                  "pattern_loss_global", "tree_dist_parity",
+                                  "tree_dist_mid"])
 def test_query_matches_oracle(spark, name):
     entry = _load("__spark_entry__", "__spark_entry__.py")
     normalize = _load("check_oracle", "tools/check_oracle.py").normalize

@@ -114,6 +114,26 @@ def test_cascade_matches_declarative(spark, tokens):
         pd.testing.assert_frame_equal(_norm(k), _norm(d), check_dtype=False)
 
 
+def test_empty_series_has_no_buckets(spark):
+    """A series with n_tok = 0 yields no bucket in any tier and does not
+    fail the task: cascade_fast and every cascade() tier equal their
+    result on the table without it."""
+    pdf = datagen.tokens_pdf(2, n_tok=N_TOK, seed=7, gap_fraction=0.3)
+    pdf.at[1, "tokens"] = np.zeros(0, dtype=np.int32)
+    pdf.at[1, "n_tok"] = 0
+    both = spark.createDataFrame(pdf, schema=datagen.TOKENS_SCHEMA)
+    full = spark.createDataFrame(pdf.iloc[:1], schema=datagen.TOKENS_SCHEMA)
+    key = ["tier", "source", "doc_id", "bucket"]
+    pd.testing.assert_frame_equal(
+        R.cascade_fast(both).toPandas().sort_values(key).reset_index(drop=True),
+        R.cascade_fast(full).toPandas().sort_values(key).reset_index(drop=True))
+    got, want = R.cascade(both), R.cascade(full)
+    for tier in R.TIERS:
+        pd.testing.assert_frame_equal(
+            got[tier].toPandas().sort_values(key[1:]).reset_index(drop=True),
+            want[tier].toPandas().sort_values(key[1:]).reset_index(drop=True))
+
+
 def test_reaggregation_invariants(spark, tokens):
     tiers = R.cascade(tokens)
     m = tiers["1m"].toPandas()

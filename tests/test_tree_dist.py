@@ -1,11 +1,10 @@
-"""Distributed create-tree parity: the BFS driver-loop tree
-(operators/tree_dist.py) must produce IDENTICAL leaf assignment —
+"""Distributed create-tree parity: the breadth-first DataFrame-resident
+tree (operators/tree_dist.py) must produce IDENTICAL leaf assignment —
 same member sets, levels, patterns, labels — as the in-memory
 recursive kernel (functions/clustering.split_node) that is itself
 parity-tested against the reference (tests/test_clustering_parity)."""
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from kapra_spark import datagen
@@ -62,11 +61,13 @@ def test_tree_dist_covers_all_rows(spark):
     assert (sizes >= 4).all()                    # good leaves honor P
 
 
-@pytest.mark.parametrize("n,p,paa,seed", [
-    (300, 4, 4, 11),
-    (60, 12, 4, 7),    # TB-merge + maximize paths
+@pytest.mark.parametrize("n,p,paa,seed,parts", [
+    pytest.param(300, 4, 4, 11, 1, id="300-4-4-11"),
+    pytest.param(60, 12, 4, 7, 1, id="60-12-4-7"),   # TB-merge + maximize
+    # the per-phase window ranks and min-doc aggregates across partitions
+    pytest.param(300, 4, 4, 11, 8, id="300-4-4-11-8parts"),
 ])
-def test_tree_dist_order_contract(spark, n, p, paa, seed):
+def test_tree_dist_order_contract(spark, n, p, paa, seed, parts):
     """Sorting distributed leaves by order_key reproduces the recursive
     kernel's DFS append order exactly (per label class) — the contract
     the C4/C5 distributed phases (anonymize_dist) build on."""
@@ -84,6 +85,8 @@ def test_tree_dist_order_contract(spark, n, p, paa, seed):
                      for l in bad],
     }
     tokens = spark.createDataFrame(pdf, schema=datagen.TOKENS_SCHEMA)
+    if parts > 1:
+        tokens = tokens.repartition(parts, "doc_id")
     res = create_tree_distributed(tokens, p, paa).toPandas()
     got = {"good-leaf": [], "bad-leaf": []}
     for (leaf_id, level, pattern, label, okey), grp in res.groupby(
@@ -93,17 +96,3 @@ def test_tree_dist_order_contract(spark, n, p, paa, seed):
     for label in exp:
         assert [x[1:] for x in sorted(got[label])] == exp[label]
 
-
-def test_tree_df_decisions_parity(spark):
-    """decisions='dataframe' (histogram never collected, case analysis
-    as DataFrame expressions) is byte-equal to the collecting path,
-    order keys included."""
-    for n, p, paa, seed in [(300, 4, 4, 11), (60, 12, 4, 7)]:
-        pdf = datagen.tokens_pdf(n, n_tok=13, seed=seed, gap_fraction=0.0)
-        tokens = spark.createDataFrame(pdf, schema=datagen.TOKENS_SCHEMA)
-        a = (create_tree_distributed(tokens, p, paa).toPandas()
-             .sort_values(["doc_id", "leaf_id"]).reset_index(drop=True))
-        b = (create_tree_distributed(tokens, p, paa, decisions="dataframe")
-             .toPandas().sort_values(["doc_id", "leaf_id"])
-             .reset_index(drop=True))
-        pd.testing.assert_frame_equal(a, b)
