@@ -1064,13 +1064,12 @@ def _tree_order_mismatch(res, pdf, p: int, paa: int) -> int:
     run on the doc-sorted rows: the comparison
     tests/test_tree_dist.py::test_tree_dist_order_contract makes,
     counted per leaf position within each label class."""
-    import numpy as np
-
     from kapra_spark.functions import clustering as C
     from kapra_spark.functions import sax as S
+    from kapra_spark.operators.grouping import token_matrix
 
     pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-    mat = np.stack(pdf["tokens"].to_numpy()).astype(np.float64)[:, :-1]
+    mat, _ = token_matrix(pdf["tokens"])
     good, bad = [], []
     C.split_node(mat, list(range(len(mat))), 1, "a" * paa, p, paa,
                  S.MAX_LEVEL, good, bad, canonical=True)
@@ -1098,17 +1097,16 @@ def q_tree_dist_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaves whose label, level, pattern, members or ``order_key``
     position differ from ``split_node(canonical=True)`` on doc-sorted
     rows (:func:`_tree_order_mismatch`)."""
-    import numpy as np
-
     from kapra_spark import datagen
     from kapra_spark.functions import clustering as C
+    from kapra_spark.operators.grouping import token_matrix
     from kapra_spark.operators.tree_dist import create_tree_distributed
 
     pdf = datagen.tokens_pdf(300, n_tok=13, seed=11, gap_fraction=0.0)
     tokens = spark.createDataFrame(pdf, schema=datagen.TOKENS_SCHEMA)
     res = create_tree_distributed(tokens, 4, 4).toPandas()
 
-    mat = np.stack(pdf["tokens"].to_numpy()).astype(np.float64)[:, :-1]
+    mat, _ = token_matrix(pdf["tokens"])
     good, bad = [], []
     C.split_node(mat, list(range(len(mat))), 1, "a" * 4, 4, 4, 5, good, bad)
     ids = list(pdf["doc_id"])
@@ -1171,15 +1169,17 @@ def q_kp_dist_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_kp_dist_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C5 SHARDED decision core (the giant-source scale path added in
-    round 5): forcing the sharded bottom-up merge with one shard
-    covering every subgroup must reproduce the exact driver greedy
-    row-for-row; a forced MULTI-shard run (tiny shard size) must keep
-    the (k, P) invariants and the exact path's suppressed set. All
-    computed in-query; the oracle pins the constants."""
+    round 5): a forced one-shard run (``c5_exact_max=0``, one shard
+    covering every subgroup) must reproduce the in-memory
+    ``kp_anonymize_canonical`` row-for-row (``n_mismatch_1shard``); a
+    forced MULTI-shard run (tiny shard size) must keep the (k, P)
+    invariants and the in-memory greedy's suppressed set. All computed
+    in-query; the oracle pins the constants."""
     import pandas as pd
 
     from kapra_spark import datagen
-    from kapra_spark.operators.anonymize_dist import kp_anonymize_distributed
+    from kapra_spark.operators.anonymize_dist import (
+        kp_anonymize_canonical, kp_anonymize_distributed)
 
     k, p = 8, 4
     pdf = datagen.tokens_pdf(300, n_tok=13, seed=19, gap_fraction=0.0)
@@ -1194,7 +1194,7 @@ def q_kp_dist_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
                 [["doc_id", "source", "group_id", "sax", "as_perturbed",
                   "lo", "hi", "suppressed"]])
 
-    exact = norm(kp_anonymize_distributed(tokens, k=k, p=p, paa=4, l=2)
+    exact = norm(kp_anonymize_canonical(tokens, k=k, p=p, paa=4, l=2)
                  .toPandas())
     one = norm(kp_anonymize_distributed(tokens, k=k, p=p, paa=4, l=2,
                                         c5_exact_max=0,

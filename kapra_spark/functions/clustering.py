@@ -9,7 +9,8 @@ therefore run group-locally inside ``groupBy(source).applyInPandas``:
 - :func:`create_tree`          reference includes/common.py:420-459 +
                                includes/node.py:25-222 (C3)
 - :func:`recycle_bad_leaves`   reference includes/node.py:224-397 (C4)
-- :func:`bottom_up_kgroups`    reference includes/k_anonymity.py:34-167 (C5)
+- :func:`bottom_up_kgroups`    reference includes/k_anonymity.py:34-167 (C5;
+                               its >= 2P split is :func:`split_subgroup`)
 - :func:`merge_bad_into_good`  reference includes/node.py:159-183 (naive
                                bad-leaf postprocessing, O4)
 - :func:`enforce_l_diversity`  reference includes/l_diversity.py:7-107 (F9)
@@ -784,6 +785,25 @@ def kgroups_from_subgroups(
     return gl, unplaced
 
 
+def split_subgroup(values: np.ndarray, rows, p_value: int,
+                   rnd: RandomSource) -> list[list[int]]:
+    """C5 preprocessing of ONE P-subgroup of >= 2P records (the step
+    before reference includes/k_anonymity.py:60-167): the C1 top-down
+    split into ~P-record groups, then C2 postprocessing of the sub-P
+    ones. Returns the post-processed groups as lists of ids from
+    ``rows``, in reference order; C2 may duplicate an id across groups
+    (its quirk).
+    The one split every anonymizer runs: ``bottom_up_kgroups`` with its
+    shared RNG, the canonical and distributed paths with one seeded RNG
+    per P-group."""
+    tmp: list[list[int]] = []
+    labels: list[str] = []
+    top_down_greedy("kapra", list(rows), p_value, values, tmp, labels, rnd)
+    post: list[list[int]] = []
+    postprocess_groups("kapra", p_value, tmp, labels, post, values)
+    return post
+
+
 def bottom_up_kgroups(
     values: np.ndarray,
     p_subgroups: list[list[int]],
@@ -793,40 +813,28 @@ def bottom_up_kgroups(
 ) -> tuple[list[list[int]], list[list[int]]]:
     """P-subgroups -> (k-groups, unplaceable subgroups), evaluated
     entirely on envelope summaries (exact, because VL is
-    envelope-determined). Row-level wrapper: runs the >=2P
-    preprocessing split inline (shared RNG sequence, like the
-    reference) and delegates the promote/merge/attach phases to
-    :func:`kgroups_from_subgroups`.
+    envelope-determined). Row-level wrapper: splits every subgroup of
+    >= 2P records with :func:`split_subgroup` (in subgroup order, one
+    shared RNG sequence, like the reference), appends the products
+    after the unsplit subgroups and delegates the promote/merge/attach
+    phases to :func:`kgroups_from_subgroups`.
 
     The second element is non-empty only when NO k-group could be
     formed at all (total records < k) — input the reference refuses
     outright (naive.py:22-26) or crashes on (k_anonymity.py:159-167
     pops from an empty GL); the engine suppresses those records
     instead, which is the privacy-safe resolution."""
-    t = values.shape[1]
-
-    # preprocessing: split subgroups >= 2p down to ~p via C1+C2
-    pgl: list[list[int]] = []
-    splitted: list[list[int]] = []
-    split_idxs: set[int] = set()
-    for i, sg in enumerate(p_subgroups):
-        pgl.append(sg)
-    for i, sg in enumerate(pgl):
+    pgl = [sg for sg in p_subgroups if len(sg) < 2 * p_value]
+    for sg in p_subgroups:
         if len(sg) >= 2 * p_value:
-            tmp: list[list[int]] = []
-            tree: list[str] = []
-            top_down_greedy("kapra", list(sg), p_value, values, tmp, tree, rnd)
-            post: list[list[int]] = []
-            postprocess_groups("kapra", p_value, tmp, tree, post, values)
-            splitted.extend(post)
-            split_idxs.add(i)
-    pgl = [sg for i, sg in enumerate(pgl) if i not in split_idxs] + splitted
+            pgl += split_subgroup(values, sg, p_value, rnd)
 
     metas = []
     for sg in pgl:
         hi, lo, n = envelope(values[sg])
         metas.append(SubgroupMeta(handle=sg, hi=hi, lo=lo, n=n))
-    gl_meta, unplaced_meta = kgroups_from_subgroups(metas, k_value, t)
+    gl_meta, unplaced_meta = kgroups_from_subgroups(metas, k_value,
+                                                    values.shape[1])
 
     gl = [[r for m in g for r in m.handle] for g in gl_meta]
     unplaced = [list(m.handle) for m in unplaced_meta]

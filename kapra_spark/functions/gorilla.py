@@ -37,21 +37,6 @@ from __future__ import annotations
 
 import numpy as np
 
-_DOD_BRANCHES = (  # (control bits as (bits, nbits), payload bits, lo, hi)
-    ((0b0, 1), 0, 0, 0),
-    ((0b10, 2), 7, -63, 64),
-    ((0b110, 3), 9, -255, 256),
-    ((0b1110, 4), 12, -2047, 2048),
-    ((0b1111, 4), 64, None, None),
-)
-
-
-def _bits_of(vals: np.ndarray, nbits: int) -> np.ndarray:
-    """(n,) uint64 -> (n, nbits) of 0/1, MSB first."""
-    shifts = np.arange(nbits - 1, -1, -1, dtype=np.uint64)
-    return ((vals[:, None] >> shifts[None, :]) & np.uint64(1)).astype(np.uint8)
-
-
 def _leading_zeros64(x: np.ndarray) -> np.ndarray:
     """Vectorized count-leading-zeros for uint64 via the float64
     exponent (frexp), with an exact-integer correction pass: a value
@@ -79,8 +64,8 @@ def _trailing_zeros64(x: np.ndarray) -> np.ndarray:
 
 def encode_block(ts: np.ndarray, values: np.ndarray) -> tuple[int, int, int, bytes]:
     """Encode one series. Returns (t0, v0, n, payload). Thin wrapper
-    over the batch encoder (used by tests; production uses
-    :func:`encode_batch`)."""
+    over :func:`encode_batch` for tests and single series; the write
+    path encodes whole Arrow batches with :func:`encode_batch_arrow`."""
     t0, v0, n, payloads = encode_batch(ts[None, :], values[None, :])
     return int(t0[0]), int(v0[0]), int(n[0]), payloads[0]
 

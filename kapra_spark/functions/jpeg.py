@@ -146,11 +146,6 @@ def _canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, i
     return out
 
 
-def _decode_table(bits: list[int], vals: list[int]) -> dict[tuple[int, int], int]:
-    """(length, code) -> symbol, for the bit-by-bit decoder."""
-    return {(ln, c): s for s, (c, ln) in _canonical_codes(bits, vals).items()}
-
-
 _LUT_CACHE: dict[tuple, list] = {}
 
 

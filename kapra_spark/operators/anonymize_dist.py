@@ -22,25 +22,23 @@ How each phase distributes (the 10^12-sequence shapes):
 - **C5 merge** is exact on envelope summaries (VL is envelope-
   determined, SURVEY.md §2.9): one ``groupBy(p-subgroup)`` envelope
   aggregate, then ``clustering.kgroups_from_subgroups`` (again the
-  shared decision core). Up to ``c5_exact_max`` subgroups the core
-  runs on the driver over one row per subgroup — O(n_subgroups^2)
-  time, O(n_subgroups * T) memory, i.e. RECORDS-scaled (≈ n/P
-  subgroups for a giant source), fine to ~1e5 subgroups and a
-  bottleneck beyond. Above the threshold the SHARDED variant engages:
-  subgroup summaries stay in a DataFrame, are sharded into bounded
-  contiguous ranges of the same DFS pgl order (tree locality as the
-  envelope-locality proxy), and the SAME decision core runs per shard
-  in ``applyInPandas``; driver state is then one row per P-GROUP
-  (leaf-metadata-sized), never per subgroup. The sharded grouping is
-  a deliberate approximation of the sequential global greedy (shards
-  never merge across their boundary — reference semantics are
-  inherently sequential here) that preserves every k/P/l invariant
-  and is parity-equal to the exact core whenever one shard covers all
-  subgroups (tests/test_anonymize_dist.py).
-- **C5 preprocessing** (splitting P-groups >= 2P via C1+C2) is the one
-  genuinely sequential-greedy part (reference ``includes/common.py``);
-  it runs per-P-GROUP in ``applyInPandas`` — embarrassingly parallel
-  across groups with per-group seeded RNG. The Arrow bound therefore
+  shared decision core) per SHARD in ``applyInPandas``. A shard is a
+  contiguous range of the DFS pgl order (tree locality as the
+  envelope-locality proxy); subgroup summaries never reach the
+  driver. Up to ``c5_exact_max`` subgroups one shard holds them all,
+  which is the sequential global greedy itself — O(n_subgroups^2)
+  time and O(n_subgroups * T) memory in ONE task (at the default
+  1e5 subgroups and T = 143 that is up to ~460 MB of hi/lo/phi/plo).
+  Above the threshold shards of ``c5_shard_size`` subgroups bound
+  both: a deliberate approximation of the global greedy (shards never
+  merge across their boundary — reference semantics are inherently
+  sequential here) that preserves every k/P/l invariant
+  (tests/test_anonymize_dist.py).
+- **C5 preprocessing** (splitting P-groups >= 2P via C1+C2,
+  ``clustering.split_subgroup``) is the one genuinely sequential-
+  greedy part (reference ``includes/common.py``); it runs
+  per-P-GROUP in ``applyInPandas`` — embarrassingly parallel across
+  groups with per-group seeded RNG. The Arrow bound therefore
   drops from per-SOURCE to per-P-GROUP (P-groups are O(P)-sized except
   the pathological all-records-share-one-max-level-pattern source,
   which retains an in-memory bound for that group — documented
@@ -73,12 +71,10 @@ row-for-row equality; the quirk-exact ``kp_anonymize`` remains the
 reference-parity path (product golden) — canonical mode differs from
 it only in the order-contract points above.
 
-Driver-side state is leaf/P-group METADATA (one row per leaf /
+Driver-side state is leaf/P-group METADATA only (one row per leaf /
 P-group; the tree build keeps its node metadata in DataFrames and
-holds none on the driver) plus — on the exact C5 path only — one row
-per SUBGROUP (records-scaled for a giant source; the sharded path
-above ``c5_exact_max`` removes it). Every per-record operation is a
-DataFrame op on both paths.
+holds none on the driver); per-subgroup and per-record state stays in
+DataFrames at every size.
 """
 
 from __future__ import annotations
@@ -93,7 +89,8 @@ from pyspark.sql import functions as F
 from ..functions import clustering as C
 from ..functions import sax as S
 from ..functions.metrics import envelope
-from .grouping import ANON_SCHEMA, per_source, render, source_arrays
+from .grouping import (ANON_SCHEMA, per_source, render, source_arrays,
+                       token_matrix)
 from .tree_dist import create_tree_distributed, pattern_arrays
 
 _SPLIT_SCHEMA = "doc_id string, pg int, sub int, pos int"
@@ -120,20 +117,6 @@ def _recycle_phase(p: int, paa: int, good_leaves: list[tuple],
                 for (pat, handle, count, first) in good_leaves]
                + [(m.pattern, m.handle, m.count, m.first) for m in good_new])
     return pgroups, [m.handle for m in supp]
-
-
-def _split_one_group(mat: np.ndarray, p: int, seed_val: int):
-    """C1+C2 split of one oversized P-group (rows already doc-sorted;
-    positions 0..n-1). Returns the post-processed subgroup list (each a
-    list of row positions, reference order preserved — may duplicate a
-    position across subgroups, the C2 quirk)."""
-    rnd = C.NumpyRandomSource(seed_val)
-    tmp: list[list[int]] = []
-    lbl: list[str] = []
-    C.top_down_greedy("kapra", list(range(len(mat))), p, mat, tmp, lbl, rnd)
-    post: list[list[int]] = []
-    C.postprocess_groups("kapra", p, tmp, lbl, post, mat)
-    return post
 
 
 def _ldiv_one_psr(ordered_sens: list[int], pattern: str, l_value: int,
@@ -204,12 +187,10 @@ def _anonymize_source_canonical(pdf: pd.DataFrame, k: int, p: int, paa: int,
                if count < 2 * p]
     for gi, (_, rows_g, count, first) in enumerate(pgroups):
         if count >= 2 * p:
-            rows_sorted = sorted(rows_g)
-            post = _split_one_group(
-                values[rows_sorted], p,
+            rnd = C.NumpyRandomSource(
                 C.stable_seed(seed, source, "c5split", ids[first]))
-            ordered += [(gi, si, [rows_sorted[i] for i in grp])
-                        for si, grp in enumerate(post)]
+            ordered += [(gi, si, grp) for si, grp in enumerate(
+                C.split_subgroup(values, sorted(rows_g), p, rnd))]
 
     sub_rows: dict[tuple[int, int], list[int]] = {}
     pgl: list[C.SubgroupMeta] = []
@@ -362,18 +343,17 @@ def _one_source(tokens_src: DataFrame, source: str, k: int, p: int,
         def split_kernel(key, pdf):
             gi = int(key[0])
             pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-            mat = np.stack(pdf["tokens"].to_numpy()).astype(np.float64)[:, :-1]
-            post = _split_one_group(mat, p, seed_by_pg[gi])
-            docs, subs, poss = [], [], []
-            for si, rows_s in enumerate(post):
-                for pos, r in enumerate(rows_s):
-                    docs.append(pdf["doc_id"].iloc[r])
-                    subs.append(si)
-                    poss.append(pos)
-            return pd.DataFrame({"doc_id": docs,
-                                 "pg": np.full(len(docs), gi, np.int32),
-                                 "sub": np.array(subs, np.int32),
-                                 "pos": np.array(poss, np.int32)})
+            values, _ = token_matrix(pdf["tokens"])
+            post = C.split_subgroup(values, range(len(pdf)), p,
+                                    C.NumpyRandomSource(seed_by_pg[gi]))
+            rows = [r for grp in post for r in grp]
+            return pd.DataFrame({
+                "doc_id": pdf["doc_id"].to_numpy()[rows],
+                "pg": np.full(len(rows), gi, np.int32),
+                "sub": np.repeat(np.arange(len(post), dtype=np.int32),
+                                 [len(grp) for grp in post]),
+                "pos": np.array([i for grp in post for i in range(len(grp))],
+                                np.int32)})
 
         split_assign = (assigned.join(ov_df, "pg").join(toks, "doc_id")
                         .groupBy("pg")
@@ -386,7 +366,7 @@ def _one_source(tokens_src: DataFrame, source: str, k: int, p: int,
 
     # ---- subgroup envelopes ------------------------------------------
     def env_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = np.stack(pdf["tokens"].to_numpy()).astype(np.float64)[:, :-1]
+        m, _ = token_matrix(pdf["tokens"])
         hi, lo, n = envelope(m)
         return pd.DataFrame({
             "pg": [int(pdf["pg"].iloc[0])], "sub": [int(pdf["sub"].iloc[0])],
@@ -400,7 +380,7 @@ def _one_source(tokens_src: DataFrame, source: str, k: int, p: int,
               .applyInPandas(env_kernel, _ENV_SCHEMA))
 
     # subgroup counts per P-group (one row per P-GROUP — leaf-metadata-
-    # sized) decide exact vs sharded BEFORE any per-subgroup collect
+    # sized) give each subgroup its pgl position and the shard layout
     oversized_set = set(oversized)
     unsplit_gis = [gi for gi in range(len(pgroups))
                    if gi not in oversized_set]
@@ -423,37 +403,33 @@ def _one_source(tokens_src: DataFrame, source: str, k: int, p: int,
         off_rows, "pg int, off long")), "pg")
         .withColumn("idx", F.col("off") + F.col("sub")))
 
-    # ---- C5 merge: exact (driver greedy over ALL subgroup summaries,
-    # O(n_subgroups^2) time — fine to ~1e5) or sharded (the SAME greedy
-    # per bounded shard of DFS-adjacent subgroups, inside applyInPandas
-    # — driver state stays P-group-metadata-sized) ----------------------
-    if n_subgroups <= max(c5_exact_max, 0):
-        sub_map_df = F.broadcast(spark.createDataFrame(
-            _submap_rows(env_idx.toPandas(), k, 0), _SUBMAP_SCHEMA))
+    # ---- C5 merge: the shared decision core per shard, inside
+    # applyInPandas. A shard is a contiguous range of the pgl order
+    # (DFS-adjacent subgroups share tree locality, the cheap envelope-
+    # locality proxy). Up to c5_exact_max subgroups ONE shard holds them
+    # all, which IS the sequential global greedy; above it shards of
+    # shard_size never merge across their boundary (every k/P/l
+    # invariant still holds — each shard has >= shard_size >= k records,
+    # so the core always forms k-groups and attaches leftovers in-shard).
+    if n_subgroups > max(c5_exact_max, 0):
+        shard_size = max(int(c5_shard_size or max(4096, 4 * k)), k, 2)
     else:
-        # shard = a contiguous range of the SAME pgl order (DFS-adjacent
-        # subgroups share tree locality, the cheap envelope-locality
-        # proxy); each shard runs the exact decision core unchanged.
-        # This is the explicitly-flagged scale variant: k-groups never
-        # merge across shards, so the grouping differs from the exact
-        # global greedy (every k/P/l invariant still holds — each shard
-        # has >= shard_size >= k records, so kgroups_from_subgroups
-        # always forms k-groups and attaches leftovers in-shard).
-        shard_size = int(c5_shard_size or max(4096, 4 * k))
-        shard_size = max(shard_size, k, 2)
-        n_shards = max(1, n_subgroups // shard_size)
-        kg_stride = 2 * shard_size   # last shard <= 2*shard_size - 1 subgroups
+        shard_size = n_subgroups
+    n_shards = max(1, n_subgroups // shard_size)
+    kg_stride = 2 * shard_size   # last shard <= 2*shard_size - 1 subgroups
 
-        def shard_kernel(key, pdf):
-            return pd.DataFrame(
-                _submap_rows(pdf, k, int(key[0]) * kg_stride),
-                columns=["pg", "sub", "kg", "rank", "glo", "ghi"])
+    def shard_kernel(key, pdf):
+        return pd.DataFrame(_submap_rows(pdf, k, int(key[0]) * kg_stride),
+                            columns=["pg", "sub", "kg", "rank", "glo", "ghi"])
 
-        sub_map_df = (env_idx.withColumn("shard", F.least(
-                          F.floor(F.col("idx") / shard_size),
-                          F.lit(n_shards - 1)).cast("int"))
-                      .groupBy("shard")
-                      .applyInPandas(shard_kernel, _SUBMAP_SCHEMA))
+    # checkpointed: F9 and render read the sub-map four times, and the
+    # greedy and env_kernel must run once per shard, not once per read
+    sub_map_df = (env_idx.withColumn("shard", F.least(
+                      F.floor(F.col("idx") / shard_size),
+                      F.lit(n_shards - 1)).cast("int"))
+                  .groupBy("shard")
+                  .applyInPandas(shard_kernel, _SUBMAP_SCHEMA)
+                  .localCheckpoint())
 
     # ---- common downstream: F9 + render off the subgroup map ----------
     pat_df = F.broadcast(spark.createDataFrame(
@@ -530,15 +506,15 @@ def kp_anonymize_distributed(tokens_df: DataFrame, k: int, p: int, paa: int,
     source, so the call fails fast with a pointer at ``kp_anonymize``
     instead of building a pathological plan.
 
-    C5 scale knobs (see :func:`_one_source`): when a source produces
-    more than ``c5_exact_max`` P-subgroups the bottom-up merge switches
-    from the exact driver greedy — O(n_subgroups^2) driver time,
-    O(n_subgroups * T) driver memory — to the SHARDED greedy: the same
-    decision core run per bounded shard of DFS-adjacent subgroups
-    inside ``applyInPandas``, with only per-P-group counts on the
-    driver. ``c5_shard_size`` (default ``max(4096, 4k)``) bounds each
-    shard; set ``c5_exact_max=0`` to force the sharded path, or a huge
-    value to force the exact path."""
+    C5 scale knobs (see :func:`_one_source`): the bottom-up merge runs
+    the shared decision core per shard of DFS-adjacent P-subgroups
+    inside ``applyInPandas``; the driver holds only per-P-group counts.
+    Up to ``c5_exact_max`` subgroups there is one shard — the exact
+    global greedy, O(n_subgroups^2) time and O(n_subgroups * T) memory
+    in one task (up to ~460 MB at the default 1e5 and T = 143). Above
+    it shards of ``c5_shard_size`` subgroups (default ``max(4096,
+    4k)``) bound both. Set ``c5_exact_max=0`` to force multi-shard
+    runs, or a huge value to keep one shard."""
     if k < p:
         raise ValueError("k must be >= P (reference k_P_anonymity.py:40-44)")
     sources = sorted(r[0] for r in

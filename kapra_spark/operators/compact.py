@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import scoped_conf
-from .lineage import LINEAGE_COLS, partition_metrics
+from .lineage import LINEAGE_COLS, latest_lineage, partition_metrics
 
 
 def list_partition_files(spark: SparkSession, path: str,
@@ -134,15 +134,9 @@ def compact_partitions(spark: SparkSession, path: str,
     if lineage_path is not None and stage is not None:
         actual = {r["partition_key"]: (r["row_count"], r["checksum"])
                   for r in partition_metrics(df, partition_cols).collect()}
-        from pyspark.sql import Window
-        w = (Window.partitionBy("partition_key")
-             .orderBy(F.desc("committed_at"), F.desc("run_id")))
         expect = {r["partition_key"]: (r["row_count"], r["checksum"])
-                  for r in (spark.read.parquet(lineage_path)
-                            .filter(F.col("stage") == stage)
-                            .withColumn("_rn", F.row_number().over(w))
-                            .filter(F.col("_rn") == 1)
-                            .collect())}
+                  for r in latest_lineage(spark, lineage_path,
+                                          stage).collect()}
         for d in plan:
             k = d["partition_key"]
             if k in expect and actual.get(k) != expect[k]:

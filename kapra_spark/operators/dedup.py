@@ -392,7 +392,7 @@ def simhash_near_dups(sim_df: DataFrame, max_hamming: int = 3,
 # embedding near-dup (cosine)
 # ---------------------------------------------------------------------------
 
-def _norm_col(vec: str) -> F.Column:
+def norm_col(vec: str) -> F.Column:
     return F.sqrt(F.aggregate(F.transform(vec, lambda x: x * x),
                               F.lit(0.0), lambda acc, x: acc + x))
 
@@ -402,37 +402,15 @@ def dot_col(a: str | F.Column, b: str | F.Column) -> F.Column:
                        F.lit(0.0), lambda acc, x: acc + x)
 
 
-def plane_sig_udf(planes: np.ndarray):
-    """Random-hyperplane signature as ONE Arrow-batched pandas UDF: the
-    (n_planes, dim) matrix ships in the closure and each batch costs a
-    single NumPy matmul. The alternative — building
-    F.array(*[F.lit(p[j]) ...]) per plane — creates n_planes*dim
-    Catalyst literal nodes (65k at dim=4096 x 16 planes) and blows up
-    plan analysis long before data does; this keeps the plan O(1) in
-    embedding dimension. Returns a LongType bucket (bit i = sign of
-    plane i)."""
-    planes_t = np.ascontiguousarray(planes.astype(np.float64).T)
-    weights = (np.uint64(1) << np.arange(planes.shape[0], dtype=np.uint64))
-
-    @F.pandas_udf(T.LongType())
-    def sig(vec: pd.Series) -> pd.Series:
-        if len(vec) == 0:
-            return pd.Series(np.empty(0, dtype=np.int64))
-        m = np.stack(vec.to_numpy()).astype(np.float64)
-        bits = (m @ planes_t) > 0
-        out = (bits.astype(np.uint64) * weights[None, :]).sum(axis=1)
-        return pd.Series(out.astype(np.int64))
-
-    return sig
-
-
 def plane_sigs_udf(planes: np.ndarray):
-    """Multi-table variant: ``planes`` is (n_tables, n_planes, dim);
-    returns array<long> — one bucket per hash table, all tables
-    computed in a single (batch, dim) @ (dim, n_tables*n_planes)
-    matmul. Multi-table OR-amplification is the standard LSH recall
-    knob: P(candidate) = 1 - (1 - p^r)^L, traded against L× bucket
-    rows on the corpus side."""
+    """Random-hyperplane signatures as ONE Arrow-batched pandas UDF:
+    ``planes`` is (n_tables, n_planes, dim) and ships in the closure
+    (per-plane ``F.lit`` arrays would put n_planes * dim literal nodes
+    in the plan); returns array<long> — one bucket per hash table (bit
+    i = sign of plane i), all tables computed in a single (batch, dim)
+    @ (dim, n_tables*n_planes) matmul. Multi-table OR-amplification is
+    the standard LSH recall knob: P(candidate) = 1 - (1 - p^r)^L,
+    traded against L× bucket rows on the corpus side."""
     n_tables, n_planes, dim = planes.shape
     flat = np.ascontiguousarray(
         planes.astype(np.float64).reshape(n_tables * n_planes, dim).T)
@@ -467,7 +445,7 @@ def embedding_near_dups(emb_df: DataFrame, id_col: str = "vec_id",
 
     sigs = plane_sigs_udf(planes)
     hashed = (emb_df
-              .withColumn("_norm", _norm_col(vec_col))
+              .withColumn("_norm", norm_col(vec_col))
               .select(id_col, vec_col, "_norm",
                       F.posexplode(sigs(F.col(vec_col)))
                       .alias("_table", "_bucket")))

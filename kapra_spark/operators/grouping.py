@@ -45,6 +45,16 @@ ANON_SCHEMA = T.StructType([
 ])
 
 
+def token_matrix(tokens: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+    """``(values, sensitive)`` of a ``tokens`` column of equal-length
+    rows, both float64: the LAST token of each row is the sensitive
+    attribute (``sensitive``, shape (n,)), the rest are the series
+    (``values``, shape (n, T - 1)) — the one place that knows the
+    reference's column convention (includes/io.py:131-134)."""
+    mat = np.stack(tokens.to_numpy()).astype(np.float64)
+    return mat[:, :-1], mat[:, -1]
+
+
 def source_arrays(pdf: pd.DataFrame):
     """``(source, ids, values, sensitive)`` of one source, rows sorted by
     ``doc_id`` so results do not depend on partition layout (SURVEY.md
@@ -52,9 +62,9 @@ def source_arrays(pdf: pd.DataFrame):
     """
     source = pdf["source"].iloc[0]
     pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-    mat = np.stack(pdf["tokens"].to_numpy()).astype(np.float64)
-    sensitive = {i: int(mat[i, -1]) for i in range(len(mat))}
-    return source, pdf["doc_id"].tolist(), mat[:, :-1], sensitive
+    values, sens = token_matrix(pdf["tokens"])
+    sensitive = {i: int(v) for i, v in enumerate(sens)}
+    return source, pdf["doc_id"].tolist(), values, sensitive
 
 
 def render(ids: list, source: str, sensitive: dict, placed,

@@ -23,7 +23,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import cached, scoped_conf
@@ -202,28 +202,30 @@ def write_with_lineage(
             lineage_path, run_id, resume)[stage]
 
 
+def latest_lineage(spark: SparkSession, lineage_path: str,
+                   stage: str) -> DataFrame:
+    """The latest lineage row per partition of ``stage``. Picked by
+    ``row_number``, NOT orderBy + dropDuplicates: Spark does not
+    guarantee dropDuplicates keeps the first row of a prior sort."""
+    w = (Window.partitionBy("partition_key")
+         .orderBy(F.desc("committed_at"), F.desc("run_id")))
+    return (spark.read.parquet(lineage_path)
+            .filter(F.col("stage") == stage)
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn"))
+
+
 def verify_against_lineage(spark: SparkSession, path: str,
                            partition_cols: list[str], lineage_path: str,
                            stage: str) -> DataFrame:
     """Recompute per-partition (row_count, checksum) from the stored
     table and diff against the latest lineage records — the resume
     test's no-double-counting certificate."""
-    from pyspark.sql import Window
-
-    stored = spark.read.parquet(path)
-    actual = partition_metrics(stored, partition_cols)
-    # latest record per partition via row_number, NOT orderBy +
-    # dropDuplicates (Spark does not guarantee dropDuplicates keeps the
-    # first row of a prior sort)
-    w = (Window.partitionBy("partition_key")
-         .orderBy(F.desc("committed_at"), F.desc("run_id")))
-    lin = (spark.read.parquet(lineage_path)
-           .filter(F.col("stage") == stage)
-           .withColumn("_rn", F.row_number().over(w))
-           .filter(F.col("_rn") == 1)
-           .select("partition_key",
-                   F.col("row_count").alias("expect_rows"),
-                   F.col("checksum").alias("expect_checksum")))
+    actual = partition_metrics(spark.read.parquet(path), partition_cols)
+    lin = latest_lineage(spark, lineage_path, stage).select(
+        "partition_key", F.col("row_count").alias("expect_rows"),
+        F.col("checksum").alias("expect_checksum"))
     return (actual.join(lin, "partition_key", "full_outer")
             .withColumn("ok", (F.col("row_count") == F.col("expect_rows"))
                         & (F.col("checksum") == F.col("expect_checksum"))))

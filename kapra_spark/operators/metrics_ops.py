@@ -17,6 +17,7 @@ from pyspark.sql import types as T
 
 from ..functions import metrics as M
 from ..functions import sax as S
+from .grouping import token_matrix
 
 
 def group_value_loss(anon_df: DataFrame) -> DataFrame:
@@ -75,8 +76,7 @@ def pattern_loss_per_record(tokens_df: DataFrame, anon_df: DataFrame) -> DataFra
         lens_s = sax.str.len().to_numpy()
         for lt, ls in {(int(a), int(b)) for a, b in zip(lens_t, lens_s)}:
             rows = np.nonzero((lens_t == lt) & (lens_s == ls))[0]
-            mat = np.stack([np.asarray(tokens.iloc[i], dtype=np.float64)
-                            for i in rows])[:, :-1]
+            mat, _ = token_matrix(tokens.iloc[rows])
             joined_sax = "".join(sax.iloc[i] for i in rows)
             idx = (np.frombuffer(joined_sax.encode(), dtype=np.uint8)
                    .astype(np.int64).reshape(len(rows), ls) - 97)

@@ -26,12 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .dedup import dot_col, plane_sigs_udf
-
-
-def _norm(vec) -> F.Column:
-    return F.sqrt(F.aggregate(F.transform(vec, lambda x: x * x),
-                              F.lit(0.0), lambda acc, x: acc + x))
+from .dedup import dot_col, norm_col, plane_sigs_udf
 
 
 def topk_cosine_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 10,
@@ -40,10 +35,10 @@ def topk_cosine_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 10,
     """Exact cosine top-k per query (queries broadcast)."""
     c = (corpus.select(F.col(id_col).alias("corpus_id"),
                        F.col(vec_col).alias("cvec"))
-         .withColumn("cnorm", _norm("cvec")))
+         .withColumn("cnorm", norm_col("cvec")))
     q = (queries.select(F.col(id_col).alias("query_id"),
                         F.col(vec_col).alias("qvec"))
-         .withColumn("qnorm", _norm("qvec")))
+         .withColumn("qnorm", norm_col("qvec")))
     scored = (c.crossJoin(F.broadcast(q))
               .filter(F.col("corpus_id") != F.col("query_id"))
               .withColumn("cosine",
@@ -77,12 +72,12 @@ def topk_cosine_lsh(corpus: DataFrame, queries: DataFrame, k: int = 10,
 
     c = (corpus.select(F.col(id_col).alias("corpus_id"),
                        F.col(vec_col).alias("cvec"))
-         .withColumn("cnorm", _norm("cvec"))
+         .withColumn("cnorm", norm_col("cvec"))
          .select("corpus_id", "cvec", "cnorm",
                  F.posexplode(sigs(F.col("cvec"))).alias("table", "bucket")))
     q = (queries.select(F.col(id_col).alias("query_id"),
                         F.col(vec_col).alias("qvec"))
-         .withColumn("qnorm", _norm("qvec"))
+         .withColumn("qnorm", norm_col("qvec"))
          .select("query_id", "qvec", "qnorm",
                  F.posexplode(sigs(F.col("qvec"))).alias("table", "bucket0")))
     if multiprobe:
@@ -202,7 +197,7 @@ def ivf_assign(corpus: DataFrame, cents: np.ndarray,
     cells = _cell_udf(cents, nprobe=1)
     return (corpus.select(F.col(id_col).alias("corpus_id"),
                           F.col(vec_col).alias("cvec"))
-            .withColumn("cnorm", _norm("cvec"))
+            .withColumn("cnorm", norm_col("cvec"))
             .withColumn("cell", cells(F.col("cvec"))[0]))
 
 
@@ -248,7 +243,7 @@ def topk_cosine_ivf_at_rest(store, table: str, queries: DataFrame,
     probes = _cell_udf(cents, nprobe=nprobe)
     q = (queries.select(F.col(id_col).alias("query_id"),
                         F.col(vec_col).alias("qvec"))
-         .withColumn("qnorm", _norm("qvec"))
+         .withColumn("qnorm", norm_col("qvec"))
          .withColumn("cell", F.explode(probes(F.col("qvec")))))
     # literal probed-cell set -> partition pruning at the stored scan
     probed = sorted({r["cell"] for r in q.select("cell").distinct().collect()})
@@ -279,7 +274,7 @@ def topk_cosine_ivf(corpus: DataFrame, queries: DataFrame, k: int = 10,
     probes = _cell_udf(cents, nprobe=nprobe)
     q = (queries.select(F.col(id_col).alias("query_id"),
                         F.col(vec_col).alias("qvec"))
-         .withColumn("qnorm", _norm("qvec"))
+         .withColumn("qnorm", norm_col("qvec"))
          .withColumn("cell", F.explode(probes(F.col("qvec")))))
     scored = (c.join(F.broadcast(q), "cell")
               .filter(F.col("corpus_id") != F.col("query_id"))

@@ -36,12 +36,12 @@ tree with reference semantics.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import sax as S
+from .grouping import token_matrix
 
 _LEAF_SCHEMA = ("doc_id string, leaf_id string, level int, "
                 "pattern string, label string, order_key string")
@@ -59,7 +59,7 @@ def pattern_arrays(tokens_df: DataFrame, paa_value: int) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mat = np.stack(pdf["tokens"].to_numpy()).astype(np.float64)[:, :-1]
+            mat, _ = token_matrix(pdf["tokens"])
             cols = [S.sax2d(mat, paa_value, lvl) for lvl in levels]
             yield pd.DataFrame({
                 "doc_id": pdf["doc_id"],

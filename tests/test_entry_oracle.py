@@ -4,8 +4,10 @@
 output digest (kapra and naive), the global pattern loss, and the
 distributed create-tree's leaf and order-contract mismatch counts
 against the in-memory kernel (300 rows, and 10^4 rows in 32
-partitions). These queries build their own synthetic input, so no sf
-data is needed."""
+partitions), and the distributed anonymizer's row mismatches against
+its in-memory canonical twin (one-shard merge) with the multi-shard
+merge's invariants. These queries build their own synthetic input, so
+no sf data is needed."""
 
 import importlib.util
 import os
@@ -27,7 +29,8 @@ def _load(name: str, rel: str):
 
 @pytest.mark.parametrize("name", ["kp_anonymize_kapra", "kp_anonymize_naive",
                                   "pattern_loss_global", "tree_dist_parity",
-                                  "tree_dist_mid"])
+                                  "tree_dist_mid", "kp_dist_parity",
+                                  "kp_dist_sharded"])
 def test_query_matches_oracle(spark, name):
     entry = _load("__spark_entry__", "__spark_entry__.py")
     normalize = _load("check_oracle", "tools/check_oracle.py").normalize
