@@ -23,10 +23,13 @@ The Spark-facing (DataFrame aggregate) versions live in
 
 from __future__ import annotations
 
+from functools import cache
+from typing import Sequence
+
 import numpy as np
 
-from .sax import paa, reconstruct_paa, znorm
-
+from .sax import (MAX_LEVEL, interval_medians, paa, paa2d, reconstruct_paa,
+                  znorm, znorm2d)
 
 
 def seqsum(a: np.ndarray, axis: int | None = None):
@@ -121,10 +124,52 @@ def pattern_loss(series: np.ndarray, pr: str, paa_size: int,
     """PL = cosine_distance(PAA(znorm(series)), reconstruct(pr)).
 
     Reference: includes/pattern_loss.py:167-197. The scalar test
-    reference for the batched
-    ``operators.metrics_ops.pattern_loss_per_record``
+    reference for the batched :func:`pattern_loss_batch`
     (tests/test_anonymize.py).
     """
     p = paa(znorm(np.asarray(series, dtype=np.float64), znorm_threshold), paa_size)
     p_star = reconstruct_paa(pr)
     return cosine_distance(p, p_star)
+
+
+@cache
+def median_lut() -> np.ndarray:
+    """(alphabet size, letter) -> empirical N(0,1) interval median, the
+    table :func:`pattern_loss_batch` reconstructs SAX patterns from;
+    built once per process (reference includes/pattern_loss.py:49-129)."""
+    lut = np.zeros((MAX_LEVEL + 2, MAX_LEVEL + 2))
+    for lvl in range(2, MAX_LEVEL + 2):
+        lut[lvl, :lvl] = interval_medians(lvl)
+    return lut
+
+
+def pattern_loss_batch(values: np.ndarray, sax: Sequence[str],
+                       lut: np.ndarray) -> np.ndarray:
+    """:func:`pattern_loss` of every row of the (rows, T) ``values``
+    against its SAX string, PAA size = ``len(sax[i])``; ``lut`` is
+    :func:`median_lut`. Rows are batched by SAX width, so the znorm/PAA
+    kernels and the median lookup are single 2-D NumPy ops."""
+    values = np.asarray(values, dtype=np.float64)
+    out = np.empty(len(values))
+    widths = np.fromiter((len(s) for s in sax), dtype=np.int64,
+                         count=len(values))
+    for w in np.unique(widths):
+        rows = np.nonzero(widths == w)[0]
+        idx = (np.frombuffer("".join(sax[i] for i in rows).encode(),
+                             dtype=np.uint8)
+               .astype(np.int64).reshape(len(rows), w) - 97)
+        levels = idx.max(axis=1) + 1
+        p_star = np.where(levels[:, None] > 1, lut[levels[:, None], idx], 0.0)
+        p = paa2d(znorm2d(values[rows]), int(w))
+        # cosine_distance's conventions, vectorized
+        su, sv = p.sum(axis=1), p_star.sum(axis=1)
+        nu = np.linalg.norm(p, axis=1)
+        nv = np.linalg.norm(p_star, axis=1)
+        dot = (p * p_star).sum(axis=1)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = 1.0 - dot / (nu * nv)
+        out[rows] = np.where(
+            (su > 0) & (sv > 0),
+            np.where((nu == 0) | (nv == 0), 1.0, cos),
+            np.where((su == 0) & (sv == 0), 0.0, 1.0))
+    return out

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..functions import clustering as C
+from ..functions import metrics as M
 
 ANON_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
@@ -42,6 +43,16 @@ ANON_SCHEMA = T.StructType([
     T.StructField("lo", T.ArrayType(T.LongType()), True),
     T.StructField("hi", T.ArrayType(T.LongType()), True),
     T.StructField("suppressed", T.BooleanType(), False),
+])
+
+# ANON_SCHEMA plus each record's losses, for scoring a run in one
+# aggregate (plans.anonymize_plan): ``pl`` its pattern loss (null
+# without a pattern), ``vl`` its instant value loss (null when
+# suppressed), ``n_in`` the source's input rows on one row, 0 elsewhere
+SCORED_SCHEMA = T.StructType(ANON_SCHEMA.fields + [
+    T.StructField("pl", T.DoubleType(), True),
+    T.StructField("vl", T.DoubleType(), True),
+    T.StructField("n_in", T.LongType(), False),
 ])
 
 
@@ -73,7 +84,8 @@ def render(ids: list, source: str, sensitive: dict, placed,
     in k-group order, then ``suppressed`` rows. The LAST placement of a
     row wins and suppression overwrites it: the reference's bottom-up
     can duplicate an id across k-groups, and its renderer dedupes
-    exactly this way (anonymized_dataset.py:22-50).
+    exactly this way (anonymized_dataset.py:22-50). The frame is
+    indexed by each record's row in ``ids``.
     """
     rowmap: dict[int, tuple] = {}
     for r, gid, sax, lo, hi in placed:
@@ -85,24 +97,48 @@ def render(ids: list, source: str, sensitive: dict, placed,
     for row in rowmap.values():
         for c, v in zip(cols, row):
             out[c].append(v)
-    return pd.DataFrame(out)
+    return pd.DataFrame(out, index=list(rowmap))
 
 
-def per_source(tokens_df: DataFrame, kernel, k: int, p: int,
-               *args) -> DataFrame:
+def score(out: pd.DataFrame, values: np.ndarray, n_in: int,
+          lut: np.ndarray) -> pd.DataFrame:
+    """A :func:`render` frame plus SCORED_SCHEMA's loss columns. ``pl``
+    is ``metrics.pattern_loss_batch`` of the record's series against its
+    pattern; ``vl`` is ``sqrt(sum((hi - lo)^2) / t)`` of its own rendered
+    envelope, summed as ``metrics_ops.group_value_loss`` sums it, so the
+    rows of a k-group add up to that group's VL."""
+    rows = out.index.to_numpy()
+    has_sax = out["sax"].notna().to_numpy()
+    pl = np.full(len(out), np.nan)
+    pl[has_sax] = M.pattern_loss_batch(
+        values[rows[has_sax]], out["sax"][has_sax].tolist(), lut)
+    kept = ~out["suppressed"].to_numpy(dtype=bool)
+    vl = np.full(len(out), np.nan)
+    if kept.any():
+        rng = np.stack(out["hi"][kept]) - np.stack(out["lo"][kept])
+        vl[kept] = np.sqrt(M.seqsum((rng * rng).astype(np.float64), axis=1)
+                           / rng.shape[1])
+    n = np.zeros(len(out), dtype=np.int64)
+    n[:1] = n_in
+    return out.assign(pl=pl, vl=vl, n_in=n)
+
+
+def per_source(tokens_df: DataFrame, kernel, k: int, p: int, *args,
+               schema: T.StructType = ANON_SCHEMA) -> DataFrame:
     """``kernel(pdf, k, p, *args)`` once per ``source`` (one Arrow batch
-    each), emitting ANON_SCHEMA."""
+    each), emitting ``schema``."""
     if k < p:
         raise ValueError("k must be >= P (reference k_P_anonymity.py:40-44)")
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         return kernel(pdf, k, p, *args)
 
-    return tokens_df.groupBy("source").applyInPandas(fn, ANON_SCHEMA)
+    return tokens_df.groupBy("source").applyInPandas(fn, schema)
 
 
 def _anonymize_source(pdf: pd.DataFrame, k: int, p: int, paa: int, l: int,
-                      algorithm: str, seed: int) -> pd.DataFrame:
+                      algorithm: str, seed: int,
+                      lut: np.ndarray) -> pd.DataFrame:
     source, ids, values, sensitive = source_arrays(pdf)
     rnd = C.NumpyRandomSource(C.stable_seed(seed, source))
     rows = list(range(len(values)))
@@ -144,8 +180,20 @@ def _anonymize_source(pdf: pd.DataFrame, k: int, p: int, paa: int, l: int,
         ghi = values[grp].max(axis=0).astype(np.int64)
         placed += [(r, f"{source}#{gi}", patterns.get(r), glo, ghi)
                    for r in grp]
-    return render(ids, source, sensitive, placed,
-                  [r for grp in suppressed_rows for r in grp])
+    return score(render(ids, source, sensitive, placed,
+                        [r for grp in suppressed_rows for r in grp]),
+                 values, len(pdf), lut)
+
+
+def kp_anonymize_scored(tokens_df: DataFrame, k: int, p: int, paa: int,
+                        l: int = 1, algorithm: str = "kapra",
+                        seed: int = 42) -> DataFrame:
+    """:func:`kp_anonymize` rows with SCORED_SCHEMA's loss columns, so
+    one aggregate scores the run: ``sum(vl) / count(*)`` is the average
+    VL over all output rows and ``sum(pl) / sum(n_in)`` the average PL
+    over input rows. ``doc_id`` must be unique within a source."""
+    return per_source(tokens_df, _anonymize_source, k, p, paa, l,
+                      algorithm, seed, M.median_lut(), schema=SCORED_SCHEMA)
 
 
 def kp_anonymize(tokens_df: DataFrame, k: int, p: int, paa: int, l: int = 1,
@@ -162,5 +210,5 @@ def kp_anonymize(tokens_df: DataFrame, k: int, p: int, paa: int, l: int = 1,
     reference semantics (groups span the source) with records
     distributed through every phase.
     """
-    return per_source(tokens_df, _anonymize_source, k, p, paa, l,
-                      algorithm, seed)
+    return kp_anonymize_scored(tokens_df, k, p, paa, l, algorithm,
+                               seed).select(*ANON_SCHEMA.fieldNames())

@@ -1,10 +1,19 @@
-"""Anonymization quality metrics as Spark aggregates (SURVEY.md A3-A6).
+"""Anonymization quality metrics as Spark aggregates (SURVEY.md A3-A6):
+the reference path for scoring a stored anonymized table.
 
-VL/NCP run as native DataFrame aggregations over the stored envelope
+``plans.anonymize_plan.run_kp_anonymity`` does not run these: the
+anonymize kernel emits each record's VL and PL with its rows
+(``operators.grouping.kp_anonymize_scored``). These aggregates
+recompute both from the ``ANON_SCHEMA`` table alone, so they are the
+independent reference the in-kernel losses are tested against
+(tests/test_anonymize.py), and they back the ``pattern_loss_global``
+oracle query and perfbench's layer sweep.
+
+VL runs as native DataFrame aggregations over the stored envelope
 arrays (higher-order functions — no Python in the loop); pattern loss
-is an Arrow-vectorized pandas UDF that broadcasts the precomputed
-(level, letter) -> empirical-median table (seeded, deterministic —
-reference includes/pattern_loss.py:49-129).
+joins the anonymized rows back to their series and runs the batched
+NumPy kernel ``functions.metrics.pattern_loss_batch`` in an
+Arrow-vectorized pandas UDF.
 """
 
 from __future__ import annotations
@@ -16,7 +25,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import metrics as M
-from ..functions import sax as S
 from .grouping import token_matrix
 
 
@@ -41,7 +49,9 @@ def group_value_loss(anon_df: DataFrame) -> DataFrame:
 
 def global_value_loss(anon_df: DataFrame) -> DataFrame:
     """tot/avg VL; the average divides by ALL output rows including
-    suppressed ones (reference metric.py:121-123)."""
+    suppressed ones (reference metric.py:121-123). The independent
+    reference for the in-kernel ``vl`` column of
+    ``grouping.kp_anonymize_scored``."""
     per_group = group_value_loss(anon_df)
     total_rows = anon_df.count()
     return per_group.agg(
@@ -58,45 +68,18 @@ def pattern_loss_per_record(tokens_df: DataFrame, anon_df: DataFrame) -> DataFra
         .join(anon_df.filter(F.col("sax").isNotNull()).select("doc_id", "sax"), "doc_id")
     )
 
-    # precompute a (level, letter) -> empirical-median lookup matrix on
-    # the driver; tiny, ships inside the UDF closure
-    med_lut = np.zeros((S.MAX_LEVEL + 2, S.MAX_LEVEL + 2))
-    for lvl in range(2, S.MAX_LEVEL + 2):
-        med_lut[lvl, :lvl] = S.interval_medians(lvl)
+    lut = M.median_lut()
 
     @F.pandas_udf(T.DoubleType())
     def pl_udf(tokens: pd.Series, sax: pd.Series) -> pd.Series:
         out = np.empty(len(tokens))
-        if len(tokens) == 0:
-            return pd.Series(out)
-        # batch rows by (series length, sax length): the znorm/PAA
-        # kernels and the median lookup are then single 2-D NumPy ops
-        lens_t = np.fromiter((len(t) for t in tokens), dtype=np.int64,
-                             count=len(tokens))
-        lens_s = sax.str.len().to_numpy()
-        for lt, ls in {(int(a), int(b)) for a, b in zip(lens_t, lens_s)}:
-            rows = np.nonzero((lens_t == lt) & (lens_s == ls))[0]
-            mat, _ = token_matrix(tokens.iloc[rows])
-            joined_sax = "".join(sax.iloc[i] for i in rows)
-            idx = (np.frombuffer(joined_sax.encode(), dtype=np.uint8)
-                   .astype(np.int64).reshape(len(rows), ls) - 97)
-            levels = idx.max(axis=1) + 1
-            p_star = np.where(levels[:, None] > 1,
-                              med_lut[levels[:, None], idx], 0.0)
-            p = S.paa2d(S.znorm2d(mat), ls)
-            # reference cosine-distance conventions, vectorized
-            # (functions/metrics.py:100-113)
-            su, sv = p.sum(axis=1), p_star.sum(axis=1)
-            nu = np.linalg.norm(p, axis=1)
-            nv = np.linalg.norm(p_star, axis=1)
-            dot = (p * p_star).sum(axis=1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = 1.0 - dot / (nu * nv)
-            vals = np.where(
-                (su > 0) & (sv > 0),
-                np.where((nu == 0) | (nv == 0), 1.0, cos),
-                np.where((su == 0) & (sv == 0), 0.0, 1.0))
-            out[rows] = vals
+        lens = np.fromiter((len(t) for t in tokens), dtype=np.int64,
+                           count=len(tokens))
+        for n in np.unique(lens):
+            rows = np.nonzero(lens == n)[0]
+            values, _ = token_matrix(tokens.iloc[rows])
+            out[rows] = M.pattern_loss_batch(values, sax.iloc[rows].tolist(),
+                                             lut)
         return pd.Series(out)
 
     return joined.select("doc_id", pl_udf("tokens", "sax").alias("pl"))
@@ -104,7 +87,10 @@ def pattern_loss_per_record(tokens_df: DataFrame, anon_df: DataFrame) -> DataFra
 
 def global_pattern_loss(tokens_df: DataFrame, anon_df: DataFrame) -> DataFrame:
     """tot/avg PL; average divides by the number of ORIGINAL series
-    (reference pattern_loss.py:249-256)."""
+    (reference pattern_loss.py:249-256). The independent reference for
+    the in-kernel ``pl`` column of ``grouping.kp_anonymize_scored``.
+    ``doc_id`` must be unique in both frames: the join counts a
+    duplicated id once per pairing."""
     per_rec = pattern_loss_per_record(tokens_df, anon_df)
     n_series = tokens_df.count()
     return per_rec.agg(

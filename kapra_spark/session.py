@@ -27,11 +27,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` in the sandbox;
-    on a real cluster pass ``None`` and let spark-submit decide.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, or to one task
+    slot per core this process may run on when that is unset. Pass the
+    cluster's master URL explicitly to run elsewhere.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
+        cpus = (os.environ.get("SPARK_GRAFT_CPUS")
+                or len(os.sched_getaffinity(0)))
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         # ~1x core count locally; on a cluster use 2-3x total cores.

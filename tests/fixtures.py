@@ -28,3 +28,20 @@ def int_series_matrix(n: int = 48, t: int = 8, seed: int = 42,
             v = int(np.clip(v + rng.integers(-3, 4), 0, vmax))
             out[i, j] = v
     return out
+
+
+def jobs_of(spark, call):
+    """Spark jobs that ``call`` runs: job ids started between two 1-task
+    marker jobs of one job group (AQE map-stage jobs count too)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("job_count", "job_count")
+    try:
+        sc.parallelize([0], 1).count()
+        before = set(sc.statusTracker().getJobIdsForGroup("job_count"))
+        call()
+        sc.parallelize([0], 1).count()
+        after = set(sc.statusTracker().getJobIdsForGroup("job_count"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(after - before) - 1  # minus the closing marker

@@ -8,6 +8,7 @@ import pytest
 from kapra_spark import datagen
 from kapra_spark.functions import metrics as M
 from kapra_spark.operators.grouping import kp_anonymize
+from tests.fixtures import jobs_of
 
 K, P, PAA, L = 8, 4, 4, 2
 N = 120
@@ -219,20 +220,139 @@ def test_experiment_grid(spark, tokens, tmp_path):
             "avg_value_loss"} <= set(stored.columns)
 
 
+def _persisted(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _losses(row):
+    return {k: v for k, v in row.items() if k.endswith("_loss")}
+
+
 def test_run_kp_anonymity_releases_its_cache(spark, tokens):
-    """The plan caches the anonymized table for its two loss jobs and
-    releases it: Spark's cache manager ends as it started, so a second
-    call on the same input anonymizes again instead of reading a stale
-    cache, and reports the same losses."""
+    """The plan leaves nothing cached: Spark's cache manager ends as it
+    started, so a second call on the same input anonymizes again instead
+    of reading a stale cache, and reports the same losses."""
     from kapra_spark.plans.anonymize_plan import run_kp_anonymity
 
-    def persisted():
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-
-    before = persisted()
+    tokens.count()  # the fixture's own cache is not the plan's
+    before = _persisted(spark)
     a = run_kp_anonymity(spark, "kapra", K, P, PAA, L, tokens)
-    assert persisted() == before
+    assert _persisted(spark) == before
     b = run_kp_anonymity(spark, "kapra", K, P, PAA, L, tokens)
-    assert persisted() == before
+    assert _persisted(spark) == before
     assert {k: v for k, v in a.items() if k != "eta"} == \
         {k: v for k, v in b.items() if k != "eta"}
+
+
+def test_run_kp_anonymity_job_count(spark, tokens):
+    """A call without ``output_path`` runs 3 Spark jobs: the losses come
+    out of the anonymize kernel, so one aggregate over its output scores
+    the run. Re-scoring the output from the input (count, join back to
+    the series, a second Python crossing) took 14."""
+    from kapra_spark.plans.anonymize_plan import run_kp_anonymity
+
+    tokens.count()  # the fixture's own cache is not the plan's
+    assert jobs_of(spark, lambda: run_kp_anonymity(
+        spark, "kapra", K, P, PAA, L, tokens)) == 3
+
+
+@pytest.fixture(scope="module")
+def tokens_tiny_source(spark):
+    """The fixture's rows plus a source of K - 3 records: too few for a
+    k-group, so kapra suppresses them (naive keeps them as one group)."""
+    pdf = datagen.tokens_pdf(N, n_tok=13, seed=11, gap_fraction=0.0)
+    tiny = datagen.tokens_pdf(K - 3, n_tok=13, seed=12, gap_fraction=0.0)
+    tiny = tiny.assign(doc_id="t" + tiny["doc_id"], source="tiny")
+    return spark.createDataFrame(pd.concat([pdf, tiny], ignore_index=True),
+                                 schema=datagen.TOKENS_SCHEMA).cache()
+
+
+@pytest.mark.parametrize("algorithm,l,frame", [
+    ("kapra", 1, "tokens"), ("kapra", 2, "tokens"),
+    ("naive", 1, "tokens"), ("naive", 2, "tokens"),
+    ("kapra", 2, "tokens_tiny_source"), ("naive", 2, "tokens_tiny_source"),
+])
+def test_in_kernel_losses_match_reference(spark, request, algorithm, l,
+                                          frame):
+    """The losses the anonymize kernel emits equal the reference
+    aggregates over the stored table (``metrics_ops``), per row and per
+    run, to a relative 1e-9: ``vl`` is the record's share of its group's
+    VL (null when suppressed), ``pl`` its pattern loss (null without a
+    pattern), and ``n_in`` sums to the input rows."""
+    from kapra_spark.operators.grouping import (ANON_SCHEMA,
+                                                kp_anonymize_scored)
+    from kapra_spark.operators.metrics_ops import (global_pattern_loss,
+                                                   global_value_loss,
+                                                   group_value_loss,
+                                                   pattern_loss_per_record)
+    from kapra_spark.plans.anonymize_plan import run_kp_anonymity
+
+    tokens = request.getfixturevalue(frame)
+    n_in = tokens.count()
+    scored = kp_anonymize_scored(tokens, k=K, p=P, paa=PAA, l=l,
+                                 algorithm=algorithm).cache()
+    anon = scored.select(*ANON_SCHEMA.fieldNames())
+    rows = scored.toPandas()
+    if frame == "tokens_tiny_source" and algorithm == "kapra":
+        assert rows["suppressed"].any()
+
+    group_vl = {r["group_id"]: r["vl"] / r["n"]
+                for r in group_value_loss(anon).collect()}
+    for gid, supp, vl in zip(rows["group_id"], rows["suppressed"],
+                             rows["vl"]):
+        if supp:
+            assert pd.isna(vl)
+        else:
+            assert vl == pytest.approx(group_vl[gid], rel=1e-9, abs=0)
+    ref_pl = {r["doc_id"]: r["pl"]
+              for r in pattern_loss_per_record(tokens, anon).collect()}
+    assert set(ref_pl) == set(rows["doc_id"][rows["sax"].notna()])
+    for doc, sax, pl in zip(rows["doc_id"], rows["sax"], rows["pl"]):
+        if sax is None:
+            assert pd.isna(pl)
+        else:
+            assert pl == pytest.approx(ref_pl[doc], rel=1e-9, abs=1e-15)
+    assert rows["n_in"].sum() == n_in
+
+    vl = global_value_loss(anon).collect()[0]
+    pl = global_pattern_loss(tokens, anon).collect()[0]
+    scored.unpersist()
+    got = run_kp_anonymity(spark, algorithm, K, P, PAA, l, tokens)
+    for key, ref in (("tot_value_loss", vl), ("avg_value_loss", vl),
+                     ("tot_pattern_loss", pl), ("avg_pattern_loss", pl)):
+        assert got[key] == pytest.approx(ref[key], rel=1e-9, abs=0), key
+
+
+def test_run_kp_anonymity_output_path(spark, tokens, tmp_path):
+    """With ``output_path`` the plan stores the ``kp_anonymize`` rows
+    under ``ANON_SCHEMA``, appends the metrics row to ``results_path``,
+    reports the losses of the call without ``output_path`` and releases
+    the cache it scores from."""
+    from kapra_spark.operators.grouping import ANON_SCHEMA
+    from kapra_spark.plans.anonymize_plan import run_kp_anonymity
+
+    out, res = str(tmp_path / "anon"), str(tmp_path / "results")
+    tokens.count()  # the fixture's own cache is not the plan's
+    before = _persisted(spark)
+    row = run_kp_anonymity(spark, "kapra", K, P, PAA, L, tokens,
+                           output_path=out, results_path=res)
+    assert _persisted(spark) == before
+
+    stored = spark.read.parquet(out)
+    assert ([(f.name, f.dataType) for f in stored.schema]
+            == [(f.name, f.dataType) for f in ANON_SCHEMA])
+
+    def canon(df):
+        pdf = df.toPandas().sort_values("doc_id").reset_index(drop=True)
+        return [[None if v is None or (isinstance(v, float) and np.isnan(v))
+                 else list(v) if isinstance(v, np.ndarray) else v
+                 for v in r] for r in pdf.itertuples(index=False)]
+
+    assert canon(stored) == canon(kp_anonymize(tokens, k=K, p=P, paa=PAA,
+                                               l=L, algorithm="kapra"))
+    # the cached plan may split the partial sums differently
+    assert _losses(row) == pytest.approx(_losses(
+        run_kp_anonymity(spark, "kapra", K, P, PAA, L, tokens)), rel=1e-12)
+    assert [r.asDict() for r in spark.read.parquet(res)
+            .drop("eta", "run_ts").collect()] == \
+        [{k: v for k, v in row.items() if k != "eta"}]

@@ -7,6 +7,7 @@ import pytest
 
 from kapra_spark import datagen
 from kapra_spark.plans.rollup_plan import run_rollup_pipeline
+from tests.fixtures import jobs_of
 
 
 @pytest.fixture(scope="module")
@@ -187,30 +188,13 @@ def test_kill_before_lineage_append_reruns_idempotently(spark, tokens,
         assert v.filter(~F.col("ok") | F.col("ok").isNull()).count() == 0
 
 
-def _jobs_of(spark, call):
-    """Spark jobs that ``call`` runs: job ids started between two 1-task
-    marker jobs of one job group (AQE map-stage jobs count too)."""
-    sc = spark.sparkContext
-    sc.setJobGroup("job_count", "job_count")
-    try:
-        sc.parallelize([0], 1).count()
-        before = set(sc.statusTracker().getJobIdsForGroup("job_count"))
-        call()
-        sc.parallelize([0], 1).count()
-        after = set(sc.statusTracker().getJobIdsForGroup("job_count"))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(after - before) - 1  # minus the closing marker
-
-
 def test_pipeline_job_count(spark, tokens, tmp_path):
     """A fresh default call runs 9 Spark jobs and a full resume 5: the
     kernel runs once into the one cache and the lineage is read once
     per call. Dropping the kernel cache (resume: 2 jobs) or a lineage
     round-trip per stage (fresh: 15 jobs) changes these counts."""
     base = str(tmp_path / "pipe")
-    assert _jobs_of(spark, lambda: run_rollup_pipeline(
+    assert jobs_of(spark, lambda: run_rollup_pipeline(
         spark, tokens, base, run_id="r1")) == 9
-    assert _jobs_of(spark, lambda: run_rollup_pipeline(
+    assert jobs_of(spark, lambda: run_rollup_pipeline(
         spark, tokens, base, run_id="r2")) == 5

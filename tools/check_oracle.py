@@ -3,7 +3,8 @@ a given sf, compare row count / sorted-column schema / order-insensitive
 values. Usage: python tools/check_oracle.py [sf_dir] [query ...]
 
 Unknown query names exit non-zero before any Spark work. The master is
-``get_spark``'s default, ``local[$SPARK_GRAFT_CPUS]``.
+``get_spark``'s default: ``local[$SPARK_GRAFT_CPUS]``, else one task
+slot per usable core.
 """
 
 from __future__ import annotations
