@@ -38,7 +38,8 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from .metrics import envelope, ncp_env, seqsum, value_loss_env
-from .sax import MAX_LEVEL, cuts_for_asize, paa, sax2d, ts_to_string, znorm
+from .sax import (MAX_LEVEL, cuts_for_asize, paa, paa2d, sax_of_paa,
+                  ts_to_string, znorm, znorm2d)
 
 ROUNDS = 6  # NCP/VL maximization rounds (reference includes/common.py:7)
 
@@ -370,24 +371,28 @@ class Leaf:
     label: str = "leaf"
 
 
-def _sax_of(values: np.ndarray, rows: list[int], paa_value: int, level: int) -> list[str]:
-    return sax2d(values[rows], paa_value, level)
+def _sax_of(values: np.ndarray, pa: np.ndarray, rows: list[int],
+            paa_value: int, level: int) -> list[str]:
+    """SAX strings of ``rows`` at alphabet size ``level``, cut from the
+    tree's PAA matrix ``pa``."""
+    return sax_of_paa(pa[rows], values[rows], paa_value, level)
 
 
-def _maximize_level(values: np.ndarray, rows: list[int], paa_value: int,
-                    level: int, max_level: int) -> tuple[int, str | None]:
+def _maximize_level(values: np.ndarray, pa: np.ndarray, rows: list[int],
+                    paa_value: int, level: int,
+                    max_level: int) -> tuple[int, str | None]:
     """Raise the node's level while every member still shares one
     pattern (reference includes/node.py:197-222). The loop's bound
     allows the level to reach ``max_level + 1``, which we keep."""
     original = level
     equal = True
     while equal and level <= max_level:
-        prs = _sax_of(values, rows, paa_value, level + 1)
+        prs = _sax_of(values, pa, rows, paa_value, level + 1)
         equal = all(p == prs[0] for p in prs[1:]) if len(prs) > 1 else True
         if equal:
             level += 1
     if level != original:
-        return level, _sax_of(values, rows[:1], paa_value, level)[0]
+        return level, _sax_of(values, pa, rows[:1], paa_value, level)[0]
     return level, None
 
 
@@ -402,10 +407,16 @@ def split_node(
     good: list[Leaf],
     bad: list[Leaf],
     canonical: bool = False,
+    pa: np.ndarray | None = None,
 ) -> None:
     """One node of the pattern tree; recursion order (merged-TB child
     first, then TB children, then TG children) matches the reference so
     leaf-list ordering — which downstream phases iterate — is equal.
+
+    ``pa`` is the tree's PAA matrix, ``paa2d(znorm2d(values))`` on the
+    root's rows (other rows unset): znorm and PAA are row-wise and do
+    not depend on the level, so every node cuts its letters from it.
+    The root computes it when it is not given.
 
     ``canonical=True`` applies the distributed-path order contract: the
     merged-TB leaf's rows are sorted (ascending row index == doc order
@@ -419,13 +430,17 @@ def split_node(
     if level == max_level:
         good.append(Leaf(level, pattern, rows, "good-leaf"))
         return
+    if pa is None:
+        pa = np.empty((len(values), paa_value))
+        pa[rows] = paa2d(znorm2d(values[rows]), paa_value)
     if p_value <= size < 2 * p_value:
-        new_level, new_pattern = _maximize_level(values, rows, paa_value, level, max_level)
+        new_level, new_pattern = _maximize_level(values, pa, rows, paa_value,
+                                                 level, max_level)
         good.append(Leaf(new_level, new_pattern if new_pattern is not None else pattern,
                          rows, "good-leaf"))
         return
 
-    prs = _sax_of(values, rows, paa_value, level + 1)
+    prs = _sax_of(values, pa, rows, paa_value, level + 1)
     tentative: dict[str, list[int]] = {}
     for r, pr in zip(rows, prs):
         tentative.setdefault(pr, []).append(r)
@@ -452,20 +467,20 @@ def split_node(
         good.append(Leaf(level, pattern, merged, "good-leaf"))
         for pr, g in tg:
             split_node(values, g, level + 1, pr, p_value, paa_value, max_level,
-                       good, bad, canonical)
+                       good, bad, canonical, pa)
     else:
         nc = len(tg) + len(tb)
         if nc >= 2:
             for pr, g in tb:
                 split_node(values, g, level + 1, pr, p_value, paa_value,
-                           max_level, good, bad, canonical)
+                           max_level, good, bad, canonical, pa)
             for pr, g in tg:
                 split_node(values, g, level + 1, pr, p_value, paa_value,
-                           max_level, good, bad, canonical)
+                           max_level, good, bad, canonical, pa)
         else:
             pr, g = tg[0]
             split_node(values, g, level + 1, pr, p_value, paa_value,
-                       max_level, good, bad, canonical)
+                       max_level, good, bad, canonical, pa)
 
 
 def merge_bad_into_good(values: np.ndarray, good: list[Leaf], bad: list[Leaf]) -> None:
@@ -670,26 +685,36 @@ def create_tree(
 # C5: bottom-up k-group formation (reference includes/k_anonymity.py:34-167)
 # ---------------------------------------------------------------------------
 
-def _union_vl_vec(base_hi, base_lo, base_n, envs_hi, envs_lo, envs_n, t) -> np.ndarray:
-    hi = np.maximum(base_hi, envs_hi)
-    lo = np.minimum(base_lo, envs_lo)
-    return (base_n + envs_n) * _metric_rows("kapra", hi, lo, t)
-
-
-def _find_min_vl(envs_hi, envs_lo, envs_n, ignored: set[int],
-                 base: Env | None, t: int) -> tuple[int | None, float]:
-    """First index minimizing VL(candidate ∪ base); ``base=None`` means
-    VL of the candidate alone. Strict < (first-min wins), like the
-    reference's find_group_with_min_vl."""
+def _union_vl(envs_hi, envs_lo, envs_n, base: Env | None, t: int) -> np.ndarray:
+    """VL(candidate ∪ base) per candidate row; ``base=None`` means VL of
+    the candidate alone."""
     if base is None:
-        vl = envs_n * _metric_rows("kapra", envs_hi, envs_lo, t)
-    else:
-        vl = _union_vl_vec(base.hi, base.lo, base.n, envs_hi, envs_lo, envs_n, t)
-    best, best_vl = None, float("inf")
-    for i in range(len(vl)):
-        if i not in ignored and vl[i] < best_vl:
-            best, best_vl = i, float(vl[i])
-    return best, best_vl
+        return envs_n * _metric_rows("kapra", envs_hi, envs_lo, t)
+    hi = np.maximum(base.hi, envs_hi)
+    lo = np.minimum(base.lo, envs_lo)
+    return (base.n + envs_n) * _metric_rows("kapra", hi, lo, t)
+
+
+def _first_min(vl: np.ndarray) -> tuple[int | None, float]:
+    """Position of the first minimum of ``vl``, the reference's strict-<
+    scan from ``inf``: NaN never wins and ``(None, inf)`` when no value
+    is finite."""
+    vl = np.where(np.isnan(vl), np.inf, vl)
+    if len(vl):
+        j = int(np.argmin(vl))
+        if vl[j] < np.inf:
+            return j, float(vl[j])
+    return None, math.inf
+
+
+def _find_min_vl(envs_hi, envs_lo, envs_n, live: np.ndarray,
+                 base: Env | None, t: int) -> tuple[int | None, float]:
+    """First index in ``live`` (ascending candidate indices) minimizing
+    VL(candidate ∪ base), like the reference's find_group_with_min_vl;
+    only the live candidates are evaluated."""
+    j, vl = _first_min(_union_vl(envs_hi[live], envs_lo[live], envs_n[live],
+                                 base, t))
+    return (None, vl) if j is None else (int(live[j]), vl)
 
 
 @dataclass
@@ -742,20 +767,23 @@ def kgroups_from_subgroups(
         envs_hi = envs_lo = np.zeros((0, t))
         envs_n = np.zeros(0, dtype=int)
 
-    merged_idxs: set[int] = set()
+    # unmerged subgroups, ascending; a subgroup's own VL never changes
+    live = np.arange(len(pgl))
+    own_vl = _union_vl(envs_hi, envs_lo, envs_n, None, t)
     card = int(envs_n.sum())
 
     while card >= k_value:
-        gi, _ = _find_min_vl(envs_hi, envs_lo, envs_n, merged_idxs, None, t)
-        if gi is None:
+        j, _ = _first_min(own_vl[live])
+        if j is None:
             break
+        gi = int(live[j])
+        live = np.delete(live, j)
         g = [pgl[gi]]
         g_n = int(envs_n[gi])
         g_env = Env(envs_hi[gi].copy(), envs_lo[gi].copy(), g_n)
-        merged_idxs.add(gi)
         card -= g_n
         while g_n < k_value:
-            si, _ = _find_min_vl(envs_hi, envs_lo, envs_n, merged_idxs, g_env, t)
+            si, _ = _find_min_vl(envs_hi, envs_lo, envs_n, live, g_env, t)
             if si is None:
                 break
             g.append(pgl[si])
@@ -763,11 +791,11 @@ def kgroups_from_subgroups(
             g_env = Env(np.maximum(g_env.hi, envs_hi[si]),
                         np.minimum(g_env.lo, envs_lo[si]),
                         g_env.n + int(envs_n[si]))
-            merged_idxs.add(si)
+            live = live[live != si]
             card -= int(envs_n[si])
         gl.append(g)
 
-    leftovers = [sg for i, sg in enumerate(pgl) if i not in merged_idxs]
+    leftovers = [pgl[i] for i in live]
     unplaced: list[SubgroupMeta] = []
     for sg in leftovers:
         if not gl:
@@ -777,7 +805,7 @@ def kgroups_from_subgroups(
         gl_hi = np.stack([np.maximum.reduce([m.hi for m in g]) for g in gl])
         gl_lo = np.stack([np.minimum.reduce([m.lo for m in g]) for g in gl])
         gl_n = np.array([sum(m.n for m in g) for g in gl])
-        gi, _ = _find_min_vl(gl_hi, gl_lo, gl_n, set(), sg_env, t)
+        gi, _ = _find_min_vl(gl_hi, gl_lo, gl_n, np.arange(len(gl)), sg_env, t)
         g_prime = gl.pop(gi)
         g_prime = g_prime + [sg]
         gl.append(g_prime)
@@ -860,16 +888,19 @@ def enforce_l_diversity(
     perturbated_rounds: dict[int, int] = {}
     ps_r: list[int] | None = None
     keyset: set[int] = set()
+    first_group: dict[int, list[int]] = {}  # key -> first k-group holding it
+    for k_group in k_groups:
+        for k in k_group:
+            first_group.setdefault(k, k_group)
 
     for key in list(sensitive.keys()):
         if key in keyset:
             continue
         keyset.add(key)
 
-        for k_group in k_groups:
-            if key in k_group:
-                ps_r = [k for k in k_group if patterns.get(k) == patterns.get(key)]
-                break
+        k_group = first_group.get(key)
+        if k_group is not None:
+            ps_r = [k for k in k_group if patterns.get(k) == patterns.get(key)]
 
         if ps_r is None:
             continue

@@ -119,8 +119,10 @@ def _paa_indices(n: int, w: int) -> tuple[np.ndarray, np.ndarray]:
 
 
 def paa(series: np.ndarray, w: int) -> np.ndarray:
-    """1-D PAA with exact fractional semantics (accumulation order
-    matches the virtual-point loop, so results are bit-identical)."""
+    """1-D PAA with exact fractional semantics: each segment sums its
+    virtual points left to right, as the reference's loop does. The
+    labelled reference for :func:`paa2d`, and the kernel of the 1-D
+    re-encodes (:func:`sax_by_chunking`)."""
     series = np.asarray(series, dtype=np.float64)
     n = len(series)
     if n == w:
@@ -136,21 +138,18 @@ def paa(series: np.ndarray, w: int) -> np.ndarray:
 
 
 def paa2d(values: np.ndarray, w: int) -> np.ndarray:
-    """Row-wise PAA over (rows, T) -> (rows, w), same accumulation
-    order per row as the 1-D kernel."""
+    """Row-wise PAA over (rows, T) -> (rows, w), bit-equal per row to
+    :func:`paa`: each segment's points are laid out along a last axis
+    and summed left to right by ``cumsum``."""
     values = np.asarray(values, dtype=np.float64)
     rows, n = values.shape
     if n == w:
         return values.copy()
-    res = np.zeros((rows, w))
     if n % w == 0:
-        inc = n // w
-        idx = np.arange(n) // inc
-        np.add.at(res, (np.arange(rows)[:, None], idx[None, :]), values)
-        return res / inc
-    idx, pos = _paa_indices(n, w)
-    np.add.at(res, (np.arange(rows)[:, None], idx[None, :]), values[:, pos])
-    return res / n
+        seg, den = values.reshape(rows, w, n // w), n // w
+    else:
+        seg, den = values[:, _paa_indices(n, w)[1]].reshape(rows, w, n), n
+    return seg.cumsum(axis=2)[:, :, -1] / den
 
 
 def ts_to_string(series: np.ndarray, cuts: np.ndarray) -> str:
@@ -169,8 +168,8 @@ def _letters(paa_vals: np.ndarray, cuts: np.ndarray) -> list[str]:
     idx = np.where(paa_vals >= 0, left, right)
     idx = np.clip(idx, 0, len(cuts) - 1)
     letters = np.frombuffer(bytes(range(97, 97 + 26)), dtype="S1")[: len(cuts)]
-    chars = letters[idx]  # (rows, w) of S1
-    return [b"".join(row).decode() for row in chars]
+    chars = letters[idx]  # (rows, w) of S1, read back as one S{w} per row
+    return chars.view(f"S{chars.shape[1]}").ravel().astype(str).tolist()
 
 
 def sax_by_chunking(series: np.ndarray, paa_size: int, alphabet_size: int,
@@ -181,8 +180,20 @@ def sax_by_chunking(series: np.ndarray, paa_size: int, alphabet_size: int,
 
 def sax2d(values: np.ndarray, paa_size: int, alphabet_size: int,
           threshold: float = ZNORM_THRESHOLD) -> list[str]:
-    """Vectorized batch SAX: (rows, T) -> list of strings. This is the
-    hot path used inside grouping ``applyInPandas``.
+    """Vectorized batch SAX: (rows, T) -> list of strings; the row-wise
+    znorm + PAA step, then :func:`sax_of_paa`. Callers that encode the
+    same rows at several alphabet sizes keep the PAA matrix and call
+    :func:`sax_of_paa` per size."""
+    values = np.asarray(values, dtype=np.float64)
+    return sax_of_paa(paa2d(znorm2d(values, threshold), paa_size), values,
+                      paa_size, alphabet_size, threshold)
+
+
+def sax_of_paa(pa: np.ndarray, values: np.ndarray, paa_size: int,
+               alphabet_size: int,
+               threshold: float = ZNORM_THRESHOLD) -> list[str]:
+    """SAX strings of the (rows, w) matrix ``pa = paa2d(znorm2d(values))``;
+    ``values[i]`` is row i's raw series.
 
     NumPy's axis-wise ``std`` can differ from the 1-D ``std`` by 1 ulp,
     which flips a letter only when a PAA value lands *exactly* on a cut
@@ -190,17 +201,13 @@ def sax2d(values: np.ndarray, paa_size: int, alphabet_size: int,
     against the 0.0 cut). Rows whose PAA values come within 1e-9 of a
     finite cut are therefore re-encoded with the bit-faithful 1-D
     kernel — a tiny fraction, so the batch stays vectorized."""
-    values = np.asarray(values, dtype=np.float64)
     if alphabet_size <= 1:
-        return ["a" * paa_size] * len(values)
+        return ["a" * paa_size] * len(pa)
     cuts = cuts_for_asize(alphabet_size)
-    pa = paa2d(znorm2d(values, threshold), paa_size)
     out = _letters(pa, cuts)
-    finite = cuts[np.isfinite(cuts)]
-    if len(finite):
-        near = (np.abs(pa[:, :, None] - finite[None, None, :]) < 1e-9).any(axis=(1, 2))
-        for i in np.nonzero(near)[0]:
-            out[i] = sax_by_chunking(values[i], paa_size, alphabet_size, threshold)
+    near = (np.abs(pa[:, :, None] - cuts[None, None, 1:]) < 1e-9).any(axis=(1, 2))
+    for i in np.nonzero(near)[0]:
+        out[i] = sax_by_chunking(values[i], paa_size, alphabet_size, threshold)
     return out
 
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from functools import reduce
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -142,12 +143,8 @@ def write_stages_with_lineage(
     tagged = [_keyed_digests(w, st.partition_cols)
               .withColumn("stage", F.lit(st.name))
               for st, w in zip(stages, works)]
-    rows = (_aggregate_digests(reduce(DataFrame.unionByName, tagged),
-                               ["stage", "partition_key"])
-            .withColumn("run_id", F.lit(run_id))
-            .withColumn("committed_at", F.current_timestamp())
-            .select(*LINEAGE_COLS)
-            .collect())
+    rows = _aggregate_digests(reduce(DataFrame.unionByName, tagged),
+                              ["stage", "partition_key"]).collect()
 
     written = {st.name: 0 for st in stages}
     for r in rows:
@@ -166,7 +163,14 @@ def write_stages_with_lineage(
             (work.write.mode("overwrite")
              .partitionBy(*st.partition_cols).parquet(st.path))
     if rows:
-        (spark.createDataFrame(rows, LINEAGE_SCHEMA)
+        # from an Arrow table, so the append runs no Python worker task
+        # (a list of rows would be parallelized and pickled through one)
+        keys = pa.table({"run_id": [run_id] * len(rows),
+                         **{c: [r[c] for r in rows] for c in (
+                             "stage", "partition_key", "row_count",
+                             "checksum")}})
+        (spark.createDataFrame(keys)
+         .withColumn("committed_at", F.current_timestamp())
          .write.mode("append").parquet(lineage_path))
     return {st.name: {"written_partitions": written[st.name],
                       "skipped_partitions": len(done[st.name])}

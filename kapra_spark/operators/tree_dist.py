@@ -60,7 +60,8 @@ def pattern_arrays(tokens_df: DataFrame, paa_value: int) -> DataFrame:
             if len(pdf) == 0:
                 continue
             mat, _ = token_matrix(pdf["tokens"])
-            cols = [S.sax2d(mat, paa_value, lvl) for lvl in levels]
+            pa = S.paa2d(S.znorm2d(mat), paa_value)
+            cols = [S.sax_of_paa(pa, mat, paa_value, lvl) for lvl in levels]
             yield pd.DataFrame({
                 "doc_id": pdf["doc_id"],
                 "pats": [list(t) for t in zip(*cols)],

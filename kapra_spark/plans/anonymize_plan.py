@@ -27,9 +27,17 @@ from ..session import cached
 
 
 def _totals(scored: DataFrame):
-    return scored.agg(F.sum("vl").alias("vl"), F.sum("pl").alias("pl"),
-                      F.count("*").alias("n_out"),
-                      F.sum("n_in").alias("n_in")).collect()[0]
+    """``Σvl``, ``Σpl``, output rows and input rows of a scored frame.
+    When no record lands in a k-group there is no loss to add: the null
+    sums are empty sums, 0.0."""
+    tot = scored.agg(F.coalesce(F.sum("vl"), F.lit(0.0)).alias("vl"),
+                     F.coalesce(F.sum("pl"), F.lit(0.0)).alias("pl"),
+                     F.count("*").alias("n_out"),
+                     F.sum("n_in").alias("n_in")).collect()[0]
+    if not tot["n_in"]:
+        raise ValueError("run_kp_anonymity needs at least one input row: "
+                         "tokens_df is empty")
+    return tot
 
 
 def run_kp_anonymity(
@@ -49,7 +57,8 @@ def run_kp_anonymity(
     suppressed ones included (reference metric.py:121-123); the average
     PL by input rows (reference pattern_loss.py:249-256). ``doc_id``
     must be unique. Without ``output_path`` the run is one aggregate job
-    chain and nothing is cached."""
+    chain and nothing is cached. An empty ``tokens_df`` raises
+    ``ValueError`` before anything is written."""
     t_start = time.time()
 
     scored = kp_anonymize_scored(tokens_df, k=k, p=p, paa=paa, l=l,
@@ -59,14 +68,14 @@ def run_kp_anonymity(
         # behind would let a later call on the same input skip the
         # anonymization
         with cached(scored) as scored:
+            tot = _totals(scored)
             (scored.select(*ANON_SCHEMA.fieldNames())
              .write.mode("overwrite").parquet(output_path))
-            tot = _totals(scored)
     else:
         tot = _totals(scored)
     eta = time.time() - t_start
 
-    vl, pl = float(tot["vl"]), float(tot["pl"])
+    vl, pl = tot["vl"], tot["pl"]
     row = {
         "algorithm": algorithm, "k": k, "p": p, "paa": paa, "l": l,
         "eta": round(eta, 3),

@@ -356,3 +356,30 @@ def test_run_kp_anonymity_output_path(spark, tokens, tmp_path):
     assert [r.asDict() for r in spark.read.parquet(res)
             .drop("eta", "run_ts").collect()] == \
         [{k: v for k, v in row.items() if k != "eta"}]
+
+
+def test_run_kp_anonymity_no_k_group(spark):
+    """Sources of 2 and 4 records cannot form a k-group of 8, so kapra
+    suppresses every record: the losses are empty sums, 0.0, not a
+    ``TypeError`` on null sums."""
+    from kapra_spark.plans.anonymize_plan import run_kp_anonymity
+
+    pdf = datagen.tokens_pdf(6, n_tok=13, seed=4, gap_fraction=0.0)
+    pdf = pdf.assign(source=["a"] * 2 + ["b"] * 4)
+    tokens = spark.createDataFrame(pdf, schema=datagen.TOKENS_SCHEMA)
+    row = run_kp_anonymity(spark, "kapra", 8, 4, 4, 1, tokens)
+    assert _losses(row) == {"tot_pattern_loss": 0.0, "avg_pattern_loss": 0.0,
+                            "tot_value_loss": 0.0, "avg_value_loss": 0.0}
+
+
+def test_run_kp_anonymity_empty_input_raises(spark, tmp_path):
+    """An empty input has no average to report: the plan refuses it with
+    its precondition and writes nothing."""
+    from kapra_spark.plans.anonymize_plan import run_kp_anonymity
+
+    empty = spark.createDataFrame([], datagen.TOKENS_SCHEMA)
+    out = tmp_path / "anon"
+    with pytest.raises(ValueError, match="at least one input row"):
+        run_kp_anonymity(spark, "kapra", K, P, PAA, L, empty,
+                         output_path=str(out))
+    assert not out.exists()

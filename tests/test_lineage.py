@@ -160,3 +160,37 @@ def test_corrupt_lineage_fails_loudly(spark, tier1h, tmp_path):
                            run_id="r2", stage="tier1h")
     # nothing was re-appended next to the corrupt files
     assert sorted(glob.glob(f"{lin}/*.parquet")) == sorted(files)
+
+
+def test_lineage_append_runs_no_python_task(spark, tier1h, tmp_path,
+                                            monkeypatch):
+    """The lineage append frame is built on the JVM side from an Arrow
+    table: its RDD holds no ``PythonRDD``, so the append starts no
+    Python worker. The stored rows keep the lineage schema and every
+    row carries a commit time."""
+    from pyspark.sql import DataFrameWriter
+
+    from kapra_spark.operators.lineage import LINEAGE_COLS, LINEAGE_SCHEMA
+
+    written = {}
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        written[path] = self._df
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    lin = str(tmp_path / "lin")
+    r = write_with_lineage(tier1h, str(tmp_path / "data"), ["source", "day"],
+                           lin, run_id="r1", stage="tier1h")
+    assert "PythonRDD" not in written[lin]._jdf.rdd().toDebugString()
+
+    stored = spark.read.parquet(lin)
+    assert stored.columns == LINEAGE_COLS
+    assert (stored.schema.simpleString()
+            == spark.createDataFrame([], LINEAGE_SCHEMA).schema.simpleString())
+    rows = stored.collect()
+    assert len(rows) == r["written_partitions"] > 0
+    assert {x["run_id"] for x in rows} == {"r1"}
+    assert all(x["committed_at"] is not None for x in rows)
+    assert partition_metrics(tier1h, ["source", "day"]).count() == len(rows)
