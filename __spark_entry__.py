@@ -1057,6 +1057,17 @@ def q_media_features_mjpg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _digest(flat, ["media_id", "kind", "n_bytes", "feat_s"])
 
 
+def _anon_rows(df: DataFrame):
+    """``df`` (ANON_SCHEMA) as pandas rows sorted by ``doc_id``, with
+    ``lo``/``hi`` as tuples so rows compare by value."""
+    pdf = df.toPandas()
+    for c in ("lo", "hi"):
+        pdf[c] = pdf[c].map(lambda v: None if v is None else tuple(v))
+    return (pdf.sort_values("doc_id").reset_index(drop=True)
+            [["doc_id", "source", "group_id", "sax", "as_perturbed",
+              "lo", "hi", "suppressed"]])
+
+
 def _tree_order_mismatch(res, pdf, p: int, paa: int) -> int:
     """Leaves of ``res`` (``create_tree_distributed`` output) whose
     label, level, pattern, members or ``order_key`` position differ
@@ -1103,6 +1114,7 @@ def q_tree_dist_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kapra_spark.operators.tree_dist import create_tree_distributed
 
     pdf = datagen.tokens_pdf(300, n_tok=13, seed=11, gap_fraction=0.0)
+    pdf["source"] = "all"   # one tree over every row
     tokens = spark.createDataFrame(pdf, schema=datagen.TOKENS_SCHEMA)
     res = create_tree_distributed(tokens, 4, 4).toPandas()
 
@@ -1134,8 +1146,6 @@ def q_kp_dist_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     kp_anonymize_canonical on the same mid-size table, count row
     mismatches in-query, and pin the (k, P) invariants. The oracle pins
     mismatches at zero and the invariants at true."""
-    import pandas as pd
-
     from kapra_spark import datagen
     from kapra_spark.operators.anonymize_dist import (
         kp_anonymize_canonical, kp_anonymize_distributed)
@@ -1144,18 +1154,8 @@ def q_kp_dist_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pdf = datagen.tokens_pdf(250, n_tok=13, seed=11, gap_fraction=0.0)
     tokens = spark.createDataFrame(pdf, schema=datagen.TOKENS_SCHEMA)
 
-    def norm(df: pd.DataFrame) -> pd.DataFrame:
-        df = df.copy()
-        for c in ("lo", "hi"):
-            df[c] = df[c].map(lambda v: None if v is None else tuple(v))
-        return (df.sort_values("doc_id").reset_index(drop=True)
-                [["doc_id", "source", "group_id", "sax", "as_perturbed",
-                  "lo", "hi", "suppressed"]])
-
-    canon = norm(kp_anonymize_canonical(tokens, k=k, p=p, paa=4, l=2)
-                 .toPandas())
-    dist = norm(kp_anonymize_distributed(tokens, k=k, p=p, paa=4, l=2)
-                .toPandas())
+    canon = _anon_rows(kp_anonymize_canonical(tokens, k=k, p=p, paa=4, l=2))
+    dist = _anon_rows(kp_anonymize_distributed(tokens, k=k, p=p, paa=4, l=2))
     n_mismatch = int((canon.astype(str) != dist.astype(str)).any(axis=1).sum())
 
     grouped = dist[~dist["suppressed"]]
@@ -1175,8 +1175,6 @@ def q_kp_dist_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     forced MULTI-shard run (tiny shard size) must keep the (k, P)
     invariants and the in-memory greedy's suppressed set. All computed
     in-query; the oracle pins the constants."""
-    import pandas as pd
-
     from kapra_spark import datagen
     from kapra_spark.operators.anonymize_dist import (
         kp_anonymize_canonical, kp_anonymize_distributed)
@@ -1186,22 +1184,13 @@ def q_kp_dist_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     pdf["source"] = "giant"
     tokens = spark.createDataFrame(pdf, schema=datagen.TOKENS_SCHEMA)
 
-    def norm(df: pd.DataFrame) -> pd.DataFrame:
-        df = df.copy()
-        for c in ("lo", "hi"):
-            df[c] = df[c].map(lambda v: None if v is None else tuple(v))
-        return (df.sort_values("doc_id").reset_index(drop=True)
-                [["doc_id", "source", "group_id", "sax", "as_perturbed",
-                  "lo", "hi", "suppressed"]])
-
-    exact = norm(kp_anonymize_canonical(tokens, k=k, p=p, paa=4, l=2)
-                 .toPandas())
-    one = norm(kp_anonymize_distributed(tokens, k=k, p=p, paa=4, l=2,
-                                        c5_exact_max=0,
-                                        c5_shard_size=1_000_000).toPandas())
-    multi = norm(kp_anonymize_distributed(tokens, k=k, p=p, paa=4, l=2,
-                                          c5_exact_max=0, c5_shard_size=16)
-                 .toPandas())
+    exact = _anon_rows(kp_anonymize_canonical(tokens, k=k, p=p, paa=4, l=2))
+    one = _anon_rows(kp_anonymize_distributed(tokens, k=k, p=p, paa=4, l=2,
+                                              c5_exact_max=0,
+                                              c5_shard_size=1_000_000))
+    multi = _anon_rows(kp_anonymize_distributed(tokens, k=k, p=p, paa=4, l=2,
+                                                c5_exact_max=0,
+                                                c5_shard_size=16))
     n_mismatch_1shard = int((exact.astype(str) != one.astype(str))
                             .any(axis=1).sum())
     grouped = multi[~multi["suppressed"]]
@@ -1229,6 +1218,7 @@ def q_tree_dist_mid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n = 10_000
     pdf = datagen.tokens_pdf(n, n_tok=13, seed=29, gap_fraction=0.0)
+    pdf["source"] = "all"   # one tree over every row
     tokens = spark.createDataFrame(
         pdf, schema=datagen.TOKENS_SCHEMA).repartition(32, "doc_id")
     res = create_tree_distributed(tokens, 4, 4).toPandas()

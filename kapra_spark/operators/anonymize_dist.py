@@ -11,21 +11,27 @@ bottom-up k-group formation (reference ``includes/k_anonymity.py:34-167``,
 C5) and l-diversity (reference ``includes/l_diversity.py:7-107``, F9)
 now run with records distributed throughout.
 
+``source`` is a key column of every phase, as it is the key of
+``kp_anonymize``'s ``groupBy(source)``: the tree grows one root per
+source, leaf summaries group by ``(source, leaf_id)``, and every C5/F9
+kernel groups by ``(source, ...)``, so P-groups, subgroups, shards and
+PS_Rs never cross a source and all sources share one job chain.
+
 How each phase distributes (the 10^12-sequence shapes):
 
 - **C4 recycle** needs only leaf SUMMARIES: per leaf (level, pattern,
   count, min doc, that doc's per-level SAX patterns). One
-  ``groupBy(leaf_id)`` aggregate — output is leaf-metadata-sized — and
-  the decision core ``clustering.recycle_bad_leaves_meta`` (the SAME
-  code the in-memory kernel runs) executes on the driver over those
-  summaries. Records never move.
+  ``groupBy(source, leaf_id)`` aggregate — output is leaf-metadata-sized
+  — and the decision core ``clustering.recycle_bad_leaves_meta`` (the
+  SAME code the in-memory kernel runs) executes on the driver over each
+  source's summaries. Records never move.
 - **C5 merge** is exact on envelope summaries (VL is envelope-
   determined, SURVEY.md §2.9): one ``groupBy(p-subgroup)`` envelope
   aggregate, then ``clustering.kgroups_from_subgroups`` (again the
   shared decision core) per SHARD in ``applyInPandas``. A shard is a
-  contiguous range of the DFS pgl order (tree locality as the
+  contiguous range of one source's DFS pgl order (tree locality as the
   envelope-locality proxy); subgroup summaries never reach the
-  driver. Up to ``c5_exact_max`` subgroups one shard holds them all,
+  driver. Up to ``c5_exact_max`` subgroups one shard holds a source,
   which is the sequential global greedy itself — O(n_subgroups^2)
   time and O(n_subgroups * T) memory in ONE task (at the default
   1e5 subgroups and T = 143 that is up to ~460 MB of hi/lo/phi/plo).
@@ -79,8 +85,6 @@ DataFrames at every size.
 
 from __future__ import annotations
 
-from functools import reduce
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -91,13 +95,13 @@ from ..functions import sax as S
 from ..functions.metrics import envelope
 from .grouping import (ANON_SCHEMA, per_source, render, source_arrays,
                        token_matrix)
-from .tree_dist import create_tree_distributed, pattern_arrays
+from .tree_dist import create_tree_distributed
 
-_SPLIT_SCHEMA = "doc_id string, pg int, sub int, pos int"
-_ENV_SCHEMA = ("pg int, sub int, hi array<double>, lo array<double>, "
-               "phi array<long>, plo array<long>, n long")
-_LDIV_SCHEMA = "doc_id string, as_perturbed long"
-_SUBMAP_SCHEMA = ("pg int, sub int, kg long, rank int, "
+_SPLIT_SCHEMA = "source string, doc_id string, pg int, sub int, pos int"
+_ENV_SCHEMA = ("source string, pg int, sub int, hi array<double>, "
+               "lo array<double>, phi array<long>, plo array<long>, n long")
+_LDIV_SCHEMA = "source string, doc_id string, as_perturbed long"
+_SUBMAP_SCHEMA = ("source string, pg int, sub int, kg long, rank int, "
                   "glo array<long>, ghi array<long>")
 
 
@@ -249,21 +253,43 @@ def kp_anonymize_canonical(tokens_df: DataFrame, k: int, p: int, paa: int,
 # the distributed operator
 # ---------------------------------------------------------------------------
 
-def _one_source(tokens_src: DataFrame, source: str, k: int, p: int,
-                paa: int, l: int, seed: int,
-                c5_shard_size: int | None = None,
-                c5_exact_max: int = 100_000) -> DataFrame:
-    spark = tokens_src.sparkSession
-    toks = tokens_src.select("doc_id", "tokens").cache()
-    pats = pattern_arrays(toks, paa).cache()
+def kp_anonymize_distributed(tokens_df: DataFrame, k: int, p: int, paa: int,
+                             l: int = 1, seed: int = 42,
+                             c5_shard_size: int | None = None,
+                             c5_exact_max: int = 100_000) -> DataFrame:
+    """(k,P)-anonymity with l-diversity per ``source``, records
+    distributed through EVERY phase — the scale path for sources too
+    large for one Arrow batch (``kp_anonymize``'s bound): groups here
+    may span any subset of a source, exactly like the reference's
+    in-memory run. ``source`` is a key column of every phase, so all
+    sources run in one job chain. ``doc_id`` must be unique within a
+    source.
 
-    # ---- C3: global tree (records stay distributed) -------------------
-    leaves = (create_tree_distributed(toks, p, paa, pats_df=pats)
-              .localCheckpoint())
+    Output schema and semantics match ``kp_anonymize`` under the
+    canonical order contract (see module docstring);
+    ``kp_anonymize_canonical`` is the in-memory twin it is
+    parity-tested against.
+
+    C5 scale knobs: the bottom-up merge runs the shared decision core
+    per shard of DFS-adjacent P-subgroups of one source inside
+    ``applyInPandas``; the driver holds only per-P-group counts. Up to
+    ``c5_exact_max`` subgroups in a source there is one shard for it —
+    the exact global greedy, O(n_subgroups^2) time and O(n_subgroups *
+    T) memory in one task (up to ~460 MB at the default 1e5 and T =
+    143). Above it shards of ``c5_shard_size`` subgroups (default
+    ``max(4096, 4k)``) bound both. Set ``c5_exact_max=0`` to force
+    multi-shard runs, or a huge value to keep one shard."""
+    if k < p:
+        raise ValueError("k must be >= P (reference k_P_anonymity.py:40-44)")
+    spark = tokens_df.sparkSession
+    src_doc = ["source", "doc_id"]
+    toks = tokens_df.select("source", "doc_id", "tokens").cache()
+
+    # ---- C3: one tree per source (records stay distributed) -----------
+    leaves = create_tree_distributed(toks, p, paa).localCheckpoint()
 
     # ---- leaf summaries (ONE leaf-metadata-sized collect) -------------
-    summ = (leaves.join(pats, "doc_id")
-            .groupBy("leaf_id")
+    summ = (leaves.groupBy("source", "leaf_id")
             .agg(F.count("*").alias("cnt"),
                  F.min("doc_id").alias("first_doc"),
                  F.min_by("pats", "doc_id").alias("first_pats"),
@@ -272,82 +298,63 @@ def _one_source(tokens_src: DataFrame, source: str, k: int, p: int,
                  F.first("label").alias("label"),
                  F.first("order_key").alias("okey"))
             .collect())
-    pats.unpersist()
-    good_summ = sorted((r for r in summ if r["label"] == "good-leaf"),
-                       key=lambda r: r["okey"])
-    bad_summ = sorted((r for r in summ if r["label"] == "bad-leaf"),
-                      key=lambda r: r["okey"])
-
-    # ---- C4: recycle on summaries (driver, shared decision core) ------
-    first_pats = {r["first_doc"]: r["first_pats"] for r in bad_summ}
-
-    def pat_first(first_doc: str, level: int) -> str:
-        return first_pats[first_doc][level - 2]   # pats[0] is level 2
-
-    bad_metas = [C.MetaLeaf(r["level"], r["pattern"], r["cnt"],
-                            r["first_doc"], [r["leaf_id"]])
-                 for r in bad_summ]
-    pgroups, supp_handles = _recycle_phase(
-        p, paa,
-        [(r["pattern"], [r["leaf_id"]], r["cnt"], r["first_doc"])
-         for r in good_summ],
-        bad_metas, pat_first)
-    supp_leaf_ids = [lid for h in supp_handles for lid in h]
-
-    def suppressed_df(extra: DataFrame | None) -> DataFrame:
-        sup = None
-        if supp_leaf_ids:
-            s_df = F.broadcast(spark.createDataFrame(
-                [(lid,) for lid in supp_leaf_ids], "leaf_id string"))
-            sup = (leaves.join(s_df, "leaf_id").select("doc_id"))
-        if extra is not None:
-            sup = extra if sup is None else sup.unionByName(extra)
-        if sup is None:
-            sup = spark.createDataFrame([], "doc_id string")
-        return sup.distinct().select(
-            "doc_id", F.lit(source).alias("source"),
-            F.lit(None).cast("string").alias("group_id"),
-            F.lit(None).cast("string").alias("sax"),
-            F.lit(None).cast("long").alias("as_perturbed"),
-            F.lit(None).cast("array<long>").alias("lo"),
-            F.lit(None).cast("array<long>").alias("hi"),
-            F.lit(True).alias("suppressed"))
-
-    if not pgroups:   # everything suppressed (source smaller than P)
-        out = suppressed_df(None)
+    if not summ:
         toks.unpersist()
-        return out
+        return spark.createDataFrame([], ANON_SCHEMA)
+
+    # ---- C4: recycle on summaries, per source (driver, over leaf rows,
+    # shared decision core); a P-group is (source, index in its source)
+    summ_by_src: dict[str, list] = {}
+    for r in sorted(summ, key=lambda r: (r["source"], r["okey"])):
+        summ_by_src.setdefault(r["source"], []).append(r)
+    pgroups_by_src, supp_rows = {}, []
+    for source, rows in summ_by_src.items():
+        good_summ = [r for r in rows if r["label"] == "good-leaf"]
+        bad_summ = [r for r in rows if r["label"] == "bad-leaf"]
+        first_pats = {r["first_doc"]: r["first_pats"] for r in bad_summ}
+        pgroups, supp_handles = _recycle_phase(
+            p, paa,
+            [(r["pattern"], [r["leaf_id"]], r["cnt"], r["first_doc"])
+             for r in good_summ],
+            [C.MetaLeaf(r["level"], r["pattern"], r["cnt"], r["first_doc"],
+                        [r["leaf_id"]]) for r in bad_summ],
+            # pats[0] is level 2
+            lambda first_doc, level: first_pats[first_doc][level - 2])
+        if pgroups:   # else the source is smaller than P
+            pgroups_by_src[source] = pgroups
+        supp_rows += [(source, lid) for h in supp_handles for lid in h]
 
     # ---- leaf -> P-group assignment (broadcast map join) --------------
     lp_df = F.broadcast(spark.createDataFrame(
-        [(lid, gi) for gi, (_, lids, _, _) in enumerate(pgroups)
-         for lid in lids],
-        "leaf_id string, pg int"))
-    assigned = (leaves.select("doc_id", "leaf_id").join(lp_df, "leaf_id")
-                .select("doc_id", "pg"))
+        [(src, lid, gi) for src, pgroups in pgroups_by_src.items()
+         for gi, (_, lids, _, _) in enumerate(pgroups) for lid in lids],
+        "source string, leaf_id string, pg int"))
+    assigned = (leaves.select("source", "doc_id", "leaf_id")
+                .join(lp_df, ["source", "leaf_id"])
+                .select("source", "doc_id", "pg"))
 
     # ---- C5 preprocessing: per-P-GROUP split (Arrow bound = P-group) --
-    oversized = sorted(gi for gi, (_, _, cnt, _) in enumerate(pgroups)
-                       if cnt >= 2 * p)
-    first_by_pg = {gi: fd for gi, (_, _, _, fd) in enumerate(pgroups)}
-
+    seed_by_pg = {(src, gi): C.stable_seed(seed, src, "c5split", first)
+                  for src, pgroups in pgroups_by_src.items()
+                  for gi, (_, _, cnt, first) in enumerate(pgroups)
+                  if cnt >= 2 * p}
+    src_pg = ["source", "pg"]
     base_assign = assigned.select(
-        "doc_id", "pg", F.lit(0).alias("sub"), F.lit(0).alias("pos"))
-    if oversized:
+        "source", "doc_id", "pg", F.lit(0).alias("sub"),
+        F.lit(0).alias("pos"))
+    if seed_by_pg:
         ov_df = F.broadcast(spark.createDataFrame(
-            [(gi,) for gi in oversized], "pg int"))
-        seed_by_pg = {gi: C.stable_seed(seed, source, "c5split",
-                                        first_by_pg[gi])
-                      for gi in oversized}
+            list(seed_by_pg), "source string, pg int"))
 
         def split_kernel(key, pdf):
-            gi = int(key[0])
+            src, gi = key[0], int(key[1])
             pdf = pdf.sort_values("doc_id").reset_index(drop=True)
             values, _ = token_matrix(pdf["tokens"])
             post = C.split_subgroup(values, range(len(pdf)), p,
-                                    C.NumpyRandomSource(seed_by_pg[gi]))
+                                    C.NumpyRandomSource(seed_by_pg[src, gi]))
             rows = [r for grp in post for r in grp]
             return pd.DataFrame({
+                "source": src,
                 "doc_id": pdf["doc_id"].to_numpy()[rows],
                 "pg": np.full(len(rows), gi, np.int32),
                 "sub": np.repeat(np.arange(len(post), dtype=np.int32),
@@ -355,10 +362,10 @@ def _one_source(tokens_src: DataFrame, source: str, k: int, p: int,
                 "pos": np.array([i for grp in post for i in range(len(grp))],
                                 np.int32)})
 
-        split_assign = (assigned.join(ov_df, "pg").join(toks, "doc_id")
-                        .groupBy("pg")
+        split_assign = (assigned.join(ov_df, src_pg).join(toks, src_doc)
+                        .groupBy(*src_pg)
                         .applyInPandas(split_kernel, _SPLIT_SCHEMA))
-        assignment = (base_assign.join(ov_df, "pg", "left_anti")
+        assignment = (base_assign.join(ov_df, src_pg, "left_anti")
                       .unionByName(split_assign))
     else:
         assignment = base_assign
@@ -369,105 +376,113 @@ def _one_source(tokens_src: DataFrame, source: str, k: int, p: int,
         m, _ = token_matrix(pdf["tokens"])
         hi, lo, n = envelope(m)
         return pd.DataFrame({
+            "source": [pdf["source"].iloc[0]],
             "pg": [int(pdf["pg"].iloc[0])], "sub": [int(pdf["sub"].iloc[0])],
             "hi": [hi.tolist()], "lo": [lo.tolist()],
             "phi": [m.max(axis=0).astype(np.int64).tolist()],
             "plo": [m.min(axis=0).astype(np.int64).tolist()],
             "n": [int(n)]})
 
-    env_df = (assignment.join(toks, "doc_id")
-              .groupBy("pg", "sub")
+    env_df = (assignment.join(toks, src_doc)
+              .groupBy("source", "pg", "sub")
               .applyInPandas(env_kernel, _ENV_SCHEMA))
 
     # subgroup counts per P-group (one row per P-GROUP — leaf-metadata-
-    # sized) give each subgroup its pgl position and the shard layout
-    oversized_set = set(oversized)
-    unsplit_gis = [gi for gi in range(len(pgroups))
-                   if gi not in oversized_set]
-    ns_by_pg = {gi: 1 for gi in unsplit_gis}
-    if oversized:
-        for r in (assignment.join(ov_df, "pg")
-                  .groupBy("pg").agg((F.max("sub") + 1).alias("ns"))
-                  .collect()):
-            ns_by_pg[r["pg"]] = int(r["ns"])
-    pattern_of_group = {gi: pat for gi, (pat, _, _, _) in enumerate(pgroups)}
+    # sized) give each subgroup its pgl position and its source's
+    # shard layout
+    ns_by_pg = {(r["source"], r["pg"]): r["ns"] for r in (
+        assignment.groupBy(*src_pg).agg((F.max("sub") + 1).alias("ns"))
+        .collect())}
 
-    # pgl order contract: unsplit groups by index, then split products
-    # by (group index, sub index) — the reference's list construction;
-    # idx = off + sub is each subgroup's position in it
-    off_rows, n_subgroups = [], 0
-    for gi in unsplit_gis + oversized:
-        off_rows.append((gi, n_subgroups))
-        n_subgroups += ns_by_pg[gi]
+    # pgl order contract, per source: unsplit groups by index, then
+    # split products by (group index, sub index) — the reference's list
+    # construction; idx = off + sub is each subgroup's position in it.
+    # C5 merge: the shared decision core per shard, inside
+    # applyInPandas. A shard is a contiguous range of one source's pgl
+    # order (DFS-adjacent subgroups share tree locality, the cheap
+    # envelope-locality proxy). Up to c5_exact_max subgroups ONE shard
+    # holds the source, which IS the sequential global greedy; above it
+    # shards of shard_size never merge across their boundary (every
+    # k/P/l invariant still holds — each shard has >= shard_size >= k
+    # records, so the core always forms k-groups and attaches leftovers
+    # in-shard).
+    off_rows = []
+    for src, pgroups in pgroups_by_src.items():
+        gis = sorted(range(len(pgroups)),
+                     key=lambda gi: ((src, gi) in seed_by_pg, gi))
+        offs, n_subgroups = [], 0
+        for gi in gis:
+            offs.append(n_subgroups)
+            n_subgroups += ns_by_pg[src, gi]
+        if n_subgroups > max(c5_exact_max, 0):
+            shard_size = max(int(c5_shard_size or max(4096, 4 * k)), k, 2)
+        else:
+            shard_size = n_subgroups
+        n_shards = max(1, n_subgroups // shard_size)
+        off_rows += [(src, gi, off, shard_size, n_shards)
+                     for gi, off in zip(gis, offs)]
     env_idx = (env_df.join(F.broadcast(spark.createDataFrame(
-        off_rows, "pg int, off long")), "pg")
+        off_rows, "source string, pg int, off long, shard_size long, "
+        "n_shards long")), src_pg)
         .withColumn("idx", F.col("off") + F.col("sub")))
 
-    # ---- C5 merge: the shared decision core per shard, inside
-    # applyInPandas. A shard is a contiguous range of the pgl order
-    # (DFS-adjacent subgroups share tree locality, the cheap envelope-
-    # locality proxy). Up to c5_exact_max subgroups ONE shard holds them
-    # all, which IS the sequential global greedy; above it shards of
-    # shard_size never merge across their boundary (every k/P/l
-    # invariant still holds — each shard has >= shard_size >= k records,
-    # so the core always forms k-groups and attaches leftovers in-shard).
-    if n_subgroups > max(c5_exact_max, 0):
-        shard_size = max(int(c5_shard_size or max(4096, 4 * k)), k, 2)
-    else:
-        shard_size = n_subgroups
-    n_shards = max(1, n_subgroups // shard_size)
-    kg_stride = 2 * shard_size   # last shard <= 2*shard_size - 1 subgroups
-
     def shard_kernel(key, pdf):
-        return pd.DataFrame(_submap_rows(pdf, k, int(key[0]) * kg_stride),
-                            columns=["pg", "sub", "kg", "rank", "glo", "ghi"])
+        # the last shard holds <= 2*shard_size - 1 subgroups
+        kg_base = int(key[1]) * 2 * int(pdf["shard_size"].iloc[0])
+        return pd.DataFrame([(key[0], *r)
+                             for r in _submap_rows(pdf, k, kg_base)],
+                            columns=["source", "pg", "sub", "kg", "rank",
+                                     "glo", "ghi"])
 
     # checkpointed: F9 and render read the sub-map four times, and the
     # greedy and env_kernel must run once per shard, not once per read
     sub_map_df = (env_idx.withColumn("shard", F.least(
-                      F.floor(F.col("idx") / shard_size),
-                      F.lit(n_shards - 1)).cast("int"))
-                  .groupBy("shard")
+                      F.floor(F.col("idx") / F.col("shard_size")),
+                      F.col("n_shards") - 1).cast("int"))
+                  .groupBy("source", "shard")
                   .applyInPandas(shard_kernel, _SUBMAP_SCHEMA)
                   .localCheckpoint())
 
     # ---- common downstream: F9 + render off the subgroup map ----------
     pat_df = F.broadcast(spark.createDataFrame(
-        list(pattern_of_group.items()), "pg int, pattern string"))
-    a2all = assignment.join(sub_map_df, ["pg", "sub"]).join(pat_df, "pg")
+        [(src, gi, pat) for src, pgroups in pgroups_by_src.items()
+         for gi, (pat, _, _, _) in enumerate(pgroups)],
+        "source string, pg int, pattern string"))
+    a2all = (assignment.join(sub_map_df, [*src_pg, "sub"])
+             .join(pat_df, src_pg))
     a2 = a2all.filter(F.col("kg") >= 0)
-    unplaced_docs = a2all.filter(F.col("kg") < 0).select("doc_id")
+    unplaced_docs = a2all.filter(F.col("kg") < 0).select(*src_doc)
 
     # ---- F9: l-diversity per PS_R (seed derived IN the kernel — no
     # driver-side per-k-group state) ------------------------------------
-    sens = toks.select("doc_id",
+    sens = toks.select(*src_doc,
                        F.element_at("tokens", -1).cast("long").alias("_sv"))
-    w_first = Window.partitionBy("doc_id").orderBy("kg", "rank", "pos")
+    w_first = Window.partitionBy(*src_doc).orderBy("kg", "rank", "pos")
 
     def ldiv_kernel(key, pdf):
-        kg, pat = int(key[0]), str(key[1])
+        src, kg, pat = key[0], int(key[1]), str(key[2])
         pdf = pdf.sort_values(["rank", "pos", "doc_id"]).reset_index(drop=True)
         vals = _ldiv_one_psr([int(v) for v in pdf["_sv"]], pat, l,
-                             C.stable_seed(seed, source, "ldiv", kg, pat))
-        return pd.DataFrame({"doc_id": pdf["doc_id"],
+                             C.stable_seed(seed, src, "ldiv", kg, pat))
+        return pd.DataFrame({"source": src, "doc_id": pdf["doc_id"],
                              "as_perturbed": np.array(vals, np.int64)})
 
     ldiv_out = (a2.withColumn("_rn", F.row_number().over(w_first))
                 .filter(F.col("_rn") == 1).drop("_rn")
-                .join(sens, "doc_id")
-                .groupBy("kg", "pattern")
+                .join(sens, src_doc)
+                .groupBy("source", "kg", "pattern")
                 .applyInPandas(ldiv_kernel, _LDIV_SCHEMA))
 
     # ---- render: last k-group wins; the k-group envelope (glo/ghi,
     # plain-bound union over members — exact, min/max ignore duplicates)
     # rides on every subgroup-map row -----------------------------------
-    w_last = Window.partitionBy("doc_id").orderBy(
+    w_last = Window.partitionBy(*src_doc).orderBy(
         F.desc("kg"), F.desc("rank"), F.desc("pos"))
     rendered = (a2.withColumn("_rn", F.row_number().over(w_last))
                 .filter(F.col("_rn") == 1).drop("_rn")
-                .join(ldiv_out, "doc_id")
-                .select("doc_id", F.lit(source).alias("source"),
-                        F.concat(F.lit(f"{source}#"), F.col("kg"))
+                .join(ldiv_out, src_doc)
+                .select("doc_id", "source",
+                        F.concat("source", F.lit("#"), F.col("kg"))
                         .alias("group_id"),
                         F.col("pattern").alias("sax"),
                         "as_perturbed",
@@ -476,63 +491,21 @@ def _one_source(tokens_src: DataFrame, source: str, k: int, p: int,
                 # suppression wins for a quirk-duplicated record that
                 # landed in both a k-group and an unplaced subgroup
                 # (the canonical twin's rowmap overwrite order)
-                .join(unplaced_docs, "doc_id", "left_anti"))
+                .join(unplaced_docs, src_doc, "left_anti"))
 
-    out = rendered.unionByName(suppressed_df(unplaced_docs))
+    suppressed = unplaced_docs
+    if supp_rows:
+        suppressed = suppressed.unionByName(leaves.join(
+            F.broadcast(spark.createDataFrame(
+                supp_rows, "source string, leaf_id string")),
+            ["source", "leaf_id"]).select(*src_doc))
+    out = rendered.unionByName(suppressed.distinct().select(
+        "doc_id", "source",
+        F.lit(None).cast("string").alias("group_id"),
+        F.lit(None).cast("string").alias("sax"),
+        F.lit(None).cast("long").alias("as_perturbed"),
+        F.lit(None).cast("array<long>").alias("lo"),
+        F.lit(None).cast("array<long>").alias("hi"),
+        F.lit(True).alias("suppressed")))
     toks.unpersist()
     return out
-
-
-def kp_anonymize_distributed(tokens_df: DataFrame, k: int, p: int, paa: int,
-                             l: int = 1, seed: int = 42,
-                             max_sources: int = 100,
-                             c5_shard_size: int | None = None,
-                             c5_exact_max: int = 100_000) -> DataFrame:
-    """(k,P)-anonymity with l-diversity, records distributed through
-    EVERY phase — the scale path for sources too large for one Arrow
-    batch (``kp_anonymize``'s bound): groups here may span any subset
-    of a source, exactly like the reference's in-memory run.
-
-    Output schema and semantics match ``kp_anonymize`` under the
-    canonical order contract (see module docstring);
-    ``kp_anonymize_canonical`` is the in-memory twin it is
-    parity-tested against.
-
-    Sources are processed as independent trees in a driver loop (the
-    intended workload is few giant sources; for many small sources use
-    ``kp_anonymize``, whose per-source kernel is one task each).
-    ``max_sources`` guards against that misuse: above it the union plan
-    would have one branch per source and the driver loop one tree per
-    source, so the call fails fast with a pointer at ``kp_anonymize``
-    instead of building a pathological plan.
-
-    C5 scale knobs (see :func:`_one_source`): the bottom-up merge runs
-    the shared decision core per shard of DFS-adjacent P-subgroups
-    inside ``applyInPandas``; the driver holds only per-P-group counts.
-    Up to ``c5_exact_max`` subgroups there is one shard — the exact
-    global greedy, O(n_subgroups^2) time and O(n_subgroups * T) memory
-    in one task (up to ~460 MB at the default 1e5 and T = 143). Above
-    it shards of ``c5_shard_size`` subgroups (default ``max(4096,
-    4k)``) bound both. Set ``c5_exact_max=0`` to force multi-shard
-    runs, or a huge value to keep one shard."""
-    if k < p:
-        raise ValueError("k must be >= P (reference k_P_anonymity.py:40-44)")
-    sources = sorted(r[0] for r in
-                     tokens_df.select("source").distinct().collect())
-    if len(sources) > max_sources:
-        raise ValueError(
-            f"kp_anonymize_distributed saw {len(sources)} distinct "
-            f"'source' values (max_sources={max_sources}). This "
-            f"operator builds one distributed tree per source and is "
-            f"meant for FEW GIANT sources; for many smaller sources "
-            f"use kp_anonymize (one applyInPandas task per source), "
-            f"or raise max_sources explicitly if you really want a "
-            f"{len(sources)}-branch union plan.")
-    outs = [_one_source(
-        tokens_df.filter(F.col("source") == s).select("doc_id", "tokens"),
-        s, k, p, paa, l, seed,
-        c5_shard_size=c5_shard_size, c5_exact_max=c5_exact_max)
-        for s in sources]
-    if not outs:
-        return tokens_df.sparkSession.createDataFrame([], ANON_SCHEMA)
-    return reduce(lambda a, b: a.unionByName(b), outs)

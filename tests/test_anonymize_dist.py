@@ -10,6 +10,8 @@
   against the one-shard (exact) merge, and a returned plan that never
   re-runs the checkpointed C5 kernels.
 - layout independence: repartitioned input produces identical rows.
+- ``source`` as a key: ids shared across sources, the empty input, and
+  the job count of one call on a 4-source input.
 """
 
 import numpy as np
@@ -19,6 +21,15 @@ import pytest
 from kapra_spark import datagen
 from kapra_spark.operators.anonymize_dist import (kp_anonymize_canonical,
                                                   kp_anonymize_distributed)
+from kapra_spark.operators.grouping import ANON_SCHEMA
+from tests.fixtures import jobs_of
+
+# Spark jobs of one kp_anonymize_distributed call on the 4-source
+# 250-row input (tests/fixtures.jobs_of, local[4], 8 shuffle
+# partitions): 100-102 measured, as AQE's asynchronous broadcast jobs
+# vary by a few between runs. One job chain per source took 374, the
+# same rows as one source 126.
+JOBS_4_SOURCES = 104
 
 
 def _tot_vl(out: pd.DataFrame) -> float:
@@ -36,7 +47,7 @@ def _norm(df: pd.DataFrame) -> pd.DataFrame:
     df = df.copy()
     for c in ("lo", "hi"):
         df[c] = df[c].map(lambda v: None if v is None else tuple(v))
-    return (df.sort_values("doc_id").reset_index(drop=True)
+    return (df.sort_values(["source", "doc_id"]).reset_index(drop=True)
             [["doc_id", "source", "group_id", "sax", "as_perturbed",
               "lo", "hi", "suppressed"]])
 
@@ -143,15 +154,43 @@ def test_c5_sharded_multi_shard_invariants(spark):
     pd.testing.assert_frame_equal(_norm(out), relay)
 
 
-def test_many_source_guard(spark):
-    """kp_anonymize_distributed builds one distributed tree per source;
-    above max_sources it must fail fast pointing at kp_anonymize
-    instead of building an N-branch union plan."""
-    pdf = datagen.tokens_pdf(30, n_tok=13, seed=1, gap_fraction=0.0)
-    pdf["source"] = [f"s{i}" for i in range(len(pdf))]
+def test_distributed_job_count(spark):
+    """``source`` is a key, not a driver loop: the 4-source 250-row
+    input runs one job chain for all sources."""
+    pdf = datagen.tokens_pdf(250, n_tok=13, seed=11, gap_fraction=0.0)
+    assert pdf["source"].nunique() == 4
     tokens = spark.createDataFrame(pdf, schema=datagen.TOKENS_SCHEMA)
-    with pytest.raises(ValueError, match="max_sources"):
-        kp_anonymize_distributed(tokens, k=4, p=2, paa=4, max_sources=10)
+    n = jobs_of(spark, lambda: kp_anonymize_distributed(
+        tokens, k=8, p=4, paa=4, l=2).toPandas())
+    assert n <= JOBS_4_SOURCES
+
+
+def test_distributed_doc_id_shared_across_sources(spark):
+    """``doc_id`` is unique only within a source: every id below appears
+    in two or three sources, and each source still equals its canonical
+    run, including source ``c``, smaller than P and all suppressed."""
+    parts = []
+    for source, n, seed in (("a", 120, 13), ("b", 120, 17), ("c", 3, 19)):
+        part = datagen.tokens_pdf(n, n_tok=13, seed=seed, gap_fraction=0.0)
+        part["source"] = source
+        parts.append(part)
+    tokens = spark.createDataFrame(pd.concat(parts, ignore_index=True),
+                                   schema=datagen.TOKENS_SCHEMA)
+    canon = _norm(kp_anonymize_canonical(tokens, k=8, p=4, paa=4, l=2)
+                  .toPandas())
+    dist = _norm(kp_anonymize_distributed(tokens, k=8, p=4, paa=4, l=2)
+                 .toPandas())
+    assert len(dist) == 243
+    assert dist[dist["source"] == "c"]["suppressed"].all()
+    pd.testing.assert_frame_equal(canon, dist)
+
+
+def test_distributed_empty_input(spark):
+    pdf = datagen.tokens_pdf(10, n_tok=13, seed=1, gap_fraction=0.0)
+    tokens = spark.createDataFrame(pdf, schema=datagen.TOKENS_SCHEMA).limit(0)
+    out = kp_anonymize_distributed(tokens, k=8, p=4, paa=4)
+    assert out.schema == ANON_SCHEMA
+    assert out.count() == 0
 
 
 def test_distributed_small_source_suppressed(spark):
